@@ -12,17 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from inception_eventstore_spark import schemas
 from inception_eventstore_spark.sources import fsutil
 from inception_eventstore_spark.sources.layout import EventStoreLayout
-
-_DELTA_SCHEMA = T.StructType(
-    [
-        T.StructField("msgid", T.StringType(), False),
-        T.StructField("cv", T.LongType(), False),
-    ]
-)
 
 
 class MessageCounter:
@@ -40,23 +33,16 @@ class MessageCounter:
         self.layout = layout
         self.auto_compact_threshold = auto_compact_threshold
 
-    def _exists(self) -> bool:
-        return bool(fsutil.list_data_files(self.spark, self.layout.counter_path))
-
     def _append_delta(self, msgid: str, delta: int) -> None:
-        df = self.spark.createDataFrame([(msgid, delta)], schema=_DELTA_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.layout.counter_path)
+        df = self.spark.createDataFrame(
+            [(msgid, delta)], schema=schemas.COUNTER_SCHEMA
+        )
+        self.layout.write_counter_deltas(df.coalesce(1))
         if (
             fsutil.data_file_count(self.spark, self.layout.counter_path)
             >= self.auto_compact_threshold
         ):
             self.compact()
-
-    def append_deltas(self, deltas: DataFrame) -> None:
-        """Bulk form used by the ingest job: (msgid, cv-delta) rows."""
-        deltas.select("msgid", F.col("cv").cast("long")).write.mode("append").parquet(
-            self.layout.counter_path
-        )
 
     def increment(self, msgid: str, n: int = 1) -> None:
         """C1 (reference: MessageCounter.cs:63-73)."""
@@ -68,11 +54,8 @@ class MessageCounter:
 
     def counters_df(self) -> DataFrame:
         """The counter view: SUM over deltas per msgid."""
-        if not self._exists():
-            return self.spark.createDataFrame([], schema=_DELTA_SCHEMA)
         return (
-            self.spark.read.schema(_DELTA_SCHEMA)
-            .parquet(self.layout.counter_path)
+            self.layout.read_counter_deltas(self.spark)
             .groupBy("msgid")
             .agg(F.sum("cv").alias("cv"))
         )
@@ -95,9 +78,8 @@ class MessageCounter:
 
     def compact(self) -> None:
         """Fold the delta log into one row per msgid."""
-        if not self._exists():
+        if not fsutil.has_data(self.spark, self.layout.counter_path):
             return
-        snapshot = self.counters_df()
-        tmp = self.layout.counter_path + ".tmp"
-        snapshot.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fsutil.replace_dir(self.spark, tmp, self.layout.counter_path)
+        self.layout.write_counter_deltas(
+            self.counters_df().coalesce(1), replace=True
+        )

@@ -6,8 +6,14 @@ appends are bulk DataFrame writes; loads are Catalyst-pruned scans;
 replay is a single filtered/grouped job; the index-driven replay is a
 broadcast-hash join instead of a client-side index-nested-loop.
 
+The on-disk format of every store (paths, schemas, bucket and (et, pid)
+directories, sort orders, the tombstone log) belongs to
+``sources/layout.EventStoreLayout``; this module decides what to read
+and write through it, and every load and replay is one
+tombstone-filtered scan (``EventStore._scan``).
+
 Physical design for 100 TB:
-- events live under ``bucket=<hash(id) % n_buckets>`` directories with
+- events live in one directory per ``hash(id) % n_buckets`` bucket with
   files sorted by (id, rev, pos); a single-aggregate load touches one
   directory and prunes files via parquet min/max on ``id``.
 - deletes are merge-on-read tombstones (Delta is not on the classpath);
@@ -21,9 +27,8 @@ Physical design for 100 TB:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-from typing import Callable, Iterable
+from typing import TYPE_CHECKING, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,10 +36,20 @@ from pyspark.sql import types as T
 
 from inception_eventstore_spark import schemas
 from inception_eventstore_spark.functions.commits import explode_commits, group_commits
-from inception_eventstore_spark.functions.filetime import filetime_to_timestamp_col
 from inception_eventstore_spark.functions.paging import PagingToken
 from inception_eventstore_spark.functions.partitions import pid_col_from_filetime
-from inception_eventstore_spark.sources.layout import EventStoreLayout
+from inception_eventstore_spark.sources import fsutil
+from inception_eventstore_spark.sources.layout import (
+    TOMBSTONE_SCHEMA,
+    EventStoreLayout,
+)
+
+if TYPE_CHECKING:
+    from inception_eventstore_spark.operators.index import IndexByEventTypeStore
+
+#: A bucket holding more data files than this is fragmented:
+#: ``optimize_buckets`` rewrites it by default and ``stats`` counts it.
+MAX_FILES_PER_BUCKET = 8
 
 
 @dataclass
@@ -58,8 +73,15 @@ class PlayerOptions:
     after: int | None = None  # inclusive lower ts bound (FileTime)
     before: int | None = None  # inclusive upper ts bound (FileTime)
     event_type_id: str | None = None
-    batch_size: int = 5000
-    max_degree_of_parallelism: int = 32
+
+
+def _in_window(df: DataFrame, options: PlayerOptions) -> DataFrame:
+    """Rows whose ts lies inside the options' inclusive bounds."""
+    if options.after is not None:
+        df = df.where(F.col("ts") >= options.after)
+    if options.before is not None:
+        df = df.where(F.col("ts") <= options.before)
+    return df
 
 
 _COMMIT_INPUT_SCHEMA = T.StructType(
@@ -69,14 +91,6 @@ _COMMIT_INPUT_SCHEMA = T.StructType(
         T.StructField("ts", T.LongType(), False),
         T.StructField("events", T.ArrayType(T.BinaryType()), True),
         T.StructField("public_events", T.ArrayType(T.BinaryType()), True),
-    ]
-)
-
-_TOMBSTONE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.BinaryType(), False),
-        T.StructField("rev", T.IntegerType(), False),
-        T.StructField("pos", T.IntegerType(), False),
     ]
 )
 
@@ -124,19 +138,16 @@ class EventStore:
         cheap when nothing is missing (the anti-join finds zero rows)
         and heals silent holes when something is.
         """
-        import os as _os
-
         from inception_eventstore_spark.operators.prop_index import (
             PropertyIndex,
         )
-        from inception_eventstore_spark.sources import fsutil
 
-        path = _os.path.join(self.layout.root, f"prop_index_{name}")
+        path = self.layout.prop_index_path(name)
         idx = PropertyIndex(
             self.spark, path, ["id", "rev", "pos"], n_buckets
         )
         existing = self.events_df()
-        if fsutil.list_data_files(self.spark, path, recursive=True):
+        if fsutil.has_data(self.spark, path):
             indexed = self.spark.read.parquet(path).select(
                 "id", "rev", "pos"
             )
@@ -153,9 +164,6 @@ class EventStore:
     # ------------------------------------------------------------------
     # Write path
     # ------------------------------------------------------------------
-    def _bucket_col(self):
-        return F.pmod(F.xxhash64("id"), F.lit(self.layout.n_buckets)).cast("int")
-
     def append_commits_df(self, commits: DataFrame,
                           maintain_index: bool = True) -> None:
         """R1 bulk form: commits DataFrame (id, rev, ts, events[],
@@ -193,7 +201,7 @@ class EventStore:
             self.event_type_of is not None or self.event_type_expr is not None
         )
         if not anti_join_existing:
-            self._write_events(rows)
+            self.layout.write_events(rows)
             if maintain:
                 self._append_index(rows)
             self._append_prop_indexes(rows)
@@ -209,8 +217,7 @@ class EventStore:
         # index from the events survivors would lose them permanently.
         rows = rows.persist()
         try:
-            new_events = self._drop_already_stored(rows)
-            self._write_events(new_events)
+            self.layout.write_events(self._drop_already_stored(rows))
             if maintain:
                 self._append_index(rows, anti_join_existing=True)
             # index the FULL redelivered batch, not the anti-join
@@ -227,25 +234,10 @@ class EventStore:
         for idx, value_expr in self._prop_indexes.values():
             idx.append(rows, value_expr(F.col("data")))
 
-    def _write_events(self, rows: DataFrame) -> None:
-        (
-            rows.withColumn("bucket", self._bucket_col())
-            .repartition("bucket")
-            .sortWithinPartitions("id", "rev", "pos")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(self.layout.events_path)
-        )
-
     def _drop_already_indexed(self, index_rows: DataFrame) -> DataFrame:
         """Anti-join derived index rows against the index store, pruned
         to the batch's (et, pid) partition set (static directory
         pruning — the batch touches a handful of day partitions)."""
-        from inception_eventstore_spark.sources import fsutil
-
-        if not fsutil.list_data_files(self.spark, self.layout.index_path,
-                                      recursive=True):
-            return index_rows
         keys = index_rows.select("et", "pid").distinct().collect()
         if not keys:
             return index_rows
@@ -269,15 +261,12 @@ class EventStore:
         carries the original ts, so parquet min/max stats confine the
         key scan to the files the batch could collide with, not 100 TB.
         """
-        from inception_eventstore_spark.sources import fsutil
-
-        if not fsutil.list_data_files(self.spark, self.layout.events_path,
-                                      recursive=True):
+        if not fsutil.has_data(self.spark, self.layout.events_path):
             return rows
         stats = rows.select(
             F.min("ts").alias("lo"),
             F.max("ts").alias("hi"),
-            F.collect_set(self._bucket_col()).alias("buckets"),
+            F.collect_set(self.layout.bucket_col()).alias("buckets"),
         ).first()
         if stats["lo"] is None:
             return rows
@@ -337,47 +326,50 @@ class EventStore:
             index_rows = index_rows.localCheckpoint(eager=True)
         index_rows = index_rows.persist()
         try:
-            (
-                index_rows.repartition("et", "pid")
-                .sortWithinPartitions("ts")
-                .write.mode("append")
-                .partitionBy("et", "pid")
-                .parquet(self.layout.index_path)
+            self.layout.write_index(index_rows)
+            self.layout.write_counter_deltas(
+                index_rows.groupBy(F.col("et").alias("msgid")).agg(
+                    F.count("*").alias("cv")
+                )
             )
-            counter_deltas = index_rows.groupBy(
-                F.col("et").alias("msgid")
-            ).agg(F.count("*").alias("cv"))
-            counter_deltas.write.mode("append").parquet(self.layout.counter_path)
         finally:
             index_rows.unpersist()
 
     # ------------------------------------------------------------------
-    # Tombstoned base scan
+    # The one read path
     # ------------------------------------------------------------------
-    def _tombstones(self) -> DataFrame | None:
-        from inception_eventstore_spark.sources import fsutil
+    def _scan(self, aids: list[bytes] | None = None,
+              buckets: list[int] | None = None,
+              version: int | None = None) -> DataFrame:
+        """Live envelope rows; every load and replay reads through here.
 
-        path = os.path.join(self.layout.root, "tombstones")
-        if not fsutil.list_data_files(self.spark, path):
-            return None
-        return self.spark.read.schema(_TOMBSTONE_SCHEMA).parquet(path)
-
-    def events_df(self) -> DataFrame:
-        """Live envelope rows (tombstones folded out via broadcast anti-join)."""
-        df = self.layout.read_events(self.spark).drop("bucket")
-        tombs = self._tombstones()
+        ``aids`` prunes to those aggregates' bucket directories (each
+        computed driver-side, no Spark job) and, by parquet min/max on
+        ``id``, to their files; ``buckets`` prunes to whole bucket
+        directories; ``version`` reads a snapshot's files and tombstones
+        instead of the current ones. Deleted rows are folded out by a
+        broadcast anti-join with the (tiny) tombstone set."""
+        if aids is not None:
+            aids = [bytes(a) for a in aids]
+            buckets = sorted({self.layout.bucket_of(a) for a in aids})
+        df = self.layout.read_events(self.spark, version)
+        if buckets is not None:
+            df = df.where(F.col("bucket").isin(buckets))
+        df = df.drop("bucket")
+        if aids is not None:
+            df = df.where(F.col("id").isin(aids))
+        tombs = self.layout.read_tombstones(self.spark, version)
         if tombs is not None:
             df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
         return df
 
+    def events_df(self) -> DataFrame:
+        """Live envelope rows (tombstones folded out via broadcast anti-join)."""
+        return self._scan()
+
     # ------------------------------------------------------------------
     # Snapshots (time travel)
     # ------------------------------------------------------------------
-    def _snapshot_log(self):
-        from inception_eventstore_spark.sources.snapshots import SnapshotLog
-
-        return SnapshotLog(self.spark, self.layout.events_path)
-
     def create_snapshot(self) -> int:
         """Freeze the store's CURRENT logical content as a version:
         the events-table data files plus the tombstone files at this
@@ -387,51 +379,15 @@ class EventStore:
         set while ingest keeps appending. NB: ``compact`` physically
         rewrites files, retiring what older manifests point at — prune
         snapshots you no longer need before compacting."""
-        from inception_eventstore_spark.sources import fsutil
-
-        tomb_dir = os.path.join(self.layout.root, "tombstones")
-        tombs = sorted(fsutil.list_data_files(self.spark, tomb_dir))
-        return self._snapshot_log().create(extra={"tombstones": tombs})
+        return self.layout.create_snapshot(self.spark)
 
     def snapshot_versions(self) -> list[int]:
-        return self._snapshot_log().versions()
+        return self.layout.snapshots(self.spark).versions()
 
     def events_snapshot(self, version: int) -> DataFrame:
         """``events_df`` as of ``version`` — the manifest's event files
         anti-joined with the manifest's (not the current) tombstones."""
-        log = self._snapshot_log()
-        manifest = log.manifest(version)
-        schema = T.StructType(
-            list(schemas.EVENTS_SCHEMA.fields)
-            + [T.StructField("bucket", T.IntegerType(), True)]
-        )
-        df = log.read(version, schema=schema).drop("bucket")
-        tomb_files = manifest.get("tombstones") or []
-        if tomb_files:
-            tombs = self.spark.read.schema(_TOMBSTONE_SCHEMA).parquet(
-                *tomb_files
-            )
-            df = df.join(
-                F.broadcast(tombs), ["id", "rev", "pos"], "left_anti"
-            )
-        return df
-
-    def _aggregate_scan(self, aid: bytes) -> DataFrame:
-        """Single-partition scan: bucket dir pruning + id file pruning.
-
-        The bucket is computed driver-side with a pure-python XXH64 that
-        bit-matches Spark's xxhash64 (pinned by tests) — no 1-row Spark
-        job per point lookup."""
-        from inception_eventstore_spark.functions.hashing import bucket_of
-
-        bucket = bucket_of(aid, self.layout.n_buckets)
-        df = self.layout.read_events(self.spark)
-        df = df.where(F.col("bucket") == bucket).drop("bucket")
-        df = df.where(F.col("id") == F.lit(aid))
-        tombs = self._tombstones()
-        if tombs is not None:
-            df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
-        return df
+        return self._scan(version=version)
 
     # ------------------------------------------------------------------
     # Read path
@@ -441,23 +397,13 @@ class EventStore:
         private/public split (reference: CassandraEventStore.cs:112-117,
         AggregateCommitBlock.cs:33-76). Returns the commit DataFrame;
         callers ``.orderBy('rev')`` is already applied."""
-        rows = self._aggregate_scan(aid)
-        return group_commits(rows).orderBy("rev")
+        return group_commits(self._scan([aid])).orderBy("rev")
 
     def load_aggregates(self, aids: list[bytes]) -> DataFrame:
         """Bulk R3: commit streams of MANY aggregates in one job — the
         reference can only loop LoadAsync per aggregate; Spark-first the
         id set becomes one pruned scan + one grouping shuffle."""
-        from inception_eventstore_spark.functions.hashing import bucket_of
-
-        buckets = sorted({bucket_of(a, self.layout.n_buckets) for a in aids})
-        df = self.layout.read_events(self.spark)
-        df = df.where(F.col("bucket").isin(buckets)).drop("bucket")
-        df = df.where(F.col("id").isin([bytes(a) for a in aids]))
-        tombs = self._tombstones()
-        if tombs is not None:
-            df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
-        return group_commits(df).orderBy("id", "rev")
+        return group_commits(self._scan(aids)).orderBy("id", "rev")
 
     def load_with_paging(
         self,
@@ -471,7 +417,7 @@ class EventStore:
         Deterministic value-based token = last (rev, pos) (SURVEY §4
         replaces Cassandra's opaque PagingState, PagingInfo.cs:54-92).
         Returns (rows, next_token)."""
-        df = self._aggregate_scan(aid).select("rev", "pos", "ts", "data")
+        df = self._scan([aid]).select("rev", "pos", "ts", "data")
         keys = (token.keys if token else {}) or {}
         last_rev, last_pos = keys.get("rev"), keys.get("pos")
         if last_rev is not None:
@@ -503,7 +449,7 @@ class EventStore:
         """R6: point lookup (reference: CassandraEventStore.cs:177-193).
         Returns a Row or None."""
         rows = (
-            self._aggregate_scan(aid)
+            self._scan([aid])
             .where((F.col("rev") == rev) & (F.col("pos") == pos))
             .select("data", "ts")
             .limit(1)
@@ -529,36 +475,32 @@ class EventStore:
     def delete(self, aid: bytes, rev: int, pos: int) -> bool:
         """R8: tombstone one event (reference: CassandraEventStore.cs:126-146).
         Merge-on-read; ``compact()`` rewrites files to drop tombstoned rows."""
-        path = os.path.join(self.layout.root, "tombstones")
-        df = self.spark.createDataFrame([(aid, rev, pos)], schema=_TOMBSTONE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(path)
-        self._maybe_fold_tombstones(path)
+        self.layout.write_tombstones(
+            self.spark.createDataFrame([(aid, rev, pos)], schema=TOMBSTONE_SCHEMA)
+        )
+        self._maybe_fold_tombstones()
         return True
 
     def delete_df(self, keys: DataFrame) -> None:
         """R8 bulk form: tombstone many (id, rev, pos) keys in one append."""
-        path = os.path.join(self.layout.root, "tombstones")
-        (
+        self.layout.write_tombstones(
             keys.select("id", "rev", "pos").dropDuplicates()
-            .coalesce(1).write.mode("append").parquet(path)
         )
-        self._maybe_fold_tombstones(path)
+        self._maybe_fold_tombstones()
 
-    def _maybe_fold_tombstones(self, path: str) -> None:
+    def _maybe_fold_tombstones(self) -> None:
         """Rewrite the (tiny) tombstone log into one file when the
         file count passes the threshold — O(#tombstones), never touches
         the base table."""
-        from inception_eventstore_spark.sources import fsutil
-
-        if fsutil.data_file_count(self.spark, path) < self.tombstone_fold_threshold:
+        if (
+            fsutil.data_file_count(self.spark, self.layout.tombstones_path)
+            < self.tombstone_fold_threshold
+        ):
             return
-        folded = (
-            self.spark.read.schema(_TOMBSTONE_SCHEMA).parquet(path)
-            .dropDuplicates(["id", "rev", "pos"])
+        folded = self.layout.read_tombstones(self.spark).dropDuplicates(
+            ["id", "rev", "pos"]
         )
-        tmp = path + ".fold"
-        folded.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fsutil.replace_dir(self.spark, tmp, path)
+        self.layout.write_tombstones(folded, replace=True)
 
     def optimize(self) -> None:
         """Small-file compaction: rewrite every bucket into freshly
@@ -573,7 +515,7 @@ class EventStore:
 
     def optimize_buckets(
         self,
-        max_files_per_bucket: int = 8,
+        max_files_per_bucket: int = MAX_FILES_PER_BUCKET,
         target_file_bytes: int = 128 * 1024 * 1024,
     ) -> list[int]:
         """Selective small-file compaction: rewrite ONLY buckets whose
@@ -585,90 +527,55 @@ class EventStore:
         rewritten verbatim (tombstones keep filtering at read time;
         ``compact()`` folds them), so the pass is purely a layout
         change. Returns the bucket ids rewritten."""
-        from inception_eventstore_spark.sources import fsutil
-
         compacted: list[int] = []
         for b in range(self.layout.n_buckets):
-            bpath = os.path.join(self.layout.events_path, f"bucket={b}")
-            n_files = fsutil.data_file_count(self.spark, bpath)
-            if n_files <= max_files_per_bucket:
+            bpath = self.layout.bucket_path(b)
+            if fsutil.data_file_count(self.spark, bpath) <= max_files_per_bucket:
                 continue
             n_out = max(
                 1,
                 -(-fsutil.dir_data_bytes(self.spark, bpath)
                   // target_file_bytes),
             )
-            rows = self.spark.read.schema(schemas.EVENTS_SCHEMA).parquet(bpath)
-            tmp = bpath + ".compact"
-            (
-                rows.coalesce(int(n_out))
-                .sortWithinPartitions("id", "rev", "pos")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            fsutil.replace_dir(self.spark, tmp, bpath)
+            self.layout.rewrite_bucket(self.spark, b, int(n_out))
             compacted.append(b)
         return compacted
 
     def compact(self) -> None:
         """Fold tombstones into the base files (one rewrite job)."""
-        tombs = self._tombstones()
-        if tombs is None:
+        if not fsutil.has_data(self.spark, self.layout.tombstones_path):
             return
         self._rewrite(self.events_df())
 
     def _rewrite(self, live: DataFrame) -> None:
-        """Write-temp-then-swap through the Hadoop FileSystem API so the
-        same code path works on file:/, hdfs:/ and s3a:/ URIs."""
-        from inception_eventstore_spark.sources import fsutil
-
-        tmp = self.layout.events_path + ".compact"
-        (
-            live.withColumn("bucket", self._bucket_col())
-            .repartition("bucket")
-            .sortWithinPartitions("id", "rev", "pos")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        fsutil.replace_dir(self.spark, tmp, self.layout.events_path)
-        fsutil.delete_path(
-            self.spark, os.path.join(self.layout.root, "tombstones")
-        )
+        """Swap the events table for ``live`` and drop the tombstone
+        log it has folded in."""
+        self.layout.write_events(live, replace=True)
+        fsutil.delete_path(self.spark, self.layout.tombstones_path)
 
     def stats(self) -> dict:
         """Layout observability: per-store file counts and bytes plus
         the live tombstone count — the numbers an operator watches to
         decide when to run ``optimize_buckets``/``compact``. Pure
         driver-side metadata listing (no table scan)."""
-        from inception_eventstore_spark.sources import fsutil
-
-        tomb_path = os.path.join(self.layout.root, "tombstones")
-        out = {
-            "events_files": fsutil.data_file_count(
-                self.spark, self.layout.events_path
+        lay = self.layout
+        return {
+            "events_files": fsutil.data_file_count(self.spark, lay.events_path),
+            "events_bytes": fsutil.dir_data_bytes(self.spark, lay.events_path),
+            "tombstone_files": fsutil.data_file_count(
+                self.spark, lay.tombstones_path
             ),
-            "events_bytes": fsutil.dir_data_bytes(
-                self.spark, self.layout.events_path
-            ),
-            "tombstone_files": fsutil.data_file_count(self.spark, tomb_path),
-            "index_files": fsutil.data_file_count(
-                self.spark, self.layout.index_path
-            ),
+            "index_files": fsutil.data_file_count(self.spark, lay.index_path),
             "counter_files": fsutil.data_file_count(
-                self.spark, self.layout.counter_path
+                self.spark, lay.counter_path
+            ),
+            "fragmented_buckets": sum(
+                1
+                for b in range(lay.n_buckets)
+                if fsutil.data_file_count(self.spark, lay.bucket_path(b))
+                > MAX_FILES_PER_BUCKET
             ),
         }
-        out["fragmented_buckets"] = sum(
-            1
-            for b in range(self.layout.n_buckets)
-            if fsutil.data_file_count(
-                self.spark,
-                os.path.join(self.layout.events_path, f"bucket={b}"),
-            )
-            > 8
-        )
-        return out
 
     # ------------------------------------------------------------------
     # Replay surface
@@ -678,13 +585,7 @@ class EventStore:
         pushed down to parquet row groups — the reference applies this
         filter client-side after a full scan (CassandraEventStore.cs:440);
         Catalyst does strictly better (SURVEY §4)."""
-        options = options or PlayerOptions()
-        df = self.events_df()
-        if options.after is not None:
-            df = df.where(F.col("ts") >= options.after)
-        if options.before is not None:
-            df = df.where(F.col("ts") <= options.before)
-        return df
+        return _in_window(self.events_df(), options or PlayerOptions())
 
     def replay_grouped(self, options: PlayerOptions | None = None) -> DataFrame:
         """R10: replay grouped into per-aggregate commit streams
@@ -693,7 +594,7 @@ class EventStore:
         grouping is an explicit shuffle on id, correct by construction)."""
         return group_commits(self.replay(options)).orderBy("id", "rev")
 
-    def replay_by_event_type(self, index: "IndexByEventTypeStore",
+    def replay_by_event_type(self, index: IndexByEventTypeStore,
                              options: PlayerOptions) -> DataFrame:
         """R11: index-driven replay = index selection joined back to the
         event log (reference does a client-side index-nested-loop with
@@ -706,7 +607,7 @@ class EventStore:
         ).dropDuplicates(["id", "rev", "pos"])
         return self.events_df().join(sel, ["id", "rev", "pos"], "inner")
 
-    def replay_aggregates_by_event_type(self, index: "IndexByEventTypeStore",
+    def replay_aggregates_by_event_type(self, index: IndexByEventTypeStore,
                                         options: PlayerOptions) -> DataFrame:
         """R11 variant (OnAggregateStreamLoadedAsync): full commit streams
         of every aggregate that has at least one matching event — a
@@ -819,16 +720,8 @@ class EventStore:
         start_after = -1
         if resume_token is not None:
             start_after = decode_token(resume_token).keys.get("bucket", -1)
-        tombs = self._tombstones()
         for bucket in range(start_after + 1, self.layout.n_buckets):
-            df = self.layout.read_events(self.spark)
-            df = df.where(F.col("bucket") == bucket).drop("bucket")
-            if tombs is not None:
-                df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
-            if options.after is not None:
-                df = df.where(F.col("ts") >= options.after)
-            if options.before is not None:
-                df = df.where(F.col("ts") <= options.before)
+            df = _in_window(self._scan(buckets=[bucket]), options)
             n_rows = 0
             chunk: list = []
             for r in df.toLocalIterator(prefetchPartitions=False):
@@ -849,29 +742,6 @@ class EventStore:
                     on_progress(token.encode())
                 except Exception:
                     pass  # reference swallows callback failures
-
-    # R12: progress — per-partition high-water marks. For batch replay the
-    # deterministic keyset token doubles as the checkpoint; streaming uses
-    # Structured Streaming checkpoints (see streaming/ingest.py).
-    def replay_progress_token(self, last_rev: int, last_pos: int,
-                              has_more: bool) -> str:
-        return PagingToken(
-            keys={"rev": last_rev, "pos": last_pos}, has_more=has_more
-        ).encode()
-
-    # ------------------------------------------------------------------
-    # Convenience views
-    # ------------------------------------------------------------------
-    def events_with_time(self) -> DataFrame:
-        """Envelope rows + derived µs timestamp column ``ts_dt``."""
-        return self.events_df().withColumn(
-            "ts_dt", filetime_to_timestamp_col("ts")
-        )
-
-
-# Imported at the bottom to avoid a cycle: index.py imports nothing from
-# this module, but type annotation above references it by name only.
-from inception_eventstore_spark.operators.index import IndexByEventTypeStore  # noqa: E402,F401
 
 
 def latest_property_state(

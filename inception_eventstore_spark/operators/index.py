@@ -10,12 +10,10 @@ day-partition loop (GetRecordsAsync, :174-258) collapses into a single
 from __future__ import annotations
 
 import datetime as _dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inception_eventstore_spark import schemas
 from inception_eventstore_spark.functions.filetime import datetime_to_filetime
 from inception_eventstore_spark.functions.paging import PagingToken
 from inception_eventstore_spark.functions.partitions import (
@@ -32,20 +30,8 @@ class IndexByEventTypeStore:
         self.spark = spark
         self.layout = layout
 
-    def _exists(self) -> bool:
-        from inception_eventstore_spark.sources import fsutil
-
-        return fsutil.has_data(self.spark, self.layout.index_path)
-
     def index_df(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame([], schema=schemas.INDEX_SCHEMA)
-        df = self.spark.read.parquet(self.layout.index_path)
-        # Partition-dir columns come back last and pid as int; reorder to
-        # the canonical envelope.
-        return df.select(
-            "et", F.col("pid").cast("int").alias("pid"), "aid", "rev", "pos", "ts"
-        )
+        return self.layout.read_index(self.spark)
 
     # ------------------------------------------------------------------
     def append(self, records: DataFrame) -> None:
@@ -53,14 +39,9 @@ class IndexByEventTypeStore:
         IndexByEventTypeStore.cs:44-61). ``records`` must carry
         (et, aid, rev, pos, ts); pid is derived here (:85-98)."""
         rows = records.withColumn("pid", pid_col_from_filetime("ts"))
-        (
+        self.layout.write_index(
             rows.select("et", "pid", "aid", "rev", "pos", "ts")
             .dropDuplicates(["et", "pid", "aid", "rev", "pos"])
-            .repartition("et", "pid")
-            .sortWithinPartitions("ts")
-            .write.mode("append")
-            .partitionBy("et", "pid")
-            .parquet(self.layout.index_path)
         )
 
     def get(self, et: str, pid: int) -> DataFrame:
@@ -142,28 +123,15 @@ class IndexByEventTypeStore:
                rev: int, pos: int) -> bool:
         """X4: full-key delete (reference: IndexByEventTypeStore.cs:63-83).
         Rewrites only the single (et, pid) day directory — bounded I/O."""
-        from inception_eventstore_spark.sources import fsutil
-
-        part = "/".join(
-            (self.layout.index_path, f"et={et}", f"pid={pid}")
-        )
-        if not fsutil.path_exists(self.spark, part):
-            return False
-        df = self.spark.read.parquet(part)
-        kept = df.where(
+        return self.layout.rewrite_index_partition(
+            self.spark, et, pid,
             ~(
                 (F.col("ts") == ts)
                 & (F.col("aid") == F.lit(aid))
                 & (F.col("rev") == rev)
                 & (F.col("pos") == pos)
-            )
+            ),
         )
-        tmp = part + ".tmp"
-        kept.write.mode("overwrite").parquet(tmp)
-        from inception_eventstore_spark.sources import fsutil
-
-        fsutil.replace_dir(self.spark, tmp, part)
-        return True
 
     def min_ts(self) -> int | None:
         """X5: MIN(ts) over the whole index — the reference's only

@@ -8,7 +8,6 @@ UTC of the append day (:32-53), full scan with page size (:55-69).
 from __future__ import annotations
 
 import datetime as _dt
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,11 +40,6 @@ class MessageStore:
         self.spark = spark
         self.layout = layout
 
-    def _exists(self) -> bool:
-        from inception_eventstore_spark.sources import fsutil
-
-        return fsutil.has_data(self.spark, self.layout.message_store_path)
-
     def append(self, data: bytes, publish_ts: int | None = None) -> None:
         """M1: archive one message; ``ts`` = publish-timestamp header if
         present else now (reference: CassandraMessageStore.cs:32-53)."""
@@ -56,12 +50,7 @@ class MessageStore:
         df = self.spark.createDataFrame(
             [(date, ts, data)], schema=schemas.MESSAGE_STORE_SCHEMA
         )
-        (
-            df.coalesce(1)
-            .write.mode("append")
-            .partitionBy("date")
-            .parquet(self.layout.message_store_path)
-        )
+        self.layout.write_messages(df.coalesce(1))
 
     def append_df(self, messages: DataFrame) -> None:
         """Bulk M1: messages (ts LONG, data BINARY) → date-partitioned append."""
@@ -69,28 +58,17 @@ class MessageStore:
             "date",
             (F.col("ts") - F.pmod(F.col("ts"), F.lit(864_000_000_000))).cast("long"),
         )
-        (
-            rows.select("date", "ts", "data")
-            .repartition("date")
-            .write.mode("append")
-            .partitionBy("date")
-            .parquet(self.layout.message_store_path)
-        )
+        self.layout.write_messages(rows.repartition("date"))
 
     def messages_df(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame(
-                [], schema=schemas.MESSAGE_STORE_SCHEMA
-            )
-        df = self.spark.read.parquet(self.layout.message_store_path)
-        return df.select(F.col("date").cast("long"), "ts", "data")
+        return self.layout.read_messages(self.spark)
 
-    def load_messages(self, decode: Callable[[bytes], object] | None = None,
-                      batch_size: int = 5000) -> DataFrame:
+    def load_messages(
+        self, decode: Callable[[bytes], object] | None = None
+    ) -> DataFrame:
         """M2: full scan of archived messages (reference:
-        CassandraMessageStore.cs:55-69). ``batch_size`` has no semantic
-        effect in Spark (page size ≈ file-split size); ``decode`` runs as
-        a UDF when provided."""
+        CassandraMessageStore.cs:55-69); the reference's page size is
+        Spark's file-split size. ``decode`` runs as a UDF when provided."""
         df = self.messages_df().select("data")
         if decode is not None:
             # Arrow-batched scan-path decode (reference seam:

@@ -172,7 +172,7 @@ class TestDelete:
         )
         store.delete(AID1, 1, 0)
         store.compact()
-        assert store._tombstones() is None
+        assert store.layout.read_tombstones(store.spark) is None
         rows = store.events_df().collect()
         assert [(r["rev"], r["pos"]) for r in rows] == [(1, 1)]
 
@@ -268,13 +268,117 @@ class TestIngestMaintainsDerivedViews:
         store.append_commits(
             [AggregateCommit(AID1, 1, T0, [_payload("x")], [])]
         )
-        df = store._aggregate_scan(AID1)
+        df = store._scan([AID1])
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [isnotnull(bucket" in plan or (
             "bucket#" in plan and "PartitionFilters" in plan
         )
         # and the id point filter reaches the parquet pushdown layer
         assert "PushedFilters" in plan
+
+
+class TestEventTypesStayStrings:
+    """Event types that look like numbers or dates are strings on every
+    index read — the index schema is pinned, not inferred from the
+    ``et=`` directory names."""
+
+    @pytest.mark.parametrize(
+        "types,lookalike",
+        [(("7", "42"), "007"), (("2024-03-14", "2024-03-15"), "2024-3-14")],
+    )
+    def test_index_reads_keep_string_types(self, store, types, lookalike):
+        from inception_eventstore_spark import schemas
+        from inception_eventstore_spark.functions.partitions import (
+            pid_from_filetime,
+        )
+
+        mine, other = types
+        store.append_commits(
+            [
+                AggregateCommit(AID1, 1, T0, [_payload("a", mine)], []),
+                AggregateCommit(AID2, 1, T0, [_payload("b", other)], []),
+            ]
+        )
+        idx = IndexByEventTypeStore(store.spark, store.layout)
+        assert idx.index_df().dtypes == [
+            (f.name, f.dataType.simpleString())
+            for f in schemas.INDEX_SCHEMA.fields
+        ]
+        assert idx.count(lookalike) == 0
+        assert idx.count(mine) == 1
+        rows, _ = idx.get_paged(mine, pid_from_filetime(T0), 10)
+        assert [r["et"] for r in rows] == [mine]
+        opts = PlayerOptions(event_type_id=mine, after=T0, before=T0)
+        got = store.replay_by_event_type(idx, opts).collect()
+        assert [bytes(r["data"]) for r in got] == [_payload("a", mine)]
+
+
+KEPT, GONE, OTHER = _payload("kept"), _payload("gone"), _payload("other")
+
+
+def _datas(rows) -> set:
+    return {bytes(r["data"]) for r in rows}
+
+
+def _commit_datas(commits) -> set:
+    return {
+        bytes(e)
+        for c in commits
+        for e in list(c["events"] or []) + list(c["public_events"] or [])
+    }
+
+
+#: Every read path of the event log → the payloads it returns.
+_READS = {
+    "events_df": lambda s, ix: _datas(s.events_df().collect()),
+    "load_aggregate": lambda s, ix: _commit_datas(
+        s.load_aggregate(AID1).collect()
+    ),
+    "load_aggregates": lambda s, ix: _commit_datas(
+        s.load_aggregates([AID1, AID2]).collect()
+    ),
+    "load_with_paging": lambda s, ix: _datas(s.load_with_paging(AID1, 10)[0]),
+    "load_event_raw": lambda s, ix: _datas(
+        r for r in (s.load_event_raw(AID1, 1, p) for p in (0, 1)) if r
+    ),
+    "replay": lambda s, ix: _datas(s.replay().collect()),
+    "replay_grouped": lambda s, ix: _commit_datas(
+        s.replay_grouped().collect()
+    ),
+    "replay_by_event_type": lambda s, ix: _datas(
+        s.replay_by_event_type(
+            ix, PlayerOptions(event_type_id="type-a", after=T0, before=T0)
+        ).collect()
+    ),
+    "replay_chunked": lambda s, ix: _datas(
+        r for chunk in s.replay_chunked() for r in chunk
+    ),
+    "events_snapshot": lambda s, ix: _datas(
+        s.events_snapshot(s.create_snapshot()).collect()
+    ),
+}
+
+
+class TestDeletedEventInvisible:
+    @pytest.mark.parametrize("read", sorted(_READS))
+    def test_deleted_event_absent(self, spark, tmp_path, read):
+        """A tombstoned event is gone from every read path, while its
+        aggregate's other event stays."""
+        lay = L.EventStoreLayout(
+            warehouse=str(tmp_path / "wh"), keyspace="del_es", n_buckets=4
+        )
+        lay.ensure_storage()
+        store = EventStore(spark, lay, event_type_expr=_et_expr)
+        store.append_commits(
+            [
+                AggregateCommit(AID1, 1, T0, [KEPT, GONE], []),
+                AggregateCommit(AID2, 1, T0, [OTHER], []),
+            ]
+        )
+        assert store.delete(AID1, 1, 1) is True
+        seen = _READS[read](store, IndexByEventTypeStore(spark, lay))
+        assert GONE not in seen
+        assert KEPT in seen
 
 
 class TestTenantLayout:

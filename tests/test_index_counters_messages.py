@@ -115,6 +115,31 @@ class TestIndexStore:
         rows = idx.get("type-a", pid).collect()
         assert [bytes(r["aid"]) for r in rows] == [b"agg2"]
 
+    @pytest.mark.parametrize("et", ["ns:Created", "orders/Shipped"])
+    def test_delete_escaped_event_type(self, spark, lay, et):
+        """Spark's writer escapes ':' and '/' in the et directory name
+        (``et=ns%3ACreated``); X4 must rewrite that directory."""
+        idx = IndexByEventTypeStore(spark, lay)
+        idx.append(
+            _records(spark, [(et, b"agg1", 1, 0, T0),
+                             (et, b"agg2", 1, 0, T0 + SEC)])
+        )
+        pid = pid_from_filetime(T0)
+        assert idx.delete(et, pid, T0, b"agg1", 1, 0) is True
+        rows = idx.get(et, pid).collect()
+        assert [bytes(r["aid"]) for r in rows] == [b"agg2"]
+        assert idx.count(et) == 1
+
+    def test_partition_escaping_matches_spark(self, spark):
+        jvm = spark.sparkContext._jvm
+        escape = (
+            jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .escapePathName
+        )
+        values = [chr(c) for c in range(128)] + ["ns:Created/v2", "é=ü"]
+        for value in values:
+            assert L.escape_path_name(value) == escape(value), repr(value)
+
     def test_min_ts_and_count(self, spark, lay):
         idx = IndexByEventTypeStore(spark, lay)
         assert idx.min_ts() is None  # empty index

@@ -853,7 +853,7 @@ class TestStreamingRedelivery:
         ]
         b = self._batch(spark, rows)
         # simulate the partial commit: events land, index never does
-        store._write_events(b.dropDuplicates(["id", "rev", "pos"]))
+        store.layout.write_events(b.dropDuplicates(["id", "rev", "pos"]))
         assert store.events_df().count() == 2
         assert IndexByEventTypeStore(spark, lay).count("type-s") == 0
         # the retry delivers the same batch through the normal path
