@@ -8,21 +8,22 @@ by rev, splitting private/public by *expected* position: a row is
 private iff its pos equals the number of private events attached so far
 (reference: AggregateCommitBlock.cs:33-64, with ``>=`` tolerance at :60).
 
-Because pos is strictly increasing within a (id, rev) group, "pos equals
-the count of privates so far" is exactly "pos == row_number-1 ordered by
-pos" — a contiguous-from-zero prefix. That makes the split a pure window
-expression, fully JVM-side, no UDF:
+A commit's positions are distinct and non-negative, so once its
+(pos, data) cells are sorted by pos, "pos equals the count of privates
+so far" is exactly "pos equals the cell's index in the sorted array" —
+the privates are a contiguous-from-zero prefix. The split is therefore
+one aggregation, fully JVM-side, no UDF and no window:
 
-    private  ⟺  pos == row_number() over (partition by id, rev order by pos) - 1
+    cells    = array_sort(collect_list(struct(pos, data)))  per (id, rev)
+    private  ⟺  cells[i].pos == i
 
-At 100 TB both directions stay shuffle-minimal: explode is narrow
-(posexplode), grouping shuffles once on (id, rev) — the same shuffle the
-aggregation itself needs, reused by Catalyst for the window.
+Grouping shuffles once on (id, rev); when the input already sits in one
+partition (a single-aggregate read) it does not shuffle at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inception_eventstore_spark.schemas import PUBLIC_EVENTS_OFFSET
@@ -71,38 +72,36 @@ def explode_commits(commits: DataFrame) -> DataFrame:
     return private_rows.select(*cols).unionByName(public_rows.select(*cols))
 
 
+#: A commit's cells split by the rule above: higher-order SQL
+#: expressions, so no Python lambda is built per call.
+_PRIVATE = "transform(filter(_cells, (c, i) -> c.pos = i), c -> c.data)"
+_PUBLIC = "transform(filter(_cells, (c, i) -> c.pos != i), c -> c.data)"
+
+
 def group_commits(rows: DataFrame) -> DataFrame:
     """Envelope rows → commits; the R3/R10 grouping transform.
 
     Returns (id, rev, ts, events ARRAY<BINARY>, public_events
     ARRAY<BINARY>) with ts = the commit's first-row timestamp (the
     reference takes the first block row's timestamp,
-    AggregateCommitBlock.cs:35-36).
+    AggregateCommitBlock.cs:35-36). One ``groupBy("id", "rev")``
+    collects each commit's (pos, data) cells sorted by pos (then data,
+    so stored duplicates of one key order deterministically); a cell is
+    private iff its pos equals its index in that array.
     """
-    w = Window.partitionBy("id", "rev").orderBy("pos")
-    flagged = rows.withColumn(
-        "is_public", F.col("pos") != F.row_number().over(w) - F.lit(1)
-    )
     return (
-        flagged.groupBy("id", "rev")
+        rows.groupBy("id", "rev")
         .agg(
             F.min_by("ts", "pos").alias("ts"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(~F.col("is_public"), F.struct("pos", "data"))
-                )
-            ).alias("_priv"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("is_public"), F.struct("pos", "data"))
-                )
-            ).alias("_pub"),
+            F.array_sort(F.collect_list(F.struct("pos", "data"))).alias(
+                "_cells"
+            ),
         )
         .select(
             "id",
             "rev",
             "ts",
-            F.transform("_priv", lambda s: s["data"]).alias("events"),
-            F.transform("_pub", lambda s: s["data"]).alias("public_events"),
+            F.expr(_PRIVATE).alias("events"),
+            F.expr(_PUBLIC).alias("public_events"),
         )
     )

@@ -61,9 +61,18 @@ class MessageCounter:
         )
 
     def get_count(self, msgid: str) -> int:
-        """C3: current value, 0 if absent (reference: MessageCounter.cs:87-111)."""
-        row = self.counters_df().where(F.col("msgid") == msgid).first()
-        return 0 if row is None else int(row["cv"])
+        """C3: current value, 0 if absent (reference: MessageCounter.cs:87-111).
+
+        One msgid's deltas are few: they are summed in one partition, so
+        the read is one Spark stage with no exchange."""
+        row = (
+            self.layout.read_counter_deltas(self.spark)
+            .where(F.col("msgid") == msgid)
+            .coalesce(1)
+            .agg(F.sum("cv").alias("cv"))
+            .first()
+        )
+        return 0 if row["cv"] is None else int(row["cv"])
 
     def reset(self, msgid: str) -> None:
         """C4: observable result = row present with cv = 0 (reference:

@@ -16,6 +16,8 @@ Physical design for 100 TB:
 - events live in one directory per ``hash(id) % n_buckets`` bucket with
   files sorted by (id, rev, pos); a single-aggregate load touches one
   directory and prunes files via parquet min/max on ``id``.
+- a one-aggregate read is one partition, so its grouping and ordering
+  run in the scan's single Spark stage, with no exchange.
 - deletes are merge-on-read tombstones (Delta is not on the classpath);
   ``compact()`` folds them in. Scans anti-join the (tiny, broadcast)
   tombstone set.
@@ -82,6 +84,16 @@ def _in_window(df: DataFrame, options: PlayerOptions) -> DataFrame:
     if options.before is not None:
         df = df.where(F.col("ts") <= options.before)
     return df
+
+
+def _require_event_type(options: PlayerOptions) -> None:
+    """The index-driven replays select by one event type; without one
+    the index selection is empty, so refuse rather than return nothing."""
+    if options.event_type_id is None:
+        raise ValueError(
+            "index-driven replay needs options.event_type_id; use "
+            "replay() or replay_grouped() to replay every event type"
+        )
 
 
 _COMMIT_INPUT_SCHEMA = T.StructType(
@@ -348,7 +360,13 @@ class EventStore:
         ``id``, to their files; ``buckets`` prunes to whole bucket
         directories; ``version`` reads a snapshot's files and tombstones
         instead of the current ones. Deleted rows are folded out by a
-        broadcast anti-join with the (tiny) tombstone set."""
+        broadcast anti-join with the (tiny) tombstone set.
+
+        A scan of exactly one aggregate returns one partition: its rows
+        are a few row groups of one bucket directory (``optimize_buckets``
+        keeps a bucket to a few files), and one task reading them lets a
+        grouping or an ordering on top skip the exchange (and a sort's
+        range-sampling job)."""
         if aids is not None:
             aids = [bytes(a) for a in aids]
             buckets = sorted({self.layout.bucket_of(a) for a in aids})
@@ -358,6 +376,8 @@ class EventStore:
         df = df.drop("bucket")
         if aids is not None:
             df = df.where(F.col("id").isin(aids))
+            if len(set(aids)) == 1:
+                df = df.coalesce(1)
         tombs = self.layout.read_tombstones(self.spark, version)
         if tombs is not None:
             df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
@@ -395,8 +415,8 @@ class EventStore:
     def load_aggregate(self, aid: bytes) -> DataFrame:
         """R3: one aggregate's commits in (rev ASC) order with the
         private/public split (reference: CassandraEventStore.cs:112-117,
-        AggregateCommitBlock.cs:33-76). Returns the commit DataFrame;
-        callers ``.orderBy('rev')`` is already applied."""
+        AggregateCommitBlock.cs:33-76). Returns the commit DataFrame,
+        already ordered by rev; it runs as one Spark stage."""
         return group_commits(self._scan([aid])).orderBy("rev")
 
     def load_aggregates(self, aids: list[bytes]) -> DataFrame:
@@ -600,7 +620,11 @@ class EventStore:
         event log (reference does a client-side index-nested-loop with
         bounded parallelism, CassandraEventStore.cs:278-334; here the
         day-pruned index selection joins on (id, rev, pos) and AQE picks
-        broadcast when the selection is small)."""
+        broadcast when the selection is small).
+
+        ``options.event_type_id`` is required (ValueError when None):
+        the untyped replays are ``replay()`` and ``replay_grouped()``."""
+        _require_event_type(options)
         sel = index.records(options.event_type_id, options.after, options.before)
         sel = sel.select(
             F.col("aid").alias("id"), "rev", "pos"
@@ -611,7 +635,11 @@ class EventStore:
                                         options: PlayerOptions) -> DataFrame:
         """R11 variant (OnAggregateStreamLoadedAsync): full commit streams
         of every aggregate that has at least one matching event — a
-        semi-join then R10 grouping (SURVEY §2 R11)."""
+        semi-join then R10 grouping (SURVEY §2 R11).
+
+        ``options.event_type_id`` is required (ValueError when None):
+        the untyped replays are ``replay()`` and ``replay_grouped()``."""
+        _require_event_type(options)
         sel = index.records(options.event_type_id, options.after, options.before)
         hit_ids = sel.select(F.col("aid").alias("id")).distinct()
         # no broadcast hint: a broad type+time selection can hit most

@@ -23,6 +23,13 @@ from inception_eventstore_spark.functions.partitions import (
 from inception_eventstore_spark.sources.layout import EventStoreLayout
 
 
+def _require_et(et: str | None) -> None:
+    """``et = NULL`` matches no index row: refuse a None type rather
+    than answer an empty selection."""
+    if et is None:
+        raise ValueError("an event type is required, got None")
+
+
 class IndexByEventTypeStore:
     """X1-X6 over one tenant's index table."""
 
@@ -102,7 +109,9 @@ class IndexByEventTypeStore:
         Bound defaults mirror the reference (:239-257): after ← MIN(ts)
         of the index (X5), before ← now + 1 day. The reference's
         calendar-aware partition loop becomes ``pid BETWEEN`` — pruned
-        to the day range by Catalyst."""
+        to the day range by Catalyst. ``et`` is required (ValueError
+        when None)."""
+        _require_et(et)
         df = self.index_df().where(F.col("et") == et)
         if after is None:
             after = self.min_ts()
@@ -142,5 +151,7 @@ class IndexByEventTypeStore:
     def count(self, et: str) -> int:
         """X6: COUNT by event type. Disabled in the reference because
         Cassandra cannot do it cheaply (IndexByEventTypeStore.cs:100-123
-        returns 0 unconditionally); Spark implements the intent."""
+        returns 0 unconditionally); Spark implements the intent. ``et``
+        is required (ValueError when None)."""
+        _require_et(et)
         return self.index_df().where(F.col("et") == et).count()

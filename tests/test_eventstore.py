@@ -240,6 +240,126 @@ class TestReplay:
         revs_a1 = [r["rev"] for r in commits if bytes(r["id"]) == AID1]
         assert revs_a1 == [1, 2]
 
+    @pytest.mark.parametrize(
+        "replay", ["replay_by_event_type", "replay_aggregates_by_event_type"]
+    )
+    def test_index_driven_replay_needs_event_type(self, store, replay):
+        """Without an event type the index selection would match nothing:
+        the replay refuses and points at the untyped replays."""
+        self._seed(store)
+        idx = IndexByEventTypeStore(store.spark, store.layout)
+        with pytest.raises(ValueError, match=r"replay\(\).*replay_grouped"):
+            getattr(store, replay)(idx, PlayerOptions(after=T0))
+        with pytest.raises(ValueError):
+            idx.count(None)
+
+
+def _jobs_of(spark, action) -> int:
+    """Spark jobs ``action`` launches, read from its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSingleKeyReadsOneStage:
+    """A read of one aggregate or one counter is one Spark job: the scan
+    is one partition, so grouping and ordering it need no exchange."""
+
+    @pytest.fixture()
+    def bucketed(self, spark, tmp_path):
+        lay = L.EventStoreLayout(
+            warehouse=str(tmp_path / "wh"), keyspace="one_stage", n_buckets=4
+        )
+        lay.ensure_storage()
+        store = EventStore(spark, lay, event_type_expr=_et_expr)
+        aids = [f"agg-{i}".encode() for i in range(8)]
+        for rev in (1, 2):  # two appends: two files per bucket
+            store.append_commits(
+                [
+                    AggregateCommit(a, rev, T0 + rev, [_payload(f"{a}{rev}")],
+                                    [_payload(f"pub-{a}{rev}")])
+                    for a in aids
+                ]
+            )
+        return store, aids
+
+    @pytest.mark.parametrize(
+        "read",
+        ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
+    )
+    def test_one_job(self, spark, bucketed, read):
+        from inception_eventstore_spark.operators.counters import MessageCounter
+
+        store, aids = bucketed
+        counter = MessageCounter(spark, store.layout)
+        action = {
+            "load_aggregate": lambda: store.load_aggregate(aids[0]).collect(),
+            "load_event_raw": lambda: store.load_event_raw(aids[0], 1, 0),
+            "load_with_paging": lambda: store.load_with_paging(aids[0], 1),
+            "get_count": lambda: counter.get_count("type-a"),
+        }[read]
+        assert _jobs_of(spark, action) == 1
+
+    def test_load_aggregate_plan_has_no_exchange(self, bucketed):
+        store, aids = bucketed
+        df = store.load_aggregate(aids[0])
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+        commits = df.collect()
+        assert [c["rev"] for c in commits] == [1, 2]
+        assert [len(c["events"]) for c in commits] == [1, 1]
+        assert [len(c["public_events"]) for c in commits] == [1, 1]
+
+    def test_group_commits_sorts_once(self, bucketed):
+        """The private and public arrays share one sorted cell array:
+        collapsing projections must not copy ``array_sort`` into both."""
+        from inception_eventstore_spark.functions.commits import group_commits
+
+        store, _ = bucketed
+        plan = group_commits(store.events_df())._jdf.queryExecution()
+        assert plan.optimizedPlan().toString().count("array_sort(") == 1
+
+    def test_load_aggregates_across_buckets(self, bucketed):
+        store, aids = bucketed
+        by_bucket = {store.layout.bucket_of(a): a for a in aids}
+        assert len(by_bucket) >= 2
+        pair = sorted(by_bucket.values())[:2]
+        got = {}
+        for c in store.load_aggregates(pair).collect():
+            got.setdefault(bytes(c["id"]), []).append(
+                (c["rev"], [bytes(e) for e in c["events"]],
+                 [bytes(e) for e in c["public_events"]])
+            )
+        assert got == {
+            a: [
+                (rev, [_payload(f"{a}{rev}")], [_payload(f"pub-{a}{rev}")])
+                for rev in (1, 2)
+            ]
+            for a in pair
+        }
+
+    def test_batch_appended_twice_keeps_split(self, store):
+        """Bulk appends do not dedupe across batches, so one 3 + 1 commit
+        appended twice stores every key twice; the split of the 8 rows
+        stays 2 private + 6 public."""
+        commit = AggregateCommit(
+            AID1, 1, T0, [_payload(f"p{i}") for i in range(3)],
+            [_payload("pub")],
+        )
+        store.append_commits([commit])
+        store.append_commits([commit])
+        (c,) = store.load_aggregate(AID1).collect()
+        assert [bytes(e) for e in c["events"]] == [_payload("p0"),
+                                                   _payload("pub")]
+        assert len(c["public_events"]) == 6
+
 
 class TestIngestMaintainsDerivedViews:
     def test_counter_view_tracks_ingest(self, store):

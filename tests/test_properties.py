@@ -157,6 +157,66 @@ def spark_session_holder(spark):
     return spark
 
 
+def _split_oracle(rows):
+    """Pure-python grouping: per (id, rev), cells sorted by (pos, data);
+    a cell is private iff its pos equals its rank; ts is the lowest
+    pos's."""
+    cells: dict = {}
+    for aid, rev, pos, ts, data in rows:
+        cells.setdefault((aid, rev), []).append((pos, data, ts))
+    out = {}
+    for key, cs in cells.items():
+        cs.sort(key=lambda c: (c[0], c[1]))
+        out[key] = (
+            cs[0][2],
+            [d for i, (p, d, _) in enumerate(cs) if p == i],
+            [d for i, (p, d, _) in enumerate(cs) if p != i],
+        )
+    return out
+
+
+def _commit_rows(aid, rev, positions):
+    return [
+        (aid, rev, pos, 133_000_000_000_000_000 + 10 * rev + pos,
+         f"{aid.decode()}/{rev}/{pos}".encode())
+        for pos in positions
+    ]
+
+
+#: Commits whose positions are not what explode_commits writes.
+IRREGULAR_COMMITS = {
+    # 3 does not follow 1, so the privates stop at 1
+    "non_contiguous_private": _commit_rows(b"a", 1, [3, 0, 1, 8]),
+    "no_private": _commit_rows(b"a", 1, [5, 4, 6]),
+    "only_private": _commit_rows(b"a", 1, [2, 0, 1]),
+    # a 3 + 1 commit bulk-appended twice: every (id, rev, pos) twice
+    "duplicated_key": _commit_rows(b"a", 1, [0, 1, 2, 7]) * 2
+    + _commit_rows(b"b", 2, [0, 5]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(IRREGULAR_COMMITS))
+def test_group_commits_irregular_positions(spark_session_holder, case):
+    """group_commits splits by "private iff pos == rank by pos" on rows
+    explode_commits never writes."""
+    from inception_eventstore_spark import schemas
+    from inception_eventstore_spark.functions.commits import group_commits
+
+    rows = IRREGULAR_COMMITS[case]
+    df = spark_session_holder.createDataFrame(
+        rows, schema=schemas.EVENTS_SCHEMA
+    ).repartition(3)
+    got = {
+        (bytes(r["id"]), r["rev"]): (
+            r["ts"],
+            [bytes(e) for e in r["events"]],
+            [bytes(e) for e in r["public_events"]],
+        )
+        for r in group_commits(df).collect()
+    }
+    assert got == _split_oracle(rows)
+
+
 @given(st.permutations(list(range(1, 30))))
 @settings(max_examples=200, deadline=None)
 def test_commit_watermark_dense_prefix(perm):
