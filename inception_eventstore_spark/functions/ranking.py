@@ -47,7 +47,7 @@ def _driver_df(spark, rows, schema):
     rows) but ``createDataFrame(list)`` shards them into
     defaultParallelism (32) pickled slices — every broadcast build then
     pays one python-deserializer round-trip PER SLICE (the
-    `_local_df` lesson in plans/queries.py). Pin to ONE slice."""
+    lesson of functions/local_df.py). Pin to ONE slice."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(list(rows), 1), schema
     )

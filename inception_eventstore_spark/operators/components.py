@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Orient every edge large→small, drop self-loops, dedupe."""
@@ -123,8 +125,6 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     the alternating-star fixed point (star rounds preserve the node
     set and connectivity; both label by component min), so oracles
     hash-match either path. Deterministic regardless of edge order."""
-    from inception_eventstore_spark.plans.queries import _local_df
-
     dtype = edges.schema["u"].dataType.simpleString()
     parent: dict = {}
 
@@ -149,7 +149,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             else:
                 parent[ru] = rv
     out = [(n, find(n)) for n in parent]
-    return _local_df(
+    return local_df(
         edges.sparkSession,
         out,
         f"node {dtype}, component {dtype}",

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
 from inception_eventstore_spark.operators.dedup import tokens
 
 #: Gopher Appendix A thresholds (public paper values).
@@ -463,18 +464,15 @@ def quality_signal_correlations(
             ).alias(f"_c_{a}_{b}")
         )
     # ONE driver collect of the single aggregate row, then a 1-slice
-    # local frame (r12, guide §2.4): the previous 3-way union of
-    # row.select(...) embedded the whole feature+LM aggregation chain
-    # THREE times in the plan — the c2 count subtree executed once per
-    # union branch (visible in plans/r12/quality_correlations_before:
-    # three `Exchange SinglePartition` aggregate branches).
-    from inception_eventstore_spark.plans.queries import _local_df
+    # local frame: a union of per-pair row.select(...) branches would
+    # embed the whole feature+LM aggregation chain once per branch,
+    # each its own `Exchange SinglePartition` aggregate.
 
     vals = j.agg(*aggs).collect()[0]
     rows = [
         (a, b, vals[f"_c_{a}_{b}"], int(vals["_n"])) for a, b in pairs
     ]
-    return _local_df(
+    return local_df(
         docs.sparkSession,
         rows,
         "signal_a string, signal_b string, corr double, n bigint",

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 
 def normalize_text(col: Column | str) -> Column:
     """Lower-case + collapse whitespace — the canonical content key."""
@@ -1080,9 +1082,8 @@ def lsh_band_plan(
         for r in range(1, budget + 1)
         if budget % r == 0
     ]
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    sp = _local_df(
+    sp = local_df(
         pairs.sparkSession,
         splits,
         "bands bigint, rows_per_band bigint",

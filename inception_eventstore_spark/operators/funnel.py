@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 
 def funnel_steps(
     events: DataFrame,
@@ -472,9 +474,8 @@ def km_survival(
             s = (s * (n_risk - de)) // n_risk
             out.append((int(r["_d"]), n_risk, de, s))
         n_risk -= de + int(r["_ce"])
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "t_days bigint, n_risk bigint, n_events bigint, "
@@ -680,9 +681,8 @@ def markov_stationary(
             if a == s and p > 0
         )
         out.append((s, round(pi[s], 6), round(h, 6)))
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "state string, stationary_p double, row_entropy_nats double",
@@ -785,9 +785,8 @@ def logrank_test(
         n1 -= d1 + c1
         n0 -= d0 + c0
     spark = events.sparkSession
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    out = _local_df(
+    out = local_df(
         spark,
         [(n1_total, n0_total, o1, e1_q, v_q)],
         "n_arm1 bigint, n_arm0 bigint, o1 bigint, e1_micro bigint, "
@@ -885,9 +884,8 @@ def nelson_aalen_hazard(
             h += (de * 10**9) // n_risk
             out.append((int(r["_d"]), n_risk, de, h))
         n_risk -= de + int(r["_ce"])
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "t_days bigint, n_risk bigint, n_events bigint, "
@@ -998,9 +996,8 @@ def aalen_johansen_cif(
                 (int(r["_d"]), n_risk, da, db, cif_a, cif_b)
             )
         n_risk -= int(r["_n"])
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "t_days bigint, n_risk bigint, d_cause_a bigint, "

@@ -29,8 +29,12 @@ with a value-propagating iteration.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from inception_eventstore_spark.functions.local_df import local_df
 
 __all__ = [
     "pagerank",
@@ -44,39 +48,31 @@ __all__ = [
 ]
 
 
-def _collect_weighted_edges(E: DataFrame, dial: int | None):
-    """The (src, dst, _w) DISTINCT-pair table as a pandas frame when it
-    fits under the driver dial, else None. ONE aggregate pass over the
-    edge plan (the same partial-agg shape the out-degree table needs
-    anyway); above-dial graphs pay this probe and proceed distributed —
-    the connected_components size-probe doctrine applied to the
-    value-iteration loops (r12, VERDICT r11 #3): below the dial the
-    whole power iteration runs driver-side on exact collected weights,
-    eliminating every per-iteration broadcast-build job."""
+def _collect_if_small(df: DataFrame, dial: int | None):
+    """``df`` as a pandas frame when it holds at most ``dial`` rows,
+    else None (always None for a zero or negative dial) — the graph
+    loops' choice between a driver finish and the distributed loop.
+
+    persist → exact count → ``toPandas`` within the dial, else release.
+    The count is a partial-aggregated scalar, so a graph that stays
+    distributed ships no rows to the driver, and a collect reads the
+    cached blocks instead of re-running the caller's edge build. No
+    cache entry outlives the call.
+
+    ``components.connected_components`` keeps its own test: the
+    signature aggregate that materializes each of its rounds already
+    yields the exact edge count, so this probe would add a job."""
     if not dial or dial <= 0:
         return None
-    # persist → exact count → collect-or-release: a limit(dial+1)
-    # collect would ship dial+1 rows to the driver even for graphs
-    # that stay distributed (measured +2.3 s on the above-dial probe);
-    # the count is a partial-aggregated scalar, and a below-dial
-    # collect then reads the cached blocks instead of re-running the
-    # caller's edge-build join.
-    W = E.groupBy("src", "dst").agg(F.count("*").alias("_w")).persist()
-    n = W.count()
-    if n > int(dial):
-        W.unpersist()
-        return None
-    pdf = W.toPandas()
-    W.unpersist()
+    df = df.persist()
+    pdf = df.toPandas() if df.count() <= int(dial) else None
+    df.unpersist()
     return pdf
 
 
 def _factorize_edges(pdf):
     """(src_i, dst_i, w, uniques) int64 index arrays over the distinct
     node set of a collected (src, dst, _w) frame."""
-    import numpy as np
-    import pandas as pd
-
     m = len(pdf)
     codes, uniques = pd.factorize(
         pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
@@ -86,8 +82,184 @@ def _factorize_edges(pdf):
 
 
 def _py(v):
-    """numpy scalar → python value for _local_df rows."""
+    """numpy scalar → python value for local_df rows."""
     return v.item() if hasattr(v, "item") else v
+
+
+def _pagerank(
+    edges: DataFrame,
+    seeds: list | None,
+    iterations: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    checkpoint: bool,
+    driver_finish_edges: int,
+) -> DataFrame:
+    """The PageRank recurrence behind `pagerank` and
+    `personalized_pagerank`:
+
+        r_{t+1}(v) = (1−d)·s(v) + d·Σ_{u→v} r_t(u)/outdeg(u),  r_0 = s,
+
+    with the teleport vector s uniform (1/N on every node) when
+    ``seeds`` is None, else 1/|seeds| on each of the distinct ``seeds``
+    and 0 elsewhere. The uniform teleport term is the literal (1−d)/N,
+    not (1−d)·(1/N), so both forms keep their own float expressions.
+
+    Driver finish: when the distinct (src, dst) pair set fits
+    ``driver_finish_edges`` the recurrence runs in numpy over the
+    collected exact pair weights. Per-edge terms are the same double
+    expressions as the distributed loop; only the summation order
+    differs (numpy index order vs Spark partial-aggregation order, both
+    arbitrary), ~7 orders of magnitude inside the declared queries'
+    9-dp rounding.
+
+    An empty edge list raises before a missing seed does, on both
+    paths."""
+    if iterations < 1:
+        raise ValueError("iterations must be >= 1")
+    if seeds is not None and not seeds:
+        raise ValueError("seeds must be non-empty")
+    d = float(damping)
+    E0 = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    )
+    pdf = _collect_if_small(
+        E0.groupBy("src", "dst").agg(F.count("*").alias("_w")),
+        driver_finish_edges,
+    )
+    if pdf is not None:
+        if len(pdf) == 0:
+            raise ValueError("empty edge list")
+        src_i, dst_i, w, uniques = _factorize_edges(pdf)
+        w = w.astype(np.float64)
+        n = len(uniques)
+        if seeds is None:
+            tele, r = (1.0 - d) / n, np.full(n, 1.0 / n, dtype=np.float64)
+        else:
+            pos = {_py(u): i for i, u in enumerate(uniques)}
+            missing = [s for s in seeds if s not in pos]
+            if missing:
+                raise ValueError(
+                    f"{len(missing)} seed(s) absent from the graph"
+                )
+            r = np.zeros(n, dtype=np.float64)
+            r[[pos[s] for s in seeds]] = 1.0 / len(seeds)
+            tele = (1.0 - d) * r
+        outdeg = np.zeros(n, dtype=np.float64)
+        np.add.at(outdeg, src_i, w)
+        for _ in range(int(iterations)):
+            contrib = np.zeros(n, dtype=np.float64)
+            np.add.at(contrib, dst_i, (r[src_i] / outdeg[src_i]) * w)
+            r = tele + d * contrib
+        dtype = E0.schema["src"].dataType.simpleString()
+        return local_df(
+            edges.sparkSession,
+            [(_py(u), float(x)) for u, x in zip(uniques, r)],
+            f"node {dtype}, rank double",
+        )
+    # E feeds three consumers (the node set, the out-degree aggregate
+    # and the probe side of E2); persisting it keeps the caller's
+    # upstream edge build (often a join, e.g. lineitem⋈orders in the
+    # declared custsupp queries) to one execution. Released once E2
+    # (edges + outdeg) is materialized.
+    E = E0.repartition("src").persist()
+    # one scan, not a union of two: explode each edge into its endpoints
+    nodes = (
+        E.select(
+            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
+        )
+        .distinct()
+        .cache()
+    )
+    # one aggregate answers the node count and the seed presence
+    aggs = [F.count("*").alias("_n")]
+    if seeds is not None:
+        aggs.append(F.count(F.when(F.col("node").isin(seeds), 1)).alias("_ns"))
+    row = nodes.agg(*aggs).first()
+    n = int(row["_n"])
+    missing = 0 if seeds is None else len(seeds) - int(row["_ns"])
+    if n == 0 or missing:
+        E.unpersist()
+        nodes.unpersist()
+        raise ValueError(
+            "empty edge list" if n == 0
+            else f"{missing} seed(s) absent from the graph"
+        )
+    # The rank table is |nodes| rows — orders of magnitude below the
+    # edge list. Below ~5M nodes it is broadcast, so every iteration is
+    # a map-side join over the cached edges plus one partial-aggregated
+    # groupBy(dst) whose shuffle carries ~|nodes|×|partitions| partial
+    # rows, and the edges never shuffle after the one-time cache build.
+    # A billion-node graph exceeds broadcast budgets; there the shuffle
+    # join on the cached src partitioning is the right plan.
+    maybe_b = F.broadcast if n <= 5_000_000 else (lambda df: df)
+    # out-degree is joined onto the edge list once
+    outdeg = E.groupBy("src").agg(F.count("*").alias("outdeg"))
+    E2 = E.join(maybe_b(outdeg), "src").cache()
+    E2.count()  # materialize from the persisted E, then release E
+    E.unpersist()
+    # s and the teleport term are closed-form columns of the node id,
+    # so they are inlined at the edge side as well as at the output
+    def s(c):
+        if seeds is None:
+            return F.lit(1.0 / n)
+        return F.when(
+            c.isin(seeds), F.lit(1.0 / len(seeds))
+        ).otherwise(F.lit(0.0))
+
+    def tele(c):
+        return F.lit((1.0 - d) / n) if seeds is None else F.lit(1.0 - d) * s(c)
+
+    # The iteration carries the per-node in-sums Σ r(u)/outdeg(u) alone:
+    # r(src) = tele(src) + d·coalesce(_in(src), 0) is a closed form of
+    # the previous in-sums, so it is inlined at the edge side and each
+    # iteration broadcasts one node-sized relation. The dense rank table
+    # is attached once at the end. r_0 = s, so the first in-sums need
+    # no join at all.
+    contribs = E2.groupBy("dst").agg(
+        F.sum(s(E2["src"]) / F.col("outdeg")).alias("_in")
+    )
+    for _ in range(int(iterations) - 1):
+        # contribs derives from E2, so joining it back on same-named
+        # columns would be an ambiguous self-join: rename its columns
+        prev = maybe_b(
+            contribs.select(
+                F.col("dst").alias("_pd"), F.col("_in").alias("_pin")
+            )
+        )
+        contribs = (
+            E2.join(prev, F.col("_pd") == E2["src"], "left")
+            .select(
+                E2["dst"].alias("_d"),
+                (
+                    (
+                        tele(E2["src"])
+                        + F.lit(d) * F.coalesce(F.col("_pin"), F.lit(0.0))
+                    ) / E2["outdeg"]
+                ).alias("_c"),
+            )
+            .groupBy(F.col("_d").alias("dst"))
+            .agg(F.sum("_c").alias("_in"))
+        )
+    ranks = nodes.join(
+        maybe_b(contribs), nodes["node"] == contribs["dst"], "left"
+    ).select(
+        "node",
+        (
+            tele(F.col("node"))
+            + F.lit(d) * F.coalesce(F.col("_in"), F.lit(0.0))
+        ).alias("rank"),
+    )
+    # materialize the small rank table, then drop the iteration caches
+    # (checkpoint=False keeps the full lazy DAG for plan inspection; the
+    # caches then outlive the call)
+    if not checkpoint:
+        return ranks
+    out = ranks.localCheckpoint(eager=True)
+    E2.unpersist()
+    nodes.unpersist()
+    return out
 
 
 def pagerank(
@@ -104,147 +276,19 @@ def pagerank(
     ``edges`` is a directed edge list; duplicate (src, dst) rows count
     as parallel edges (weight = multiplicity), matching the SQL oracle.
     Ranks start uniform at 1/N over the distinct node set (sources ∪
-    destinations).
+    destinations), and the teleport term is (1 − d)/N.
 
-    Driver finish (r12): when the DISTINCT (src, dst) pair set fits
-    ``driver_finish_edges`` the recurrence runs driver-side over the
-    collected exact pair weights (numpy float64 — the km_survival
-    bounded-axis pattern): each distributed iteration otherwise costs
-    two broadcast-build jobs whose wall time is dominated by scheduling
-    + collect round-trips, not compute. Per-edge terms are the same
-    double expressions; only the float SUMMATION order changes (numpy
-    index order vs Spark partial-agg order — both already arbitrary),
-    ~7 orders of magnitude inside the declared queries' 9-dp rounding.
-    Above the dial the broadcast/shuffle loop below runs unchanged.
+    When the distinct (src, dst) pair set fits ``driver_finish_edges``
+    the recurrence runs driver-side in numpy: a distributed iteration
+    costs a broadcast-build job whose wall time is scheduling and
+    collect round-trips, not compute. Above the dial it runs as the
+    broadcast/shuffle loop described in the module docstring. Raises
+    ValueError on an empty edge list.
     """
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    d = float(damping)
-    E0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    return _pagerank(
+        edges, None, iterations, damping, src_col, dst_col, checkpoint,
+        driver_finish_edges,
     )
-    pdf = _collect_weighted_edges(E0, driver_finish_edges)
-    if pdf is not None:
-        import numpy as np
-
-        from inception_eventstore_spark.plans.queries import _local_df
-
-        if len(pdf) == 0:
-            raise ValueError("empty edge list")
-        src_i, dst_i, w, uniques = _factorize_edges(pdf)
-        w = w.astype(np.float64)
-        n = len(uniques)
-        outdeg = np.zeros(n, dtype=np.float64)
-        np.add.at(outdeg, src_i, w)
-        base = (1.0 - d) / n
-        r = np.full(n, 1.0 / n, dtype=np.float64)
-        for _ in range(int(iterations)):
-            contrib = np.zeros(n, dtype=np.float64)
-            np.add.at(contrib, dst_i, (r[src_i] / outdeg[src_i]) * w)
-            r = base + d * contrib
-        dtype = E0.schema["src"].dataType.simpleString()
-        rows = [(_py(u), float(x)) for u, x in zip(uniques, r)]
-        return _local_df(
-            edges.sparkSession,
-            rows,
-            f"node {dtype}, rank double",
-            slices=max(1, len(rows) // 500_000 + 1),
-        )
-    # E feeds THREE consumers (the node set, the out-degree aggregate,
-    # and the probe side of E2) — persist it or the caller's upstream
-    # edge-build plan (often a join, e.g. lineitem⋈orders in the
-    # declared custsupp queries) executes three times before the
-    # iterations even start (guide §2.4 / §5: one scan, not three).
-    # Released before return, after E2 (edges+outdeg) is materialized.
-    E = E0.repartition("src").persist()
-    # one scan, not a union of two: explode each edge into its endpoints
-    nodes = (
-        E.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-        )
-        .distinct()
-        .cache()
-    )
-    n = nodes.count()
-    if n == 0:
-        E.unpersist()
-        raise ValueError("empty edge list")
-    # The rank table is |nodes| rows — orders of magnitude below the
-    # edge list. Below ~5M nodes it fits a broadcast comfortably, and
-    # broadcasting it turns EVERY iteration into a map-side join over
-    # the cached edges plus one partial-aggregated groupBy(dst) whose
-    # shuffle carries ~|nodes|×|partitions| partial rows, not |edges|
-    # (r8: 6.6 s → the edges never shuffle after the one-time cache
-    # build). A billion-node graph exceeds broadcast budgets — there
-    # the shuffle join on the cached src partitioning is the right
-    # plan, so the dial flips automatically on node count.
-    bcast = n <= 5_000_000
-    maybe_b = F.broadcast if bcast else (lambda df: df)
-    # out-degree is joined onto the edge list ONCE — every iteration is
-    # then a single rank⋈edges equi-join (broadcast or co-partitioned)
-    # plus one partial-aggregated groupBy(dst)
-    outdeg = E.groupBy("src").agg(F.count("*").alias("outdeg"))
-    E2 = E.join(maybe_b(outdeg), "src").cache()
-    E2.count()  # materialize from the persisted E, then release E
-    E.unpersist()
-    base = (1.0 - d) / n
-
-    # FUSED iteration state (r12, VERDICT r11 #3): the loop used to
-    # broadcast TWO node-sized relations per iteration (ranks into the
-    # E2 join, then contribs into a nodes left-join rebuilding dense
-    # ranks). But rank(src) = base + d·coalesce(_in(src), 0) is a
-    # closed-form of the previous contribs row, so the iteration can
-    # carry contribs ALONE and inline the rank expression at the edge
-    # side — one broadcast build per iteration instead of two (k vs 2k
-    # jobs), each the same partial-aggregated groupBy(dst). The dense
-    # rank table is reattached ONCE at the end. Per-edge float
-    # expressions are identical ((base + d·_in) then /outdeg), so
-    # values match the unfused loop to the bit modulo summation order,
-    # which was already partition-nondeterministic.
-    contribs = E2.groupBy("dst").agg(
-        F.sum(F.lit(1.0 / n) / F.col("outdeg")).alias("_in")
-    )
-    for _ in range(int(iterations) - 1):
-        # rename the carried state columns — contribs derives from E2,
-        # so joining it back on same-named columns is an ambiguous
-        # self-join otherwise
-        prev = maybe_b(
-            contribs.select(
-                F.col("dst").alias("_pd"), F.col("_in").alias("_pin")
-            )
-        )
-        contribs = (
-            E2.join(prev, F.col("_pd") == E2["src"], "left")
-            .select(
-                E2["dst"].alias("_d"),
-                (
-                    (
-                        F.lit(base)
-                        + F.lit(d) * F.coalesce(F.col("_pin"), F.lit(0.0))
-                    ) / E2["outdeg"]
-                ).alias("_c"),
-            )
-            .groupBy(F.col("_d").alias("dst"))
-            .agg(F.sum("_c").alias("_in"))
-        )
-    ranks = nodes.join(
-        maybe_b(contribs), nodes["node"] == contribs["dst"], "left"
-    ).select(
-        "node",
-        (
-            F.lit(base)
-            + F.lit(d) * F.coalesce(F.col("_in"), F.lit(0.0))
-        ).alias("rank"),
-    )
-    # materialize the small rank table, then drop the iteration caches —
-    # no persisted state outlives the call (checkpoint=False keeps the
-    # full lazy DAG for plan inspection; caches then outlive the call)
-    if not checkpoint:
-        return ranks
-    out = ranks.localCheckpoint(eager=True)
-    E2.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def undirected_edges(
@@ -308,56 +352,42 @@ def label_propagation(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     und = undirected_edges(edges, src_col, dst_col)
-    # driver finish under the canonical-edge dial (r12): the recurrence
-    # is EXACT (labels are node ids, the mode is integer counts with a
+    # driver finish under the canonical-edge dial: the recurrence is
+    # exact (labels are node ids, the mode is integer counts with a
     # min-label tie-break), so the numpy replay is bit-identical to the
-    # distributed loop — same doctrine as connected_components. Nodes
-    # are factorized SORTED so index order == label-value order and the
-    # tie-break compares identically.
-    if driver_finish_edges and driver_finish_edges > 0:
-        pdf = und.limit(int(driver_finish_edges) + 1).toPandas()
-        if len(pdf) <= int(driver_finish_edges):
-            import numpy as np
-            import pandas as pd
-
-            from inception_eventstore_spark.plans.queries import _local_df
-
-            dtype = und.schema["x"].dataType.simpleString()
-            if len(pdf) == 0:
-                return _local_df(
-                    edges.sparkSession, [], f"node {dtype}, label {dtype}"
-                )
-            codes, uniques = pd.factorize(
-                pd.concat([pdf["x"], pdf["y"]], ignore_index=True),
-                sort=True,
-            )
-            codes = np.asarray(codes, dtype=np.int64)
-            m = len(pdf)
-            x_i, y_i = codes[:m], codes[m:]
-            n = len(uniques)
-            recv = np.concatenate([x_i, y_i])   # voting target
-            giver = np.concatenate([y_i, x_i])  # neighbor whose label votes
-            labels = np.arange(n, dtype=np.int64)
-            for _ in range(int(iterations)):
-                keys = recv * n + labels[giver]
-                uk, cnt = np.unique(keys, return_counts=True)
-                node_k, lab_k = uk // n, uk % n
-                order = np.lexsort((lab_k, -cnt, node_k))
-                first = np.unique(node_k[order], return_index=True)[1]
-                nxt = np.empty(n, dtype=np.int64)
-                # every node in the canonical edge set has >= 1 nbr
-                nxt[node_k[order][first]] = lab_k[order][first]
-                labels = nxt
-            rows = [
-                (_py(u), _py(uniques[labels[i]]))
-                for i, u in enumerate(uniques)
-            ]
-            return _local_df(
-                edges.sparkSession,
-                rows,
-                f"node {dtype}, label {dtype}",
-                slices=max(1, len(rows) // 500_000 + 1),
-            )
+    # distributed loop. Nodes are factorized sorted so index order is
+    # label-value order and the tie-break compares identically.
+    pdf = _collect_if_small(und, driver_finish_edges)
+    if pdf is not None:
+        dtype = und.schema["x"].dataType.simpleString()
+        schema = f"node {dtype}, label {dtype}"
+        if len(pdf) == 0:
+            return local_df(edges.sparkSession, [], schema)
+        codes, uniques = pd.factorize(
+            pd.concat([pdf["x"], pdf["y"]], ignore_index=True), sort=True
+        )
+        codes = np.asarray(codes, dtype=np.int64)
+        m = len(pdf)
+        x_i, y_i = codes[:m], codes[m:]
+        n = len(uniques)
+        recv = np.concatenate([x_i, y_i])   # voting target
+        giver = np.concatenate([y_i, x_i])  # neighbor whose label votes
+        labels = np.arange(n, dtype=np.int64)
+        for _ in range(int(iterations)):
+            keys = recv * n + labels[giver]
+            uk, cnt = np.unique(keys, return_counts=True)
+            node_k, lab_k = uk // n, uk % n
+            order = np.lexsort((lab_k, -cnt, node_k))
+            first = np.unique(node_k[order], return_index=True)[1]
+            nxt = np.empty(n, dtype=np.int64)
+            # every node in the canonical edge set has >= 1 nbr
+            nxt[node_k[order][first]] = lab_k[order][first]
+            labels = nxt
+        return local_df(
+            edges.sparkSession,
+            [(_py(u), _py(uniques[lab])) for u, lab in zip(uniques, labels)],
+            schema,
+        )
     nbrs = _neighbors(und).repartition("nbr").cache()
     labels = nbrs.select(F.col("node"), F.col("node").alias("label")).distinct()
     for _ in range(int(iterations)):
@@ -711,6 +741,16 @@ def kcore(
     return out
 
 
+def _hits_dmax(dmax: int) -> int:
+    """``dmax`` if the 2^30-scaled HITS in-sums fit BIGINT, else raise."""
+    if dmax >= 1 << 23:
+        raise ValueError(
+            f"hits_scores: max degree {dmax} >= 2^23 — the 2^30-scaled "
+            "in-sums would overflow BIGINT"
+        )
+    return dmax
+
+
 def hits_scores(
     edges: DataFrame,
     iterations: int = 4,
@@ -758,18 +798,16 @@ def hits_scores(
     E0 = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    # driver finish under the distinct-pair dial (r12): the recurrence
-    # is EXACT BIGINT arithmetic (init 2^30, integer sums, truncating
-    # div by the step-constant dmax), so the numpy int64 replay is
-    # bit-identical to the distributed loop — no float-order caveat at
-    # all. Bound check: sums ≤ 2^30·dmax < 2^53 under the same dmax
-    # guard, exact in int64.
-    pdf = _collect_weighted_edges(E0, driver_finish_edges)
+    # driver finish under the distinct-pair dial: the recurrence is
+    # exact BIGINT arithmetic (init 2^30, integer sums, truncating div
+    # by the step-constant dmax), so the numpy int64 replay is
+    # bit-identical to the distributed loop. Sums stay ≤ 2^30·dmax <
+    # 2^53 under the dmax guard, exact in int64.
+    pdf = _collect_if_small(
+        E0.groupBy("src", "dst").agg(F.count("*").alias("_w")),
+        driver_finish_edges,
+    )
     if pdf is not None:
-        import numpy as np
-
-        from inception_eventstore_spark.plans.queries import _local_df
-
         if len(pdf) == 0:
             raise ValueError("empty edge list")
         src_i, dst_i, w, uniques = _factorize_edges(pdf)
@@ -778,12 +816,7 @@ def hits_scores(
         deg = np.zeros(n, dtype=np.int64)
         np.add.at(deg, src_i, w)
         np.add.at(deg, dst_i, w)
-        dmax = int(deg.max())
-        if dmax >= 1 << 23:
-            raise ValueError(
-                f"hits_scores: max degree {dmax} >= 2^23 — the "
-                "2^30-scaled in-sums would overflow BIGINT"
-            )
+        dmax = _hits_dmax(int(deg.max()))
         h = np.full(n, 1 << 30, dtype=np.int64)
         a = np.zeros(n, dtype=np.int64)
         for _ in range(int(iterations)):
@@ -794,21 +827,14 @@ def hits_scores(
             np.add.at(h, src_i, a[dst_i] * w)
             h //= dmax
         dtype = E0.schema["src"].dataType.simpleString()
-        rows = [
-            (_py(u), int(hv), int(av))
-            for u, hv, av in zip(uniques, h, a)
-        ]
-        return _local_df(
+        return local_df(
             edges.sparkSession,
-            rows,
+            [(_py(u), int(hv), int(av)) for u, hv, av in zip(uniques, h, a)],
             f"node {dtype}, hub_u bigint, auth_u bigint",
-            slices=max(1, len(rows) // 500_000 + 1),
         )
     E = E0.cache()
-    # ONE endpoint-explode aggregation serves the node set, the node
-    # count AND dmax (was: a distinct for nodes plus a separate
-    # groupBy for degrees over the same exploded endpoints, plus two
-    # driver actions — guide §2.4, r11)
+    # one endpoint-explode aggregation serves the node set, the node
+    # count and dmax
     deg = (
         E.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
@@ -822,24 +848,19 @@ def hits_scores(
         F.count("*").alias("_n"), F.max("_deg").alias("_dmax")
     ).first()
     n = int(drow["_n"])
-    if n == 0:
-        raise ValueError("empty edge list")
-    dmax = int(drow["_dmax"])
-    if dmax >= 1 << 23:
-        raise ValueError(
-            f"hits_scores: max degree {dmax} >= 2^23 — the 2^30-scaled "
-            "in-sums would overflow BIGINT"
-        )
-    bcast = n <= 5_000_000
-    maybe_b = F.broadcast if bcast else (lambda df: df)
-
-    # SPARSE iteration state (r9 tightening): a node with score 0
-    # contributes nothing to any in-sum, so the per-iteration rebuild
-    # of a dense all-nodes score table (two extra left joins per
-    # iteration in the first cut) is pure padding — the inner joins
-    # below see every src/dst anyway, and the zeros are re-attached
-    # ONCE at output time. Values are bit-identical; the lazy tree is
-    # half the joins (execution AND the one-time compile).
+    try:
+        if n == 0:
+            raise ValueError("empty edge list")
+        dmax = _hits_dmax(int(drow["_dmax"]))
+    except ValueError:
+        E.unpersist()
+        deg.unpersist()
+        raise
+    maybe_b = F.broadcast if n <= 5_000_000 else (lambda df: df)
+    # Sparse iteration state: a node with score 0 contributes nothing
+    # to any in-sum, so the loop carries only the nodes the inner joins
+    # reach and the zeros are attached once at output time — half the
+    # joins of a dense all-nodes score table, with the same values.
     hubs = nodes.select("node", F.lit(1 << 30).cast("bigint").alias("h"))
     auths = None
     for _ in range(int(iterations)):
@@ -904,141 +925,17 @@ def personalized_pagerank(
         r_{t+1}(v) = (1−d)·s(v) + d·Σ_{u→v} r_t(u)/outdeg(u),
         s(v) = 1/|seeds| for v ∈ seeds, else 0;  r_0 = s.
 
-    Same execution shape and conventions as `pagerank` (duplicate
-    edges = parallel edges, dangling mass leaks identically to the
-    oracle, broadcast-rank iterations below 5M nodes, edges cached
-    once, one partial-aggregated groupBy(dst) per step — no
-    per-iteration |edges| shuffle)."""
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    if not seeds:
-        raise ValueError("seeds must be non-empty")
-    d = float(damping)
-    seeds = [int(s) for s in seeds]
-    E0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    Same execution shape, driver finish and conventions as `pagerank`
+    (duplicate edges = parallel edges, dangling mass leaks identically
+    to the oracle, broadcast-rank iterations below 5M nodes, edges
+    cached once, one partial-aggregated groupBy(dst) per step — no
+    per-iteration |edges| shuffle). Raises ValueError on empty
+    ``seeds``, on an empty edge list, and then on seeds absent from
+    the graph."""
+    return _pagerank(
+        edges, sorted({int(s) for s in seeds or []}), iterations, damping,
+        src_col, dst_col, checkpoint, driver_finish_edges,
     )
-    # driver finish under the distinct-pair dial — same mechanics and
-    # float-order argument as `pagerank` (r12); r_0 = s, and the
-    # teleport vector is exact (0 or 1/|seeds|) on both paths
-    pdf = _collect_weighted_edges(E0, driver_finish_edges)
-    if pdf is not None:
-        import numpy as np
-
-        from inception_eventstore_spark.plans.queries import _local_df
-
-        if len(pdf) == 0:
-            raise ValueError("empty edge list")
-        src_i, dst_i, w, uniques = _factorize_edges(pdf)
-        w = w.astype(np.float64)
-        n = len(uniques)
-        pos = {_py(u): i for i, u in enumerate(uniques)}
-        sset = set(seeds)
-        missing = [s for s in sset if s not in pos]
-        if missing:
-            raise ValueError(
-                f"{len(missing)} seed(s) absent from the graph"
-            )
-        s_mass = 1.0 / len(sset)
-        s_vec = np.zeros(n, dtype=np.float64)
-        for s in sset:
-            s_vec[pos[s]] = s_mass
-        outdeg = np.zeros(n, dtype=np.float64)
-        np.add.at(outdeg, src_i, w)
-        r = s_vec
-        for _ in range(int(iterations)):
-            contrib = np.zeros(n, dtype=np.float64)
-            np.add.at(contrib, dst_i, (r[src_i] / outdeg[src_i]) * w)
-            r = (1.0 - d) * s_vec + d * contrib
-        dtype = E0.schema["src"].dataType.simpleString()
-        rows = [(_py(u), float(x)) for u, x in zip(uniques, r)]
-        return _local_df(
-            edges.sparkSession,
-            rows,
-            f"node {dtype}, rank double",
-            slices=max(1, len(rows) // 500_000 + 1),
-        )
-    # same three-consumer persist rationale as `pagerank` (node set,
-    # out-degree, E2 probe side) — one upstream edge-build, not three
-    E = E0.repartition("src").persist()
-    nodes = (
-        E.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-        )
-        .distinct()
-        .cache()
-    )
-    # one aggregate answers both driver questions (seed presence and
-    # the broadcast dial) — previously two separate count jobs
-    _nrow = nodes.agg(
-        F.count("*").alias("_n"),
-        F.count(F.when(F.col("node").isin(seeds), 1)).alias("_ns"),
-    ).first()
-    n_seed_present = int(_nrow["_ns"])
-    if n_seed_present != len(set(seeds)):
-        E.unpersist()
-        raise ValueError(
-            f"{len(set(seeds)) - n_seed_present} seed(s) absent from "
-            "the graph"
-        )
-    bcast_n = int(_nrow["_n"]) <= 5_000_000
-    maybe_b = F.broadcast if bcast_n else (lambda df: df)
-    outdeg = E.groupBy("src").agg(F.count("*").alias("outdeg"))
-    E2 = E.join(maybe_b(outdeg), "src").cache()
-    E2.count()  # materialize from the persisted E, then release E
-    E.unpersist()
-    s_mass = 1.0 / len(set(seeds))
-    s_col = F.when(
-        F.col("node").isin(seeds), F.lit(s_mass)
-    ).otherwise(F.lit(0.0))
-    # the teleport vector is a closed-form column of the node id, so
-    # it can be inlined at the EDGE side too
-    s_src = F.when(
-        E2["src"].isin(seeds), F.lit(s_mass)
-    ).otherwise(F.lit(0.0))
-
-    # FUSED iteration state — one broadcast per iteration instead of
-    # two; same restructure and float argument as `pagerank` (r12).
-    # r_0 = s, so iteration 1 needs no broadcast at all.
-    contribs = E2.groupBy("dst").agg(
-        F.sum(s_src / F.col("outdeg")).alias("_in")
-    )
-    for _ in range(int(iterations) - 1):
-        # renamed carried state — see pagerank (ambiguous self-join)
-        prev = maybe_b(
-            contribs.select(
-                F.col("dst").alias("_pd"), F.col("_in").alias("_pin")
-            )
-        )
-        contribs = (
-            E2.join(prev, F.col("_pd") == E2["src"], "left")
-            .select(
-                E2["dst"].alias("_d"),
-                (
-                    (
-                        F.lit(1.0 - d) * s_src
-                        + F.lit(d) * F.coalesce(F.col("_pin"), F.lit(0.0))
-                    ) / E2["outdeg"]
-                ).alias("_c"),
-            )
-            .groupBy(F.col("_d").alias("dst"))
-            .agg(F.sum("_c").alias("_in"))
-        )
-    ranks = nodes.join(
-        maybe_b(contribs), nodes["node"] == contribs["dst"], "left"
-    ).select(
-        "node",
-        (
-            F.lit(1.0 - d) * s_col
-            + F.lit(d) * F.coalesce(F.col("_in"), F.lit(0.0))
-        ).alias("rank"),
-    )
-    if not checkpoint:
-        return ranks
-    out = ranks.localCheckpoint(eager=True)
-    E2.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def modularity(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 __all__ = ["v_optimal_histogram", "v_optimal_segmentation"]
 
 _SCALE = 1 << 20
@@ -167,9 +169,7 @@ def v_optimal_histogram(
         out_rows.append((seg, blo, bhi, c, s_, cost_u // _SCALE))
     assert pc_tot == nr  # segments tile the axis
 
-    from inception_eventstore_spark.plans.queries import _local_df
-
-    return _local_df(
+    return local_df(
         df.sparkSession,
         out_rows,
         "seg bigint, lo_bucket bigint, hi_bucket bigint, "

@@ -30,6 +30,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
 from inception_eventstore_spark.operators.dedup import tokens
 
 
@@ -282,7 +283,6 @@ def bpe_learn_merges(
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    from inception_eventstore_spark.plans.queries import _local_df
 
     vocab = (
         docs.select(F.explode(tokens(text_col)).alias("w"))
@@ -304,7 +304,7 @@ def bpe_learn_merges(
         out_rows.append(
             (r + 1, best["sym_a"], best["sym_b"], int(best["pair_count"]))
         )
-    return _local_df(
+    return local_df(
         docs.sparkSession,
         out_rows,
         "merge_rank bigint, sym_a string, sym_b string, pair_count bigint",

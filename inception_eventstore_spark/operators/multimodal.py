@@ -1366,7 +1366,7 @@ def synthetic_mp4_asset_rows(n: int = 48) -> list:
 
 def synthetic_mp4_assets(spark, n: int = 48) -> DataFrame:
     """DataFrame over `synthetic_mp4_asset_rows` (explicit slice count
-    — the _local_df fixture rule)."""
+    — the local_df fixture rule)."""
     slices = max(1, min(4, n // 16))
     return spark.createDataFrame(
         spark.sparkContext.parallelize(synthetic_mp4_asset_rows(n), slices),

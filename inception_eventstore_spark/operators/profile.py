@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -1348,7 +1350,6 @@ def mann_whitney_u(
     from inception_eventstore_spark.functions.ranking import (
         sharded_running_sums,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     vals = events.where(
         F.col(type_col).isin([group_a, group_b])
@@ -1414,7 +1415,7 @@ def mann_whitney_u(
             "cannot represent it"
         )
     u_a_x2 = int(row["_ra_x2"]) - n_a * (n_a + 1)
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n_a, n_b, u_a_x2, tie_sum)],
         "n_a bigint, n_b bigint, u_a_x2 bigint, tie_sum bigint",
@@ -1846,7 +1847,7 @@ def kruskal_wallis(
       (quantize-before-combine): the statistic is bit-reproducible in
       any engine that can floor a correctly-rounded double.
 
-    The bounded k-row readout returns via `_local_df` (the km_survival
+    The bounded k-row readout returns via `local_df` (the km_survival
     driver pattern); only H itself is a double, one fixed-order
     expression rounded 6 dp.
 
@@ -1856,7 +1857,6 @@ def kruskal_wallis(
     from inception_eventstore_spark.functions.ranking import (
         sharded_running_sums,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     vals = events.where(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
@@ -1941,7 +1941,7 @@ def kruskal_wallis(
     rows = sorted(
         (str(g["_g"]), int(g["_n_g"]), int(g["_rs_x2"])) for g in groups
     )
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(gname, ng, rs, n, tie_sum, h_tied) for gname, ng, rs in rows],
         "grp string, n_g bigint, rank_sum_x2 bigint, n bigint, "
@@ -1982,13 +1982,12 @@ def spearman_user_corr(
       integers — python int→float and DuckDB HUGEINT→DOUBLE are both
       correctly rounded, so the doubles agree bit-for-bit.
 
-    Output (one row, via `_local_df`): n, sxx, syy, sxy (exact ×4
+    Output (one row, via `local_df`): n, sxx, syy, sxy (exact ×4
     rank units; guarded to BIGINT), rho (6 dp).
     """
     from inception_eventstore_spark.functions.ranking import (
         sharded_running_sums,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     per = events.where(F.col(value_col).isNotNull()).groupBy(
         F.col(user_col).alias("_u")
@@ -2049,7 +2048,7 @@ def spearman_user_corr(
         float(num) / _math.sqrt(float(dx) * float(dy))
         if dx > 0 and dy > 0 else float("nan")
     )
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n, sums["xx"], sums["yy"], sums["xy"], rho)],
         "n bigint, sxx bigint, syy bigint, sxy bigint, rho double",
@@ -2098,8 +2097,6 @@ def cochran_armitage(
     Output (one row): n_users, n_resp, trend_num (exact), z_ca (6 dp;
     NULL when the variance is zero).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     per = events.groupBy(F.col(user_col).alias("_u")).agg(
         F.least(
             F.countDistinct(F.to_date(F.col(ts_col))).cast("bigint"),
@@ -2131,7 +2128,7 @@ def cochran_armitage(
         float(num) / _math.sqrt(float(var_num) / float(n))
         if var_num > 0 else None
     )
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n, r_tot, num, z)],
         "n_users bigint, n_resp bigint, trend_num bigint, z_ca double",
@@ -2334,8 +2331,6 @@ def anova_oneway(
     double ratio of them. Output (one row): n_rows, k_groups,
     f_stat (6 dp; NULL when k < 2, n ≤ k, or ssw ≤ 0).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     vals = events.where(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     )
@@ -2348,7 +2343,7 @@ def anova_oneway(
             "driver fold expects a categorical group column"
         )
     n, k, f_stat = _anova_fold(groups)
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n, k, f_stat)],
         "n_rows bigint, k_groups bigint, f_stat double",
@@ -2382,8 +2377,6 @@ def welch_ttest(
     Output (one row): n_a, n_b, t_welch (6 dp), df_welch (6 dp; both
     NULL when either arm has < 2 rows or zero variance-sum).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     vals = events.where(
         F.col(type_col).isin([group_a, group_b])
         & F.col(value_col).isNotNull()
@@ -2415,7 +2408,7 @@ def welch_ttest(
                 se_a * se_a / float(n_a - 1)
                 + se_b * se_b / float(n_b - 1)
             )
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n_a, n_b, t_w, df_w)],
         "n_a bigint, n_b bigint, t_welch double, df_welch double",
@@ -2450,8 +2443,6 @@ def mcnemar_paired(
     Output (one row): n_users, b_disc, c_disc, chi2_u (micro-units;
     NULL when b + c = 0).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     per = events.groupBy(F.col(user_col).alias("_u")).agg(
         F.max(F.when(F.col(type_col) == type_a, 1).otherwise(0))
         .cast("bigint").alias("_a"),
@@ -2477,7 +2468,7 @@ def mcnemar_paired(
         ((bd - cd) * (bd - cd) * 1048576) // (bd + cd)
         if bd + cd > 0 else None
     )
-    return _local_df(
+    return local_df(
         events.sparkSession,
         [(n, bd, cd, chi2_u)],
         "n_users bigint, b_disc bigint, c_disc bigint, chi2_u bigint",
@@ -2546,8 +2537,6 @@ def kendall_tau_daily(
     Output (one row): n_days, n_pairs, concordant, discordant,
     tie_x, tie_y, tau_ppm (NULL when either axis is fully tied).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     per_day = (
         events.where(F.col(ts_col).isNotNull())
         .groupBy(F.to_date(F.col(ts_col)).alias("_d"))
@@ -2578,7 +2567,7 @@ def kendall_tau_daily(
     if n0 - tx > 0 and n0 - ty > 0:
         denom = _math.sqrt(float(n0 - tx) * float(n0 - ty))
         tau_ppm = _math.floor(float(nc - nd) * 1000000.0 / denom)
-    return _local_df(
+    return local_df(
         events.sparkSession,
         [(d, n0, nc, nd, tx, ty, tau_ppm)],
         "n_days bigint, n_pairs bigint, concordant bigint, "
@@ -2615,7 +2604,6 @@ def brown_forsythe(
     from inception_eventstore_spark.functions.ranking import (
         grouped_row_number,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     vals = events.where(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
@@ -2646,7 +2634,7 @@ def brown_forsythe(
             "driver fold expects a categorical group column"
         )
     n, k, f_stat = _anova_fold(groups)
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n, k, f_stat)],
         "n_rows bigint, k_groups bigint, f_bf double",
@@ -2679,8 +2667,6 @@ def cohens_d_effect(
     Output (one row): n_a, n_b, cohens_d (6 dp), hedges_g (6 dp; both
     NULL when either arm has < 2 rows or the pooled variance is 0).
     """
-    from inception_eventstore_spark.plans.queries import _local_df
-
     vals = events.where(
         F.col(type_col).isin([group_a, group_b])
         & F.col(value_col).isNotNull()
@@ -2712,7 +2698,7 @@ def cohens_d_effect(
             g_val = d_val * (
                 1.0 - 3.0 / (4.0 * float(n_a + n_b) - 9.0)
             )
-    out = _local_df(
+    out = local_df(
         events.sparkSession,
         [(n_a, n_b, d_val, g_val)],
         "n_a bigint, n_b bigint, cohens_d double, hedges_g double",
@@ -2760,7 +2746,6 @@ def wilcoxon_signed_rank(
     from inception_eventstore_spark.functions.ranking import (
         sharded_running_sums,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     ev = events.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
@@ -2819,7 +2804,7 @@ def wilcoxon_signed_rank(
     ).first()
     n = int(row["n"] or 0)
     if n == 0:
-        return _local_df(
+        return local_df(
             events.sparkSession,
             [(0, 0, 0, None)],
             "n_pairs bigint, s2_pos bigint, tie_cube bigint, z_ppm bigint",
@@ -2845,7 +2830,7 @@ def wilcoxon_signed_rank(
         z_ppm = _math.floor(
             float(2 * s2 - n * (n + 1)) / _math.sqrt(a / 3.0) * 1e6
         )
-    return _local_df(
+    return local_df(
         events.sparkSession,
         [(n, s2, tc, z_ppm)],
         "n_pairs bigint, s2_pos bigint, tie_cube bigint, z_ppm bigint",
@@ -2873,8 +2858,6 @@ def hill_tail_index(
     bit-identical double and the ppm floors are safe. Output one row:
     (k, x_tail, hill_ppm, alpha_ppm — NULL when the top k+1 values are
     all equal)."""
-    from inception_eventstore_spark.plans.queries import _local_df
-
     if k < 1:
         raise ValueError("k must be >= 1")
     tops = [
@@ -2897,7 +2880,7 @@ def hill_tail_index(
     hm = acc / float(k)
     hill_ppm = _math.floor(hm * 1e6)
     alpha_ppm = _math.floor(1e6 / hm) if hm > 0 else None
-    return _local_df(
+    return local_df(
         df.sparkSession,
         [(k, int(tops[k]), hill_ppm, alpha_ppm)],
         "k bigint, x_tail bigint, hill_ppm bigint, alpha_ppm bigint",
@@ -3132,7 +3115,7 @@ def sign_test_bh(
     (k_up) rows collect to the driver where C(n,j), the tail sums and
     the step-up scan run in exact arbitrary-precision integers
     (horizon ≤ 63 keeps every emitted numerator inside BIGINT:
-    Σ C(62,j) ≤ 2⁶² — the result returns via `_local_df`, the SQL
+    Σ C(62,j) ≤ 2⁶² — the result returns via `local_df`, the SQL
     oracle replays the identical integer arithmetic with HUGEINT
     intermediates).
 
@@ -3142,8 +3125,6 @@ def sign_test_bh(
     from math import comb
 
     from pyspark.sql import Window
-
-    from inception_eventstore_spark.plans.queries import _local_df
 
     if not 2 <= horizon <= 63:
         raise ValueError(f"horizon must be in [2, 63], got {horizon}")
@@ -3208,7 +3189,7 @@ def sign_test_bh(
         (g, ku, n, p_num, 1 << n, i, 1 if i <= k_star else 0)
         for i, (p_num, g, ku) in enumerate(scored, start=1)
     ]
-    return _local_df(
+    return local_df(
         df.sparkSession,
         out,
         f"{group_col} {gtype}, k_up bigint, n_cmp bigint, "

@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
 from inception_eventstore_spark.operators.dedup import tokens
 
 __all__ = [
@@ -612,12 +613,11 @@ def phrase_search(
     phrase = [w.lower() for w in phrase]
     k = len(phrase)
     spark = docs.sparkSession
-    # _local_df, not raw createDataFrame: the raw path shards k rows
+    # local_df, not raw createDataFrame: the raw path shards k rows
     # into 32 pickled slices and any task reading several pays a
     # python-deserializer round-trip per slice (CLAUDE.md fixture rule)
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    slots = _local_df(
+    slots = local_df(
         spark,
         [(w, s) for s, w in enumerate(phrase)],
         "token string, slot int",
@@ -889,9 +889,8 @@ def rank_overlap_rbo(
         ov = len(sa & sb)
         rbo_ppm += (ov * 9 ** (d - 1) * 10**6) // (d * 10**d)
         ov_k = ov
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         docs.sparkSession,
         [(k, ov_k, rbo_ppm)],
         "k bigint, overlap_k bigint, rbo_ppm bigint",

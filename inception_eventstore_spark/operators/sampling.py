@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 #: Bucket space for split assignment — 1e6 gives weight resolution 1e-6.
 BUCKETS = 1_000_000
 
@@ -876,9 +878,7 @@ def poisson_bootstrap_ci(
     hi = means[nb - lo_rank][0]
     mean_full = float(sum_micros) / float(n_rows) / 1048576.0
 
-    from inception_eventstore_spark.plans.queries import _local_df
-
-    raw = _local_df(
+    raw = local_df(
         df.sparkSession,
         [(n_rows, b, mean_full, med, lo, hi)],
         "n_rows bigint, b bigint, mean_full double, boot_median double, "

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
 from inception_eventstore_spark.operators.embeddings import bow_bucket_counts
 from inception_eventstore_spark.operators.sampling import md5_prefix60
 
@@ -819,9 +820,8 @@ def brier_decomposition(
     )
     se_q, rel_q = int(tot_row["se_q"]), int(tot_row["rel_q"])
     spark = scored.sparkSession
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    out = _local_df(
+    out = local_df(
         spark,
         [(n_total, pos_total, se_q, rel_q, res_q)],
         "n bigint, pos bigint, _se bigint, _rel bigint, _res bigint",

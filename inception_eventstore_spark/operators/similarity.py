@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -1064,9 +1066,8 @@ def mmr_diverse_topk(
             out.append((qid, rank, pick, score))
             selected.append(pick)
             remaining.remove(pick)
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         corpus.sparkSession,
         out,
         "query_id bigint, sel_rank bigint, "
@@ -1112,7 +1113,6 @@ def ann_recall_audit(
     and signatures are one pass each.
     """
     from inception_eventstore_spark.operators import pq as PQ
-    from inception_eventstore_spark.plans.queries import _local_df
     from pyspark.sql import Window
 
     if not queries:
@@ -1130,7 +1130,7 @@ def ann_recall_audit(
     spark = corpus.sparkSession
     dim = len(queries[0][1])
     qdf = F.broadcast(
-        _local_df(
+        local_df(
             spark,
             [(int(qid), [float(x) for x in v]) for qid, v in queries],
             "qid bigint, q array<double>",
@@ -1168,7 +1168,7 @@ def ann_recall_audit(
             (int(qid), int(s))
             for s in hamming_ball(qsig, n_planes, probe_radius)
         )
-    ball = F.broadcast(_local_df(spark, ball_rows, "qid bigint, _sig bigint"))
+    ball = F.broadcast(local_df(spark, ball_rows, "qid bigint, _sig bigint"))
     lsh = _topk(
         sigged.join(ball, "_sig").join(qdf, "qid")
         .select("qid", "vec_id", rdist)
@@ -1176,7 +1176,7 @@ def ann_recall_audit(
 
     # --- ivf: one assignment pass, probe = (query, cell) equi-join ---
     cdf = F.broadcast(
-        _local_df(
+        local_df(
             spark,
             [(c, [float(x) for x in cv]) for c, cv in enumerate(centroids)],
             "cell bigint, cv array<double>",
@@ -1197,7 +1197,7 @@ def ann_recall_audit(
         for qid, v in queries
         for c in rank_cells(centroids, [float(x) for x in v])[:n_probe]
     ]
-    probes = F.broadcast(_local_df(spark, probe_rows, "qid bigint, cell bigint"))
+    probes = F.broadcast(local_df(spark, probe_rows, "qid bigint, cell bigint"))
     ivf = _topk(
         corp.join(assigned, "vec_id").join(probes, "cell").join(qdf, "qid")
         .select("qid", "vec_id", rdist)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 __all__ = [
     "rolling_stats",
     "zscore_anomalies",
@@ -599,9 +601,7 @@ def cusum_changepoints(
     by_k: dict = {}
     days_all = [r["_day"] for r in per_day]
     if not days_all:
-        from inception_eventstore_spark.plans.queries import _local_df
-
-        return _local_df(
+        return local_df(
             events.sparkSession,
             [],
             f"{key_col} string, day date, x bigint, cusum_pos bigint,"
@@ -631,9 +631,8 @@ def cusum_changepoints(
             out.append(
                 (k, d, x, sp, sn, 1 if (sp > h or sn > h) else 0)
             )
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         f"{key_col} string, day date, x bigint, cusum_pos bigint,"
@@ -976,9 +975,8 @@ def holt_linear_daily(
         out.append(
             (i, d0 + _dt.timedelta(days=i), xs[i], lvl, trd, err)
         )
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "day_index bigint, day date, n_events bigint, "
@@ -1485,7 +1483,6 @@ def changepoints_lsq(
         _SCALE,
         v_optimal_segmentation,
     )
-    from inception_eventstore_spark.plans.queries import _local_df
 
     cnts = events.where(F.col(ts_col).isNotNull()).groupBy(
         F.to_date(F.col(ts_col)).alias("_d")
@@ -1525,7 +1522,7 @@ def changepoints_lsq(
         out_rows.append(
             (seg, blo, bhi, bhi - blo + 1, total, cost_u // _SCALE)
         )
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out_rows,
         "seg bigint, lo_day bigint, hi_day bigint, n_days bigint, "
@@ -1555,7 +1552,7 @@ def holt_winters_daily(
 
     Same exactness contract as holt_linear: the km driver pattern
     (one partial-agg rollup to the bounded day axis, recurrence in
-    exact python ints, `_local_df` out); α/β/γ are rationals, state
+    exact python ints, `local_df` out); α/β/γ are rationals, state
     in 2^20 micro-units, every step one truncating division. The
     oracle carries the p-slot seasonal state as p ROTATING COLUMNS of
     a recursive CTE — the recursive row is (l, b, s_0..s_{p−1}) and
@@ -1614,9 +1611,8 @@ def holt_winters_daily(
         out.append(
             (t, d0 + _dt.timedelta(days=t), xs[t], lvl, trd, s_used, err)
         )
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "day_index bigint, day date, n_events bigint, "
@@ -1816,7 +1812,7 @@ def croston_daily(
     runs driver-side in exact integers — α = an/ad rational, state in
     2^20 micro-units, every step one truncating division, matching
     Spark ``div`` / the oracle's CASE-truncating ``//`` — and the
-    result returns via `_local_df`, replayed bit-for-bit by a
+    result returns via `local_df`, replayed bit-for-bit by a
     recursive-CTE oracle. Callers pre-filter to the sparse slice
     whose demand they forecast.
 
@@ -1863,9 +1859,8 @@ def croston_daily(
         p = p + _tdiv(an * (gap * q - p), ad)
         prev_t = t
         out.append((t, day, x, z, p, _tdiv(z * 1_000_000, p)))
-    from inception_eventstore_spark.plans.queries import _local_df
 
-    return _local_df(
+    return local_df(
         events.sparkSession,
         out,
         "day_index bigint, day date, demand bigint, z_micro bigint, "

@@ -32,6 +32,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
 from inception_eventstore_spark.operators import dedup as D
 from inception_eventstore_spark.operators import similarity as S
 from inception_eventstore_spark.operators import text as TX
@@ -49,23 +50,6 @@ class QueryDef:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _local_df(spark: SparkSession, rows, schema: str, slices: int = 1):
-    """Local fixture DataFrame with an EXPLICIT slice count.
-
-    ``spark.createDataFrame(list, ...)`` shards a tiny fixture list
-    into defaultParallelism (32) pickled partitions; every downstream
-    task that reads several of them (coalesce(1), a single shuffle
-    reader) pays one python-deserializer round-trip PER SLICE — ~0.13 s
-    × 32 ≈ 4 s of pure overhead for an 8-row probe batch (measured on
-    phash_index_probe; the hashing itself is 0.08 s). Parallelizing
-    with a pinned slice count keeps fixture scans at ``slices`` worker
-    rounds, so media-query timings measure the operator, not driver
-    serialization."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), slices), schema
-    )
 
 
 def _ns(ts: str) -> int:
@@ -4708,7 +4692,7 @@ def q_retrieval_bm25_multi(spark, sf_dir):
     from inception_eventstore_spark.operators import retrieval as RT
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge"]),
@@ -7257,7 +7241,7 @@ def q_image_phash(spark, sf_dir):
     driver-side from the same payload bytes."""
     from inception_eventstore_spark.operators import phash as PH
 
-    assets = _local_df(
+    assets = local_df(
         spark, _phash_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -7285,7 +7269,7 @@ def q_phash_near_dup(spark, sf_dir):
     literal hash table with bit_count(xor)."""
     from inception_eventstore_spark.operators import phash as PH
 
-    assets = _local_df(
+    assets = local_df(
         spark, _phash_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -7376,7 +7360,7 @@ def q_audio_fingerprint(spark, sf_dir):
     driver-side from the same payload bytes."""
     from inception_eventstore_spark.operators import audiofp as AFP
 
-    assets = _local_df(
+    assets = local_df(
         spark, _audiofp_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -7404,7 +7388,7 @@ def q_audio_near_dup(spark, sf_dir):
     literal fingerprint table with bit_count(xor)."""
     from inception_eventstore_spark.operators import audiofp as AFP
 
-    assets = _local_df(
+    assets = local_df(
         spark, _audiofp_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -7470,7 +7454,7 @@ def q_video_near_dup(spark, sf_dir):
     hash) table and re-derives the pair report in SQL."""
     from inception_eventstore_spark.operators import phash as PH
 
-    assets = _local_df(
+    assets = local_df(
         spark, _video_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -7679,7 +7663,7 @@ def q_phash_index_probe(spark, sf_dir):
 
     prebuild_phash_index(spark, sf_dir)
     idx = PhashImageIndex.load(spark, _PHASH_INDEX_DIRS["idx"])
-    probe = _local_df(
+    probe = local_df(
         spark,
         [(i + 1000, p) for i, p in _phash_probe_payloads()],
         "asset_id long, payload binary",
@@ -7777,7 +7761,7 @@ def q_phash_clusters(spark, sf_dir):
         connected_components,
     )
 
-    assets = _local_df(
+    assets = local_df(
         spark, _phash_chain_fixture_rows(), "asset_id long, payload binary",
         slices=2,
     )
@@ -8205,7 +8189,7 @@ def q_rrf_fusion(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge"]),
@@ -8353,7 +8337,7 @@ def prebuild_phash_index(spark, sf_dir) -> float:
         return 0.0
     t0 = _time.perf_counter()
     path = tempfile.mkdtemp(prefix="phash_ix_")
-    corpus = _local_df(
+    corpus = local_df(
         spark,
         [(i, bytearray(p)) for i, p in PH.textured_test_images(32)],
         "asset_id long, payload binary",
@@ -8603,7 +8587,7 @@ def q_tfidf_cosine_topk(spark, sf_dir):
     from inception_eventstore_spark.operators import retrieval as RT
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge"]),
@@ -10387,7 +10371,7 @@ def q_retrieval_ndcg(spark, sf_dir):
     from inception_eventstore_spark.operators import retrieval as RT
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge", "key"]),
@@ -14412,7 +14396,7 @@ def q_borda_fusion(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge"]),
@@ -14474,7 +14458,7 @@ def q_multimodal_bmp(spark, sf_dir):
     kernel over the binary column."""
     from inception_eventstore_spark.operators import multimodal as MM
 
-    assets = _local_df(
+    assets = local_df(
         spark,
         [(i, bytearray(p)) for i, p in MM.synthetic_bmp_asset_rows(64)],
         "asset_id long, payload binary",
@@ -15443,7 +15427,7 @@ def q_interval_join_windows(spark, sf_dir):
     )
     week = 7 * 86_400_000_000
     t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC in micros
-    wins = _local_df(
+    wins = local_df(
         spark,
         [(w, t0 + w * week, t0 + (w + 1) * week - 1) for w in range(12)],
         "w_id bigint, wlo bigint, whi bigint",
@@ -15532,7 +15516,7 @@ def q_retrieval_map(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [
             (1, ["spark", "merge", "key"]),

@@ -2,11 +2,14 @@
 
 Two families:
 
-1. The graph value-iteration loops gained a driver-side finish under a
-   distinct-pair dial (VERDICT r11 #3). Both paths must agree — the
-   exact-integer HITS recurrence bit-for-bit, the float PageRank/PPR
-   recurrences to ~ulp (identical per-edge expressions, summation
-   order differs).
+1. The graph value-iteration loops finish on the driver when their
+   probed edge set fits ``driver_finish_edges`` and run distributed
+   otherwise. Every path must give the recurrence's answer — the
+   exact-integer HITS and label-propagation recurrences bit-for-bit,
+   the float PageRank/PPR recurrences to ~ulp (identical per-edge
+   expressions, summation order differs) — at the default dial, at 0
+   (no probe), one below the probe size (the probe runs, then the
+   loop goes distributed) and exactly at it (driver finish).
 
 2. The r11 persist-without-unpersist sites (VERDICT r11 #1) were
    converted to persist→checkpoint-result→unpersist or RDD-scoped
@@ -17,6 +20,8 @@ Two families:
 """
 
 from __future__ import annotations
+
+from collections import Counter, defaultdict
 
 import pytest
 
@@ -33,80 +38,142 @@ EDGES = [
     (1, 2), (2, 3), (3, 1), (1, 3), (4, 3), (4, 1), (2, 1), (5, 4),
     (1, 2),  # parallel edge — weight-2 contribution
 ]
+# what each probe counts: distinct (src, dst) pairs for pagerank, ppr
+# and hits; the canonical undirected edge set for label propagation
+PAIRS = len(set(EDGES))
+CANONICAL = len({(min(e), max(e)) for e in EDGES if e[0] != e[1]})
+
+
+def _dials(probe_size):
+    return pytest.mark.parametrize(
+        "dial",
+        [None, 0, probe_size - 1, probe_size],
+        ids=["default", "zero", "below_probe", "at_probe"],
+    )
+
+
+def _dial(dial):
+    return {} if dial is None else {"driver_finish_edges": dial}
+
+
+def _ref_pagerank(edges, iterations, seeds=None, d=0.85):
+    nodes = {v for e in edges for v in e}
+    outdeg = Counter(u for u, _ in edges)
+    s = {
+        v: 1 / len(nodes) if seeds is None
+        else (1 / len(seeds) if v in seeds else 0.0)
+        for v in nodes
+    }
+    r = dict(s)
+    for _ in range(iterations):
+        inflow = defaultdict(float)
+        for u, v in edges:
+            inflow[v] += r[u] / outdeg[u]
+        r = {v: (1 - d) * s[v] + d * inflow[v] for v in nodes}
+    return r
+
+
+def _ref_hits(edges, iterations):
+    nodes = {v for e in edges for v in e}
+    dmax = max(Counter(v for e in edges for v in e).values())
+    h, a = {v: 1 << 30 for v in nodes}, {}
+    for _ in range(iterations):
+        a_in, h_in = Counter(), Counter()
+        for u, v in edges:
+            a_in[v] += h[u]
+        a = {v: a_in[v] // dmax for v in nodes}
+        for u, v in edges:
+            h_in[u] += a[v]
+        h = {v: h_in[v] // dmax for v in nodes}
+    return {v: (h[v], a[v]) for v in nodes}
+
+
+def _ref_lpa(edges, iterations):
+    nbrs = defaultdict(list)
+    for x, y in {(min(e), max(e)) for e in edges if e[0] != e[1]}:
+        nbrs[x].append(y)
+        nbrs[y].append(x)
+    label = {v: v for v in nbrs}
+    for _ in range(iterations):
+        label = {
+            v: min(
+                Counter(label[u] for u in ns).items(),
+                key=lambda kv: (-kv[1], kv[0]),
+            )[0]
+            for v, ns in nbrs.items()
+        }
+    return label
 
 
 class TestGraphDriverFinish:
-    def test_pagerank_paths_agree(self, spark):
+    @_dials(PAIRS)
+    def test_pagerank_paths_agree(self, spark, dial):
         df = spark.createDataFrame(EDGES, "src long, dst long")
-        drv = {
+        got = {
             r["node"]: r["rank"]
-            for r in G.pagerank(df, iterations=3).collect()
+            for r in G.pagerank(df, iterations=3, **_dial(dial)).collect()
         }
-        dist = {
-            r["node"]: r["rank"]
-            for r in G.pagerank(
-                df, iterations=3, driver_finish_edges=0
-            ).collect()
-        }
-        assert set(drv) == set(dist)
-        for v in dist:
-            assert drv[v] == pytest.approx(dist[v], abs=1e-12)
+        want = _ref_pagerank(EDGES, 3)
+        assert set(got) == set(want)
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12)
 
-    def test_ppr_paths_agree(self, spark):
+    @_dials(PAIRS)
+    def test_ppr_paths_agree(self, spark, dial):
         df = spark.createDataFrame(EDGES, "src long, dst long")
-        drv = {
+        got = {
             r["node"]: r["rank"]
             for r in G.personalized_pagerank(
-                df, seeds=[1, 4], iterations=3
+                df, seeds=[1, 4], iterations=3, **_dial(dial)
             ).collect()
         }
-        dist = {
-            r["node"]: r["rank"]
-            for r in G.personalized_pagerank(
-                df, seeds=[1, 4], iterations=3, driver_finish_edges=0
-            ).collect()
-        }
-        assert set(drv) == set(dist)
-        for v in dist:
-            assert drv[v] == pytest.approx(dist[v], abs=1e-12)
+        want = _ref_pagerank(EDGES, 3, seeds={1, 4})
+        assert set(got) == set(want)
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12)
 
-    def test_hits_paths_bit_identical(self, spark):
+    @_dials(PAIRS)
+    def test_hits_paths_bit_identical(self, spark, dial):
         df = spark.createDataFrame(EDGES, "src long, dst long")
-        drv = {
+        got = {
             r["node"]: (r["hub_u"], r["auth_u"])
-            for r in G.hits_scores(df, iterations=4).collect()
+            for r in G.hits_scores(df, iterations=4, **_dial(dial)).collect()
         }
-        dist = {
-            r["node"]: (r["hub_u"], r["auth_u"])
-            for r in G.hits_scores(
-                df, iterations=4, driver_finish_edges=0
-            ).collect()
-        }
-        assert drv == dist  # exact-integer recurrence: bit-identical
+        assert got == _ref_hits(EDGES, 4)  # exact-integer recurrence
 
-    def test_lpa_paths_bit_identical(self, spark):
+    @_dials(CANONICAL)
+    def test_lpa_paths_bit_identical(self, spark, dial):
         df = spark.createDataFrame(EDGES, "src long, dst long")
-        drv = {
-            r["node"]: r["label"]
-            for r in G.label_propagation(df, iterations=3).collect()
-        }
-        dist = {
+        got = {
             r["node"]: r["label"]
             for r in G.label_propagation(
-                df, iterations=3, driver_finish_edges=0
+                df, iterations=3, **_dial(dial)
             ).collect()
         }
-        assert drv == dist  # exact integer recurrence
+        assert got == _ref_lpa(EDGES, 3)  # exact integer recurrence
 
     def test_driver_path_missing_seed_raises(self, spark):
         df = spark.createDataFrame([(1, 2)], "src long, dst long")
         with pytest.raises(ValueError, match="absent"):
             G.personalized_pagerank(df, seeds=[99])
 
+    def test_distributed_path_missing_seed_raises(self, spark):
+        spark.catalog.clearCache()
+        df = spark.createDataFrame([(1, 2)], "src long, dst long")
+        with pytest.raises(ValueError, match="1 seed.* absent"):
+            G.personalized_pagerank(df, seeds=[2, 99], driver_finish_edges=0)
+        assert _cache_empty(spark)
+
     def test_driver_path_empty_raises(self, spark):
         df = spark.createDataFrame([], "src long, dst long")
         with pytest.raises(ValueError):
             G.pagerank(df)
+
+    @pytest.mark.parametrize("dial", [None, 0], ids=["default", "zero"])
+    def test_empty_raises_before_missing_seed(self, spark, dial):
+        df = spark.createDataFrame([], "src long, dst long")
+        with pytest.raises(ValueError, match="empty edge list"):
+            G.personalized_pagerank(df, seeds=[1], **_dial(dial))
 
 
 class TestNoCacheManagerResidue:
@@ -179,6 +246,13 @@ class TestNoCacheManagerResidue:
         G.personalized_pagerank(
             df, seeds=[1], iterations=2, driver_finish_edges=0
         ).collect()
+        # the probe runs, finds the graph above the dial and goes
+        # distributed: its persisted edge set must be released too
+        G.pagerank(df, iterations=2, driver_finish_edges=PAIRS - 1).collect()
+        for dial in (0, CANONICAL - 1):
+            G.label_propagation(
+                df, iterations=2, driver_finish_edges=dial
+            ).collect()
         assert _cache_empty(spark)
 
     def test_connected_components_releases_cache(self, spark):

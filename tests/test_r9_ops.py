@@ -563,15 +563,15 @@ class TestBmp:
     def test_catalog_kernel(self, spark):
         import hashlib
 
+        from inception_eventstore_spark.functions.local_df import local_df
         from inception_eventstore_spark.operators.multimodal import (
             bmp_catalog,
             decode_bmp,
             synthetic_bmp_asset_rows,
         )
-        from inception_eventstore_spark.plans.queries import _local_df
 
         rows = synthetic_bmp_asset_rows(8)
-        assets = _local_df(
+        assets = local_df(
             spark,
             [(i, bytearray(p)) for i, p in rows],
             "asset_id long, payload binary",

@@ -1809,10 +1809,11 @@ def _retrieval_map_inner(spark, sf_dir: str):
     """retrieval_map's un-checkpointed dataflow (the declared query
     eager-checkpoints its |queries|-row result, r12)."""
     from inception_eventstore_spark.operators.retrieval import retrieval_map
-    from inception_eventstore_spark.plans.queries import _local_df, _t
+    from inception_eventstore_spark.functions.local_df import local_df
+    from inception_eventstore_spark.plans.queries import _t
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [(1, ["spark", "merge", "key"]), (2, ["window", "batch"])],
         "query_id long, terms array<string>",
@@ -1824,10 +1825,11 @@ def _retrieval_ndcg_inner(spark, sf_dir: str):
     from inception_eventstore_spark.operators.retrieval import (
         retrieval_ndcg,
     )
-    from inception_eventstore_spark.plans.queries import _local_df, _t
+    from inception_eventstore_spark.functions.local_df import local_df
+    from inception_eventstore_spark.plans.queries import _t
 
     docs = _t(spark, sf_dir, "documents")
-    qdf = _local_df(
+    qdf = local_df(
         spark,
         [(1, ["spark", "merge", "key"]), (2, ["window", "batch"])],
         "query_id long, terms array<string>",
@@ -1849,9 +1851,9 @@ def _pagerank_iteration_plan(spark, sf_dir: str):
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    # driver_finish_edges=0 forces the DISTRIBUTED loop — this probe
-    # exists precisely to inspect the big-graph iteration DAG (the
-    # declared queries take the r12 driver finish below the dial)
+    # driver_finish_edges=0 forces the distributed loop — this probe
+    # exists to inspect the big-graph iteration DAG (the declared
+    # queries finish on the driver below the dial)
     return pagerank(j, iterations=2, checkpoint=False,
                     driver_finish_edges=0)
 
@@ -1870,8 +1872,8 @@ def _lpa_iteration_plan(spark, sf_dir: str):
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    # driver_finish_edges=0 forces the DISTRIBUTED loop (the declared
-    # queries take the r12 driver finish below the dial)
+    # driver_finish_edges=0 forces the distributed loop (the declared
+    # queries finish on the driver below the dial)
     return label_propagation(j, iterations=2, checkpoint=False,
                              driver_finish_edges=0)
 
@@ -2249,7 +2251,7 @@ EXTRA_CHECKS = [
             ("message passing is a key equi-join, never nested-loop",
              "!CartesianProduct|BroadcastNestedLoopJoin"),
             ("small-n rank table broadcasts — cached edges never "
-             "shuffle per iteration (r8)", r"BroadcastHashJoin"),
+             "shuffle per iteration", r"BroadcastHashJoin"),
             ("no python UDF in the path", "!BatchEvalPython|ArrowEvalPython"),
         ],
     ),

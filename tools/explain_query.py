@@ -1,6 +1,6 @@
 """Dump the executed physical plan + explain("formatted") of one or
-more declared queries to files — the before/after plan evidence the
-optimization rounds commit under plans/r<N>/.
+more declared queries to files — before/after plan evidence for a
+plan-affecting change.
 
 Usage: python tools/explain_query.py <out_dir> <suffix> name1[,name2,...] [sf_dir]
 

@@ -91,10 +91,18 @@ def main() -> None:
     n_window = store.replay(PlayerOptions(after=bounds["lo"], before=mid)).count()
     timings["r9_replay_window"] = round(time.time() - t0, 3)
 
-    # R10: full grouped replay
+    # R10: full grouped replay, timed through one aggregate that reads
+    # the commit arrays — a bare .count() lets Catalyst prune them (and
+    # the private/public split) out of the plan. Every envelope row
+    # lands in exactly one of the two arrays.
     t0 = time.time()
-    n_groups = store.replay_grouped().count()
+    r10 = store.replay_grouped().agg(
+        F.count("*").alias("commits"),
+        F.sum(F.size("events") + F.size("public_events")).alias("events"),
+    ).first()
     timings["r10_replay_grouped"] = round(time.time() - t0, 3)
+    n_groups = int(r10["commits"])
+    assert int(r10["events"]) == n_rows, (r10["events"], n_rows)
 
     # R11: index-driven replay of one type over half the time range
     idx = IndexByEventTypeStore(spark, lay)
