@@ -13,13 +13,16 @@ operator, not driver serialization.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def local_df(
-    spark: SparkSession, rows, schema: str, slices: int | None = None
+    spark: SparkSession, rows, schema: str | StructType,
+    slices: int | None = None,
 ) -> DataFrame:
-    """``rows`` as a DataFrame of ``schema`` in ``slices`` partitions;
-    by default one slice per 500k rows (one slice below 500k)."""
+    """``rows`` as a DataFrame of ``schema`` (a DDL string or a
+    StructType) in ``slices`` partitions; by default one slice per 500k
+    rows (one slice below 500k)."""
     rows = list(rows)
     if slices is None:
         slices = max(1, len(rows) // 500_000 + 1)

@@ -38,19 +38,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inception_eventstore_spark.functions.local_df import local_df
+
 _PID = "_gr_pid"
 _OFF = "_gr_off"
-
-
-def _driver_df(spark, rows, schema):
-    """Offset/total frames are driver-built and tiny (≤ shards·groups
-    rows) but ``createDataFrame(list)`` shards them into
-    defaultParallelism (32) pickled slices — every broadcast build then
-    pays one python-deserializer round-trip PER SLICE (the
-    lesson of functions/local_df.py). Pin to ONE slice."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), 1), schema
-    )
 
 
 def sharded_running_sums(
@@ -107,9 +98,10 @@ def sharded_running_sums(
         for c in sum_cols:
             acc[c] += int(r[c] or 0)
     off_names = [f"_off_{c}" for c in sum_cols]
-    off_df = _driver_df(
+    off_df = local_df(
         spark, out_rows,
         f"{_PID} int, " + ", ".join(f"{n} long" for n in off_names),
+        slices=1,
     )
     w = (
         Window.partitionBy(_PID)
@@ -180,7 +172,7 @@ def sharded_running_max(
         out_rows.append((int(r[_PID]), acc))
         if r["_m"] is not None and (acc is None or int(r["_m"]) > acc):
             acc = int(r["_m"])
-    off_df = _driver_df(spark, out_rows, f"{_PID} int, {_OFF} long")
+    off_df = local_df(spark, out_rows, f"{_PID} int, {_OFF} long", slices=1)
     end = -1 if exclusive else 0
     w = (
         Window.partitionBy(_PID)
@@ -249,7 +241,7 @@ def grouped_row_number(
     off_schema = parts.select(
         F.col(_PID), *grp, F.lit(0).cast("long").alias(_OFF)
     ).schema
-    off_df = _driver_df(spark, out_rows, off_schema)
+    off_df = local_df(spark, out_rows, off_schema, slices=1)
     w = Window.partitionBy(_PID, *group_cols).orderBy(*order_cols)
     ranked = (
         parts.join(F.broadcast(off_df), [_PID, *group_cols])
@@ -265,7 +257,7 @@ def grouped_row_number(
             tot_schema = parts.select(
                 *grp, F.lit(0).cast("long").alias(with_group_count)
             ).schema
-            tot_df = _driver_df(spark, tot_rows, tot_schema)
+            tot_df = local_df(spark, tot_rows, tot_schema, slices=1)
             ranked = ranked.join(F.broadcast(tot_df), group_cols)
         else:
             n = tot_rows[0][0] if tot_rows else 0

@@ -63,8 +63,12 @@ class MessageCounter:
     def get_count(self, msgid: str) -> int:
         """C3: current value, 0 if absent (reference: MessageCounter.cs:87-111).
 
-        One msgid's deltas are few: they are summed in one partition, so
-        the read is one Spark stage with no exchange."""
+        A local store's deltas are summed on the driver; on Spark, one
+        msgid's deltas are few: they are summed in one partition, so the
+        read is one Spark stage with no exchange."""
+        n = self.layout.driver_counter_sum(self.spark, msgid)
+        if n is not None:
+            return n
         row = (
             self.layout.read_counter_deltas(self.spark)
             .where(F.col("msgid") == msgid)

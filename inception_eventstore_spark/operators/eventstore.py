@@ -2,14 +2,25 @@
 
 Spark-first re-expression of the reference's CassandraEventStore
 (reference: src/One.Inception.EventStore.Cassandra/CassandraEventStore.cs):
-appends are bulk DataFrame writes; loads are Catalyst-pruned scans;
-replay is a single filtered/grouped job; the index-driven replay is a
-broadcast-hash join instead of a client-side index-nested-loop.
+appends are bulk DataFrame writes; ``load_aggregate`` and the replays
+are Catalyst-pruned scans; replay is a single filtered/grouped job; the
+index-driven replay is a broadcast-hash join instead of a client-side
+index-nested-loop.
+
+The reads that return Python values rather than a DataFrame
+(``load_event_raw``/``load_event``, ``load_with_paging`` and
+``replay_chunked`` here; ``IndexByEventTypeStore.get_paged`` and
+``MessageCounter.get_count`` likewise) are served on the driver by the
+layout's Arrow reader when the store is on the local file system and the row groups
+the read's filter keeps, plus the tombstones, fit
+``layout.DRIVER_READ_MAX_BYTES``: no Spark job, the same Rows. Any
+other store (hdfs:/, s3a:/), a larger read, or a dial of 0 takes the
+Spark scan below, as do snapshot reads.
 
 The on-disk format of every store (paths, schemas, bucket and (et, pid)
 directories, sort orders, the tombstone log) belongs to
 ``sources/layout.EventStoreLayout``; this module decides what to read
-and write through it, and every load and replay is one
+and write through it, and every Spark load and replay is one
 tombstone-filtered scan (``EventStore._scan``).
 
 Physical design for 100 TB:
@@ -32,13 +43,14 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Callable, Iterable
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from inception_eventstore_spark import schemas
 from inception_eventstore_spark.functions.commits import explode_commits, group_commits
-from inception_eventstore_spark.functions.paging import PagingToken
+from inception_eventstore_spark.functions.paging import PagingToken, after_key
 from inception_eventstore_spark.functions.partitions import pid_col_from_filetime
 from inception_eventstore_spark.sources import fsutil
 from inception_eventstore_spark.sources.layout import (
@@ -84,6 +96,17 @@ def _in_window(df: DataFrame, options: PlayerOptions) -> DataFrame:
     if options.before is not None:
         df = df.where(F.col("ts") <= options.before)
     return df
+
+
+def _arrow_window(options: PlayerOptions) -> ds.Expression | None:
+    """``_in_window`` as an Arrow filter (None when unbounded)."""
+    window = None
+    if options.after is not None:
+        window = ds.field("ts") >= options.after
+    if options.before is not None:
+        upper = ds.field("ts") <= options.before
+        window = upper if window is None else window & upper
+    return window
 
 
 def _require_event_type(options: PlayerOptions) -> None:
@@ -437,9 +460,34 @@ class EventStore:
         Deterministic value-based token = last (rev, pos) (SURVEY §4
         replaces Cassandra's opaque PagingState, PagingInfo.cs:54-92).
         Returns (rows, next_token)."""
-        df = self._scan([aid]).select("rev", "pos", "ts", "data")
         keys = (token.keys if token else {}) or {}
         last_rev, last_pos = keys.get("rev"), keys.get("pos")
+        direction = "descending" if descending else "ascending"
+        rows = self.layout.driver_events(
+            self.spark, aid, ("rev", "pos", "ts", "data"),
+            where=None if last_rev is None else after_key(
+                ("rev", "pos"), (last_rev, last_pos), descending
+            ),
+            order=(("rev", direction), ("pos", direction)),
+            limit=take + 1,
+        )
+        if rows is None:
+            rows = self._page_on_spark(aid, take, last_rev, last_pos,
+                                       descending)
+        has_more = len(rows) > take
+        rows = rows[:take]
+        if rows:
+            next_token = PagingToken(
+                keys={"rev": rows[-1]["rev"], "pos": rows[-1]["pos"]},
+                has_more=has_more,
+            )
+        else:
+            next_token = PagingToken(keys=keys, has_more=False)
+        return rows, next_token
+
+    def _page_on_spark(self, aid: bytes, take: int, last_rev, last_pos,
+                       descending: bool) -> list:
+        df = self._scan([aid]).select("rev", "pos", "ts", "data")
         if last_rev is not None:
             boundary = (F.col("rev") < last_rev) if descending else (
                 F.col("rev") > last_rev
@@ -453,28 +501,24 @@ class EventStore:
             if descending
             else [F.col("rev").asc(), F.col("pos").asc()]
         )
-        rows = df.orderBy(*order).limit(take + 1).collect()
-        has_more = len(rows) > take
-        rows = rows[:take]
-        if rows:
-            next_token = PagingToken(
-                keys={"rev": rows[-1]["rev"], "pos": rows[-1]["pos"]},
-                has_more=has_more,
-            )
-        else:
-            next_token = PagingToken(keys=keys, has_more=False)
-        return rows, next_token
+        return df.orderBy(*order).limit(take + 1).collect()
 
     def load_event_raw(self, aid: bytes, rev: int, pos: int):
         """R6: point lookup (reference: CassandraEventStore.cs:177-193).
         Returns a Row or None."""
-        rows = (
-            self._scan([aid])
-            .where((F.col("rev") == rev) & (F.col("pos") == pos))
-            .select("data", "ts")
-            .limit(1)
-            .collect()
+        rows = self.layout.driver_events(
+            self.spark, aid, ("data", "ts"),
+            where=(ds.field("rev") == rev) & (ds.field("pos") == pos),
+            limit=1,
         )
+        if rows is None:
+            rows = (
+                self._scan([aid])
+                .where((F.col("rev") == rev) & (F.col("pos") == pos))
+                .select("data", "ts")
+                .limit(1)
+                .collect()
+            )
         return rows[0] if rows else None
 
     def load_event(self, aid: bytes, rev: int, pos: int,
@@ -729,30 +773,38 @@ class EventStore:
 
         The reference enumerates Cassandra partitions page-wise and
         surfaces the paging state through ``onPagingInfoChanged``
-        (CassandraEventStore.cs:416-472); the Spark analog of a "page"
-        is a bucket directory — each chunk is a partition-pruned scan,
-        and the token (last completed bucket) makes the whole replay
-        resumable after a crash: pass it back as ``resume_token`` and
-        completed buckets are never re-read. Callback exceptions are
-        swallowed, mirroring HandlePaginationStateChangesAsync.
+        (CassandraEventStore.cs:416-472); the analog of a "page" here is
+        a bucket directory, and the token (last completed bucket) makes
+        the whole replay resumable after a crash: pass it back as
+        ``resume_token`` and completed buckets are never re-read.
+        Callback exceptions are swallowed, mirroring
+        HandlePaginationStateChangesAsync. The order of rows inside a
+        bucket is unspecified.
 
-        Driver memory is bounded by ``chunk_rows`` (plus one in-flight
-        executor partition): each bucket streams through
-        ``toLocalIterator(prefetchPartitions=False)`` — never a
-        full-bucket ``collect`` — matching the reference's page-wise
-        ``IAsyncEnumerable`` contract (CassandraEventStore.cs:416-460)
-        where a page, not a partition, is the unit held in memory."""
+        Driver memory is bounded by ``chunk_rows`` plus one row group,
+        never a whole bucket, matching the reference's page-wise
+        ``IAsyncEnumerable`` contract (CassandraEventStore.cs:416-460):
+        a local bucket streams through the layout's Arrow reader one
+        record batch at a time with the ts window pushed down to row
+        groups, and a bucket the reader does not serve (see the module
+        docstring) streams from a partition-pruned Spark scan one
+        partition at a time."""
         from inception_eventstore_spark.functions.paging import decode_token
 
         options = options or PlayerOptions()
         start_after = -1
         if resume_token is not None:
             start_after = decode_token(resume_token).keys.get("bucket", -1)
+        window = _arrow_window(options)
         for bucket in range(start_after + 1, self.layout.n_buckets):
-            df = _in_window(self._scan(buckets=[bucket]), options)
+            rows = self.layout.driver_bucket_rows(self.spark, bucket, window)
+            if rows is None:
+                rows = _in_window(
+                    self._scan(buckets=[bucket]), options
+                ).toLocalIterator(prefetchPartitions=False)
             n_rows = 0
             chunk: list = []
-            for r in df.toLocalIterator(prefetchPartitions=False):
+            for r in rows:
                 chunk.append(r)
                 if len(chunk) >= chunk_rows:
                     n_rows += len(chunk)

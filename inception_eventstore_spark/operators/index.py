@@ -15,12 +15,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inception_eventstore_spark.functions.filetime import datetime_to_filetime
-from inception_eventstore_spark.functions.paging import PagingToken
+from inception_eventstore_spark.functions.paging import PagingToken, after_key
 from inception_eventstore_spark.functions.partitions import (
     pid_col_from_filetime,
     pid_from_filetime,
 )
 from inception_eventstore_spark.sources.layout import EventStoreLayout
+
+
+#: The keyset order of an (et, pid) partition's rows (X2).
+_PAGE_KEY = ("ts", "aid", "rev", "pos")
 
 
 def _require_et(et: str | None) -> None:
@@ -57,32 +61,26 @@ class IndexByEventTypeStore:
         return (
             self.index_df()
             .where((F.col("et") == et) & (F.col("pid") == pid))
-            .orderBy("ts", "aid", "rev", "pos")
+            .orderBy(*_PAGE_KEY)
         )
 
     def get_paged(self, et: str, pid: int, page_size: int,
                   token: PagingToken | None = None) -> tuple[list, PagingToken]:
         """X2 paged form with a deterministic keyset token
         (pid, ts, aid, rev, pos) — replaces the reference's opaque
-        driver paging state (:138-170)."""
-        df = self.get(et, pid)
+        driver paging state (:138-170). A local partition is paged on
+        the driver by the layout's Arrow reader (no Spark job); see
+        ``EventStoreLayout.driver_index``."""
         keys = (token.keys if token else {}) or {}
-        if "ts" in keys:
-            df = df.where(
-                (F.col("ts") > keys["ts"])
-                | (
-                    (F.col("ts") == keys["ts"])
-                    & (
-                        F.struct("aid", "rev", "pos")
-                        > F.struct(
-                            F.lit(keys["aid"]).alias("aid"),
-                            F.lit(keys["rev"]).alias("rev"),
-                            F.lit(keys["pos"]).alias("pos"),
-                        )
-                    )
-                )
-            )
-        rows = df.limit(page_size + 1).collect()
+        rows = self.layout.driver_index(
+            self.spark, et, pid,
+            where=after_key(_PAGE_KEY, tuple(keys[k] for k in _PAGE_KEY))
+            if "ts" in keys else None,
+            order=tuple((k, "ascending") for k in _PAGE_KEY),
+            limit=page_size + 1,
+        )
+        if rows is None:
+            rows = self._page_on_spark(et, pid, page_size, keys)
         has_more = len(rows) > page_size
         rows = rows[:page_size]
         if rows:
@@ -100,6 +98,26 @@ class IndexByEventTypeStore:
         else:
             next_token = PagingToken(keys=keys, has_more=False)
         return rows, next_token
+
+    def _page_on_spark(self, et: str, pid: int, page_size: int,
+                       keys: dict) -> list:
+        df = self.get(et, pid)
+        if "ts" in keys:
+            df = df.where(
+                (F.col("ts") > keys["ts"])
+                | (
+                    (F.col("ts") == keys["ts"])
+                    & (
+                        F.struct("aid", "rev", "pos")
+                        > F.struct(
+                            F.lit(keys["aid"]).alias("aid"),
+                            F.lit(keys["rev"]).alias("rev"),
+                            F.lit(keys["pos"]).alias("pos"),
+                        )
+                    )
+                )
+            )
+        return df.limit(page_size + 1).collect()
 
     def records(self, et: str, after: int | None = None,
                 before: int | None = None) -> DataFrame:

@@ -485,11 +485,7 @@ def quantile_normalize(
     §2.4: shuffles share an exchange when keyed the same way). Ranks
     are identical rank-for-rank, so the oracle hash-match is unchanged.
     """
-    from inception_eventstore_spark.functions.ranking import (
-        _OFF,
-        _PID,
-        _driver_df,
-    )
+    from inception_eventstore_spark.functions.ranking import _OFF, _PID
 
     spark = scored.sparkSession
     if num_shards is None:
@@ -534,13 +530,13 @@ def quantile_normalize(
     off_schema = parts.select(
         F.col(_PID), F.col("_g"), F.lit(0).cast("long").alias(_OFF)
     ).schema
-    off_df = _driver_df(spark, grp_rows, off_schema)
-    goff_df = _driver_df(spark, glob_rows, f"{_PID} int, _goff long")
+    off_df = local_df(spark, grp_rows, off_schema, slices=1)
+    goff_df = local_df(spark, glob_rows, f"{_PID} int, _goff long", slices=1)
     ng_rows = [(k, int(n)) for k, n in grp_off.items()]
     ng_schema = parts.select(
         F.col("_g"), F.lit(0).cast("long").alias("_ng")
     ).schema
-    ng_df = _driver_df(spark, ng_rows, ng_schema)
+    ng_df = local_df(spark, ng_rows, ng_schema, slices=1)
     w_grp = Window.partitionBy(_PID, "_g").orderBy(*order_cols)
     w_glob = Window.partitionBy(_PID).orderBy(*order_cols)
     ranked = (

@@ -22,13 +22,19 @@ and write their stores only through it.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import weakref
 from dataclasses import dataclass, field
+from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.types import _create_row
 
 from inception_eventstore_spark import schemas
 from inception_eventstore_spark.functions import hashing
@@ -64,6 +70,176 @@ TOMBSTONE_SCHEMA = T.StructType(
 _ESCAPED_CHARS = frozenset(map(chr, range(1, 32))) | frozenset(
     "\"#%'*/:=?[\\]^{\x7f"
 )
+
+
+#: The driver-local reader serves a read itself when the bytes of the
+#: row groups its filter's statistics keep, plus the tombstones it
+#: folds, are at most this many; larger reads, and every read when this
+#: is 0 or less, run on Spark.
+DRIVER_READ_MAX_BYTES = 64 * 1024 * 1024
+
+_ARROW_TYPES = {
+    T.BinaryType(): pa.binary(),
+    T.IntegerType(): pa.int32(),
+    T.LongType(): pa.int64(),
+    T.StringType(): pa.string(),
+}
+
+
+def _arrow_schema(schema: T.StructType, *names: str) -> pa.Schema:
+    """The Arrow form of ``schema``'s ``names`` fields."""
+    return pa.schema(
+        [(f.name, _ARROW_TYPES[f.dataType]) for f in schema.fields
+         if f.name in names]
+    )
+
+
+_EVENTS_ARROW = _arrow_schema(schemas.EVENTS_SCHEMA, "id", "rev", "pos",
+                              "ts", "data")
+_TOMBSTONE_ARROW = _arrow_schema(TOMBSTONE_SCHEMA, "id", "rev", "pos")
+_INDEX_ARROW = _arrow_schema(schemas.INDEX_SCHEMA, "aid", "rev", "pos", "ts")
+_COUNTER_ARROW = _arrow_schema(schemas.COUNTER_SCHEMA, "msgid", "cv")
+
+
+def _split_scheme(path: str) -> tuple[str | None, str]:
+    """(scheme, rest) as Hadoop's ``Path`` splits a path string: a colon
+    before the first slash ends a scheme."""
+    colon, slash = path.find(":"), path.find("/")
+    if colon != -1 and (slash == -1 or colon < slash):
+        return path[:colon].lower(), path[colon + 1:]
+    return None, path
+
+
+def local_path(path: str, default_fs: str) -> str | None:
+    """The local file-system path that ``path`` names, or None when it
+    resolves anywhere else: a ``file:`` URI, or an absolute path with no
+    scheme under a ``file:`` default file system (``fs.defaultFS``), is
+    local; ``hdfs:``, ``s3a:`` and any other scheme are not. Relative
+    paths are None too: Hadoop resolves them against the JVM's working
+    directory, not this process's."""
+    scheme, rest = _split_scheme(path)
+    if scheme is None and _split_scheme(default_fs)[0] != "file":
+        return None
+    if scheme not in (None, "file"):
+        return None
+    if rest.startswith("//"):
+        authority, _, tail = rest[2:].partition("/")
+        if authority not in ("", "localhost"):
+            return None
+        rest = "/" + tail
+    return rest if rest.startswith("/") else None
+
+
+def _local_data_files(root: str) -> list[str]:
+    """Data files under the local directory ``root`` by Spark's
+    discovery rule (``fsutil._hidden_name``): ``.crc``, ``_SUCCESS`` and
+    ``_temporary/`` are skipped. [] when ``root`` does not exist."""
+    out = []
+    for dirpath, dirnames, files in os.walk(root):
+        dirnames[:] = sorted(d for d in dirnames if not fsutil._hidden_name(d))
+        out.extend(os.path.join(dirpath, f) for f in sorted(files)
+                   if not fsutil._hidden_name(f))
+    return out
+
+
+def _pruned(root: str, schema: pa.Schema,
+            where: ds.Expression | None) -> tuple[ds.Dataset | None, int]:
+    """The row groups of ``root``'s files whose statistics do not rule
+    out ``where``, as a dataset (None when there are none), and their
+    uncompressed bytes."""
+    files = _local_data_files(root)
+    if not files:
+        return None, 0
+    whole = ds.dataset(files, schema=schema, format="parquet")
+    groups = [
+        rg
+        for frag in whole.get_fragments()
+        for rg in frag.split_by_row_group(filter=where, schema=schema)
+    ]
+    if not groups:
+        return None, 0
+    nbytes = sum(rg.row_groups[0].total_byte_size for rg in groups)
+    return ds.FileSystemDataset(groups, schema, whole.format,
+                                whole.filesystem), nbytes
+
+
+def _table(pruned: ds.Dataset | None, schema: pa.Schema,
+           where: ds.Expression | None) -> pa.Table:
+    if pruned is None:
+        return schema.empty_table()
+    return pruned.to_table(filter=where, use_threads=False)
+
+
+def _keys(table: pa.Table) -> Iterator[tuple]:
+    """The (id, rev, pos) key of each row of ``table``."""
+    return zip(*(_column(table.column(c), bytes)
+                 for c in TOMBSTONE_SCHEMA.names))
+
+
+def _live(table: pa.Table, dead: set) -> pa.Table:
+    """``table`` without its rows whose key is in ``dead``."""
+    if not dead or table.num_rows == 0:
+        return table
+    return table.filter(pa.array([k not in dead for k in _keys(table)]))
+
+
+def _stream(pruned: ds.Dataset | None, where: ds.Expression | None,
+            dead: set, binary: type) -> Iterator[Row]:
+    """The live rows of ``pruned`` one record batch at a time, so at
+    most one row group is decoded at once (no readahead)."""
+    if pruned is None:
+        return
+    scanner = pruned.scanner(filter=where, batch_readahead=0,
+                             fragment_readahead=0, use_threads=False)
+    for batch in scanner.to_batches():
+        yield from _rows(_live(pa.Table.from_batches([batch]), dead),
+                         tuple(_EVENTS_ARROW.names), binary)
+
+
+def _column(col: pa.ChunkedArray, binary: type) -> list:
+    """One column's Python values as a collect returns them."""
+    # through numpy: an order of magnitude faster than to_pylist, and
+    # the same values when nothing is null
+    vals = col.to_numpy().tolist() if col.null_count == 0 else col.to_pylist()
+    if binary is not bytes and pa.types.is_binary(col.type):
+        vals = [None if v is None else binary(v) for v in vals]
+    return vals
+
+
+def _rows(table: pa.Table, fields: tuple[str, ...], binary: type,
+          values: dict | None = None) -> list[Row]:
+    """``table`` as the ``Row``s a Spark collect of ``fields`` returns,
+    built by the function a collect builds them with; binary values as
+    ``binary`` (``bytes`` or ``bytearray``), and a field named in
+    ``values`` (a directory value) holds that value on every row."""
+    values = values or {}
+    columns = [
+        itertools.repeat(values[name], table.num_rows) if name in values
+        else _column(table.column(name), binary)
+        for name in fields
+    ]
+    names = list(fields)
+    return [_create_row(names, v) for v in zip(*columns)]
+
+
+#: Each SparkContext's ``fs.defaultFS``, read once: Spark copies its
+#: Hadoop settings into the context when the context starts.
+_DEFAULT_FS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _default_fs(spark: SparkSession) -> str:
+    sc = spark.sparkContext
+    if sc not in _DEFAULT_FS:
+        _DEFAULT_FS[sc] = sc._jsc.hadoopConfiguration().get("fs.defaultFS") or ""
+    return _DEFAULT_FS[sc]
+
+
+def _binary_type(spark: SparkSession) -> type:
+    """What a collect returns binary values as in this session: ``bytes``,
+    or ``bytearray`` when ``spark.sql.execution.pyspark.binaryAsBytes``
+    is off."""
+    on = spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes")
+    return bytes if on.lower() == "true" else bytearray
 
 
 def escape_path_name(value: str) -> str:
@@ -143,6 +319,19 @@ class EventStoreLayout:
     partition value keeps its declared type (event type ``"007"`` stays
     a string). Index, counter and message reads of a store holding no
     data return an empty DataFrame with the canonical schema.
+
+    Small reads that end in Python values have a second, driver-local
+    reader built on ``pyarrow.dataset`` (``driver_events``,
+    ``driver_bucket_rows``, ``driver_index``, ``driver_counter_sum``).
+    It reads one bucket directory, one (et, pid) directory or the
+    counter deltas, prunes row groups by the filter's parquet
+    statistics, folds the tombstones out, skips hidden files by Spark's
+    rule and supplies the directory values itself, returning the Rows a
+    Spark collect would. One dial picks the path: the store must
+    resolve to the local file system (``local_path``) and the kept row
+    groups plus the tombstones must fit ``DRIVER_READ_MAX_BYTES``;
+    otherwise each method returns None and the caller reads through
+    Spark.
     """
 
     warehouse: str
@@ -285,6 +474,105 @@ class EventStoreLayout:
         return _read(
             spark, self.message_store_path, schemas.MESSAGE_STORE_SCHEMA
         )
+
+    # -- driver-local reads: each returns None when the read belongs to
+    # Spark (a non-local path, or more bytes than DRIVER_READ_MAX_BYTES)
+    def _local_roots(self, spark: SparkSession,
+                     *paths: str) -> list[str] | None:
+        if DRIVER_READ_MAX_BYTES <= 0:
+            return None
+        default_fs = _default_fs(spark)
+        roots = [local_path(p, default_fs) for p in paths]
+        return None if None in roots else roots
+
+    def _events_source(self, spark: SparkSession, bucket: int,
+                       where: ds.Expression | None,
+                       dead_where: ds.Expression | None):
+        """(pruned events of ``bucket``, dead keys) when the read fits
+        the dial, else None; ``dead_where`` selects the tombstones."""
+        roots = self._local_roots(spark, self.bucket_path(bucket),
+                                  self.tombstones_path)
+        if roots is None:
+            return None
+        events, n_events = _pruned(roots[0], _EVENTS_ARROW, where)
+        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, dead_where)
+        if n_events + n_tombs > DRIVER_READ_MAX_BYTES:
+            return None
+        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, dead_where)))
+        return events, dead
+
+    def driver_events(self, spark: SparkSession, aid: bytes,
+                      fields: tuple[str, ...],
+                      where: ds.Expression | None = None,
+                      order: tuple = (), limit: int | None = None
+                      ) -> list[Row] | None:
+        """Live rows of aggregate ``aid`` read on the driver, as the
+        ``Row``s of ``fields`` a Spark collect returns: ``where`` (an
+        Arrow expression over the envelope columns) filters them,
+        ``order`` (``(column, "ascending" | "descending")`` pairs) sorts
+        them and ``limit`` cuts them. None when the read belongs to
+        Spark."""
+        aid = bytes(aid)
+        key = ds.field("id") == pa.scalar(aid, pa.binary())
+        where = key if where is None else key & where
+        source = self._events_source(spark, self.bucket_of(aid), where, key)
+        if source is None:
+            return None
+        events, dead = source
+        table = _live(_table(events, _EVENTS_ARROW, where), dead)
+        if order:
+            table = table.sort_by(list(order))
+        if limit is not None:
+            table = table.slice(0, limit)
+        return _rows(table, fields, _binary_type(spark))
+
+    def driver_bucket_rows(self, spark: SparkSession, bucket: int,
+                           where: ds.Expression | None
+                           ) -> Iterator[Row] | None:
+        """Live rows of one bucket that match ``where``, streamed on the
+        driver as (id, rev, pos, ts, data) ``Row``s; None when the read
+        belongs to Spark."""
+        source = self._events_source(spark, bucket, where, None)
+        if source is None:
+            return None
+        events, dead = source
+        return _stream(events, where, dead, _binary_type(spark))
+
+    def driver_index(self, spark: SparkSession, et: str, pid: int,
+                     where: ds.Expression | None, order: tuple,
+                     limit: int) -> list[Row] | None:
+        """Rows of one (et, pid) index directory read on the driver, as
+        the ``Row``s of a Spark collect of the index (``et`` and ``pid``
+        are the directory's values): filtered by ``where``, sorted by
+        ``order``, cut to ``limit``. None when the read belongs to
+        Spark."""
+        if not (isinstance(et, str) and isinstance(pid, int)):
+            return None
+        roots = self._local_roots(spark, self.index_partition_path(et, pid))
+        if roots is None:
+            return None
+        rows, nbytes = _pruned(roots[0], _INDEX_ARROW, where)
+        if nbytes > DRIVER_READ_MAX_BYTES:
+            return None
+        table = _table(rows, _INDEX_ARROW, where).sort_by(list(order))
+        return _rows(table.slice(0, limit), tuple(schemas.INDEX_SCHEMA.names),
+                     _binary_type(spark), {"et": et, "pid": pid})
+
+    def driver_counter_sum(self, spark: SparkSession,
+                           msgid: str) -> int | None:
+        """Σ cv of ``msgid``'s counter deltas read on the driver (0 when
+        it has none); None when the read belongs to Spark."""
+        if not isinstance(msgid, str):
+            return None
+        roots = self._local_roots(spark, self.counter_path)
+        if roots is None:
+            return None
+        where = ds.field("msgid") == msgid
+        deltas, nbytes = _pruned(roots[0], _COUNTER_ARROW, where)
+        if nbytes > DRIVER_READ_MAX_BYTES:
+            return None
+        cv = _table(deltas, _COUNTER_ARROW, where).column("cv")
+        return sum(cv.to_pylist())
 
     # -- snapshots (time travel over the events store)
     def snapshots(self, spark: SparkSession) -> SnapshotLog:

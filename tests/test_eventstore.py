@@ -270,8 +270,10 @@ def _jobs_of(spark, action) -> int:
 
 
 class TestSingleKeyReadsOneStage:
-    """A read of one aggregate or one counter is one Spark job: the scan
-    is one partition, so grouping and ordering it need no exchange."""
+    """On Spark, a read of one aggregate or one counter is one Spark job:
+    the scan is one partition, so grouping and ordering it need no
+    exchange. On a local store the driver serves the Python-valued reads
+    itself and launches no job; ``load_aggregate`` stays a DataFrame."""
 
     @pytest.fixture()
     def bucketed(self, spark, tmp_path):
@@ -291,13 +293,16 @@ class TestSingleKeyReadsOneStage:
             )
         return store, aids
 
+    @pytest.mark.parametrize("path", ["spark", "driver"])
     @pytest.mark.parametrize(
         "read",
         ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
     )
-    def test_one_job(self, spark, bucketed, read):
+    def test_one_job(self, spark, bucketed, read, path, monkeypatch):
         from inception_eventstore_spark.operators.counters import MessageCounter
 
+        if path == "spark":
+            monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)
         store, aids = bucketed
         counter = MessageCounter(spark, store.layout)
         action = {
@@ -306,7 +311,8 @@ class TestSingleKeyReadsOneStage:
             "load_with_paging": lambda: store.load_with_paging(aids[0], 1),
             "get_count": lambda: counter.get_count("type-a"),
         }[read]
-        assert _jobs_of(spark, action) == 1
+        spark_only = path == "spark" or read == "load_aggregate"
+        assert _jobs_of(spark, action) == (1 if spark_only else 0)
 
     def test_load_aggregate_plan_has_no_exchange(self, bucketed):
         store, aids = bucketed
