@@ -293,26 +293,34 @@ class TestSingleKeyReadsOneStage:
             )
         return store, aids
 
-    @pytest.mark.parametrize("path", ["spark", "driver"])
-    @pytest.mark.parametrize(
-        "read",
-        ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
-    )
-    def test_one_job(self, spark, bucketed, read, path, monkeypatch):
+    @staticmethod
+    def _read(spark, bucketed, read):
         from inception_eventstore_spark.operators.counters import MessageCounter
 
-        if path == "spark":
-            monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)
         store, aids = bucketed
         counter = MessageCounter(spark, store.layout)
-        action = {
+        return {
             "load_aggregate": lambda: store.load_aggregate(aids[0]).collect(),
             "load_event_raw": lambda: store.load_event_raw(aids[0], 1, 0),
             "load_with_paging": lambda: store.load_with_paging(aids[0], 1),
             "get_count": lambda: counter.get_count("type-a"),
         }[read]
-        spark_only = path == "spark" or read == "load_aggregate"
-        assert _jobs_of(spark, action) == (1 if spark_only else 0)
+
+    @pytest.mark.parametrize(
+        "read",
+        ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
+    )
+    def test_one_job(self, spark, bucketed, read, monkeypatch):
+        monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)  # force the Spark path
+        assert _jobs_of(spark, self._read(spark, bucketed, read)) == 1
+
+    @pytest.mark.parametrize(
+        "read",
+        ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
+    )
+    def test_driver_path_jobs(self, spark, bucketed, read):
+        expected = 1 if read == "load_aggregate" else 0
+        assert _jobs_of(spark, self._read(spark, bucketed, read)) == expected
 
     def test_load_aggregate_plan_has_no_exchange(self, bucketed):
         store, aids = bucketed
