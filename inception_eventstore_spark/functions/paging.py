@@ -17,8 +17,6 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
-import pyarrow.dataset as ds
-
 
 @dataclass(frozen=True)
 class PagingToken:
@@ -51,17 +49,3 @@ def decode_token(encoded: str | None) -> PagingToken:
         for k, v in (payload.get("Token") or {}).items()
     }
     return PagingToken(keys=keys, has_more=bool(payload.get("HasMore", True)))
-
-
-def after_key(names: tuple[str, ...], values: tuple,
-              descending: bool = False) -> ds.Expression:
-    """Arrow filter for the rows whose ``names`` columns come after the
-    token's ``values`` in the keyset order: lexicographic, ascending or
-    ``descending`` on every column (binary compares unsigned, as in
-    Spark)."""
-    expr = None
-    for name, value in reversed(list(zip(names, values))):
-        col = ds.field(name)
-        past = col < value if descending else col > value
-        expr = past if expr is None else past | ((col == value) & expr)
-    return expr

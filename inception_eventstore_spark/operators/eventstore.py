@@ -11,11 +11,13 @@ The reads that return Python values rather than a DataFrame
 (``load_event_raw``/``load_event``, ``load_with_paging`` and
 ``replay_chunked`` here; ``IndexByEventTypeStore.get_paged`` and
 ``MessageCounter.get_count`` likewise) are served on the driver by the
-layout's Arrow reader when the store is on the local file system and the row groups
-the read's filter keeps, plus the tombstones, fit
-``layout.DRIVER_READ_MAX_BYTES``: no Spark job, the same Rows. Any
-other store (hdfs:/, s3a:/), a larger read, or a dial of 0 takes the
-Spark scan below, as do snapshot reads.
+layout's Arrow reader when the store is on the local file system and
+what the read holds whole fits ``layout.DRIVER_READ_MAX_BYTES``: the
+row groups the read's filter keeps plus the tombstones, or for
+``replay_chunked``, which streams a bucket one record batch at a time,
+the tombstones alone. No Spark job, the same Rows. Any other store
+(hdfs:/, s3a:/), a larger read, or a dial of 0 takes the Spark scan
+below, as do snapshot reads.
 
 The on-disk format of every store (paths, schemas, bucket and (et, pid)
 directories, sort orders, the tombstone log) belongs to
@@ -43,14 +45,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Callable, Iterable
 
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from inception_eventstore_spark import schemas
 from inception_eventstore_spark.functions.commits import explode_commits, group_commits
-from inception_eventstore_spark.functions.paging import PagingToken, after_key
+from inception_eventstore_spark.functions.paging import PagingToken
 from inception_eventstore_spark.functions.partitions import pid_col_from_filetime
 from inception_eventstore_spark.sources import fsutil
 from inception_eventstore_spark.sources.layout import (
@@ -96,17 +97,6 @@ def _in_window(df: DataFrame, options: PlayerOptions) -> DataFrame:
     if options.before is not None:
         df = df.where(F.col("ts") <= options.before)
     return df
-
-
-def _arrow_window(options: PlayerOptions) -> ds.Expression | None:
-    """``_in_window`` as an Arrow filter (None when unbounded)."""
-    window = None
-    if options.after is not None:
-        window = ds.field("ts") >= options.after
-    if options.before is not None:
-        upper = ds.field("ts") <= options.before
-        window = upper if window is None else window & upper
-    return window
 
 
 def _require_event_type(options: PlayerOptions) -> None:
@@ -462,14 +452,10 @@ class EventStore:
         Returns (rows, next_token)."""
         keys = (token.keys if token else {}) or {}
         last_rev, last_pos = keys.get("rev"), keys.get("pos")
-        direction = "descending" if descending else "ascending"
-        rows = self.layout.driver_events(
-            self.spark, aid, ("rev", "pos", "ts", "data"),
-            where=None if last_rev is None else after_key(
-                ("rev", "pos"), (last_rev, last_pos), descending
-            ),
-            order=(("rev", direction), ("pos", direction)),
-            limit=take + 1,
+        rows = self.layout.driver_event_page(
+            self.spark, aid,
+            None if last_rev is None else (last_rev, last_pos),
+            descending, take + 1,
         )
         if rows is None:
             rows = self._page_on_spark(aid, take, last_rev, last_pos,
@@ -506,11 +492,7 @@ class EventStore:
     def load_event_raw(self, aid: bytes, rev: int, pos: int):
         """R6: point lookup (reference: CassandraEventStore.cs:177-193).
         Returns a Row or None."""
-        rows = self.layout.driver_events(
-            self.spark, aid, ("data", "ts"),
-            where=(ds.field("rev") == rev) & (ds.field("pos") == pos),
-            limit=1,
-        )
+        rows = self.layout.driver_event(self.spark, aid, rev, pos)
         if rows is None:
             rows = (
                 self._scan([aid])
@@ -781,8 +763,8 @@ class EventStore:
         HandlePaginationStateChangesAsync. The order of rows inside a
         bucket is unspecified.
 
-        Driver memory is bounded by ``chunk_rows`` plus one row group,
-        never a whole bucket, matching the reference's page-wise
+        Driver memory is bounded by ``chunk_rows`` plus one row group
+        and the dead keys, never a whole bucket, matching the reference's page-wise
         ``IAsyncEnumerable`` contract (CassandraEventStore.cs:416-460):
         a local bucket streams through the layout's Arrow reader one
         record batch at a time with the ts window pushed down to row
@@ -795,9 +777,10 @@ class EventStore:
         start_after = -1
         if resume_token is not None:
             start_after = decode_token(resume_token).keys.get("bucket", -1)
-        window = _arrow_window(options)
         for bucket in range(start_after + 1, self.layout.n_buckets):
-            rows = self.layout.driver_bucket_rows(self.spark, bucket, window)
+            rows = self.layout.driver_bucket_rows(
+                self.spark, bucket, options.after, options.before
+            )
             if rows is None:
                 rows = _in_window(
                     self._scan(buckets=[bucket]), options

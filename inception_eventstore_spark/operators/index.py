@@ -15,16 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inception_eventstore_spark.functions.filetime import datetime_to_filetime
-from inception_eventstore_spark.functions.paging import PagingToken, after_key
+from inception_eventstore_spark.functions.paging import PagingToken
 from inception_eventstore_spark.functions.partitions import (
     pid_col_from_filetime,
     pid_from_filetime,
 )
-from inception_eventstore_spark.sources.layout import EventStoreLayout
-
-
-#: The keyset order of an (et, pid) partition's rows (X2).
-_PAGE_KEY = ("ts", "aid", "rev", "pos")
+from inception_eventstore_spark.sources.layout import (
+    INDEX_PAGE_KEY,
+    EventStoreLayout,
+)
 
 
 def _require_et(et: str | None) -> None:
@@ -61,7 +60,7 @@ class IndexByEventTypeStore:
         return (
             self.index_df()
             .where((F.col("et") == et) & (F.col("pid") == pid))
-            .orderBy(*_PAGE_KEY)
+            .orderBy(*INDEX_PAGE_KEY)
         )
 
     def get_paged(self, et: str, pid: int, page_size: int,
@@ -70,14 +69,12 @@ class IndexByEventTypeStore:
         (pid, ts, aid, rev, pos) — replaces the reference's opaque
         driver paging state (:138-170). A local partition is paged on
         the driver by the layout's Arrow reader (no Spark job); see
-        ``EventStoreLayout.driver_index``."""
+        ``EventStoreLayout.driver_index_page``."""
         keys = (token.keys if token else {}) or {}
-        rows = self.layout.driver_index(
+        rows = self.layout.driver_index_page(
             self.spark, et, pid,
-            where=after_key(_PAGE_KEY, tuple(keys[k] for k in _PAGE_KEY))
-            if "ts" in keys else None,
-            order=tuple((k, "ascending") for k in _PAGE_KEY),
-            limit=page_size + 1,
+            tuple(keys[k] for k in INDEX_PAGE_KEY) if "ts" in keys else None,
+            page_size + 1,
         )
         if rows is None:
             rows = self._page_on_spark(et, pid, page_size, keys)

@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +76,11 @@ _ESCAPED_CHARS = frozenset(map(chr, range(1, 32))) | frozenset(
 #: The driver-local reader serves a read itself when the bytes of the
 #: row groups its filter's statistics keep, plus the tombstones it
 #: folds, are at most this many; larger reads, and every read when this
-#: is 0 or less, run on Spark.
+#: is 0 or less, run on Spark. It bounds driver memory, not time: on a
+#: shared 4-core host against a local[2] session the driver path was at
+#: least 3x faster at every size measured (to 199 MiB per bucket and
+#: 242 MiB per (et, pid) directory), while a first ``get_paged`` page
+#: decodes its whole directory, about 3.8x these (encoded) bytes.
 DRIVER_READ_MAX_BYTES = 64 * 1024 * 1024
 
 _ARROW_TYPES = {
@@ -99,6 +104,37 @@ _EVENTS_ARROW = _arrow_schema(schemas.EVENTS_SCHEMA, "id", "rev", "pos",
 _TOMBSTONE_ARROW = _arrow_schema(TOMBSTONE_SCHEMA, "id", "rev", "pos")
 _INDEX_ARROW = _arrow_schema(schemas.INDEX_SCHEMA, "aid", "rev", "pos", "ts")
 _COUNTER_ARROW = _arrow_schema(schemas.COUNTER_SCHEMA, "msgid", "cv")
+
+#: The keyset orders of the paged reads: an aggregate's events (R4/R5)
+#: and an (et, pid) index directory's rows (X2).
+_EVENT_PAGE_KEY = ("rev", "pos")
+INDEX_PAGE_KEY = ("ts", "aid", "rev", "pos")
+
+
+def _past(names: tuple[str, ...], values: tuple,
+          descending: bool = False) -> ds.Expression:
+    """Arrow filter for the rows whose ``names`` columns come after
+    ``values`` in the keyset order: lexicographic, ascending or
+    ``descending`` on every column (binary compares unsigned, as in
+    Spark)."""
+    expr = None
+    for name, value in reversed(list(zip(names, values))):
+        col = ds.field(name)
+        past = col < value if descending else col > value
+        expr = past if expr is None else past | ((col == value) & expr)
+    return expr
+
+
+def _ts_window(after: int | None, before: int | None) -> ds.Expression | None:
+    """Arrow filter for ``after`` <= ts <= ``before`` (either bound
+    optional; None when both are)."""
+    window = None
+    if after is not None:
+        window = ds.field("ts") >= after
+    if before is not None:
+        upper = ds.field("ts") <= before
+        window = upper if window is None else window & upper
+    return window
 
 
 def _split_scheme(path: str) -> tuple[str | None, str]:
@@ -168,6 +204,19 @@ def _table(pruned: ds.Dataset | None, schema: pa.Schema,
     if pruned is None:
         return schema.empty_table()
     return pruned.to_table(filter=where, use_threads=False)
+
+
+def _first(table: pa.Table, order: tuple, limit: int | None) -> pa.Table:
+    """The first ``limit`` rows of ``table`` (all when None) in
+    ``order``, ``(column, "ascending" | "descending")`` pairs: a top-k
+    selection, not a sort of the whole table, picks them."""
+    if limit is not None and table.num_rows > limit:
+        if not order:
+            return table.slice(0, limit)
+        table = table.take(
+            pc.select_k_unstable(table, k=limit, sort_keys=list(order))
+        )
+    return table.sort_by(list(order)) if order else table
 
 
 def _keys(table: pa.Table) -> Iterator[tuple]:
@@ -321,17 +370,19 @@ class EventStoreLayout:
     data return an empty DataFrame with the canonical schema.
 
     Small reads that end in Python values have a second, driver-local
-    reader built on ``pyarrow.dataset`` (``driver_events``,
-    ``driver_bucket_rows``, ``driver_index``, ``driver_counter_sum``).
-    It reads one bucket directory, one (et, pid) directory or the
-    counter deltas, prunes row groups by the filter's parquet
-    statistics, folds the tombstones out, skips hidden files by Spark's
-    rule and supplies the directory values itself, returning the Rows a
-    Spark collect would. One dial picks the path: the store must
-    resolve to the local file system (``local_path``) and the kept row
-    groups plus the tombstones must fit ``DRIVER_READ_MAX_BYTES``;
-    otherwise each method returns None and the caller reads through
-    Spark.
+    reader built on ``pyarrow.dataset`` (``driver_event``,
+    ``driver_event_page``, ``driver_bucket_rows``, ``driver_index_page``,
+    ``driver_counter_sum``). Callers pass plain key and bound values; the
+    reader builds the Arrow filters itself. It reads one bucket
+    directory, one (et, pid) directory or the counter deltas, prunes row
+    groups by the filter's parquet statistics, folds the tombstones out,
+    skips hidden files by Spark's rule and supplies the directory values
+    itself, returning the Rows a Spark collect would. One dial picks the
+    path: the store must resolve to the local file system
+    (``local_path``) and what the read holds whole must fit
+    ``DRIVER_READ_MAX_BYTES`` (the kept row groups plus the tombstones;
+    for the streamed bucket replay, the tombstones alone); otherwise
+    each method returns None and the caller reads through Spark.
     """
 
     warehouse: str
@@ -485,77 +536,97 @@ class EventStoreLayout:
         roots = [local_path(p, default_fs) for p in paths]
         return None if None in roots else roots
 
-    def _events_source(self, spark: SparkSession, bucket: int,
-                       where: ds.Expression | None,
-                       dead_where: ds.Expression | None):
-        """(pruned events of ``bucket``, dead keys) when the read fits
-        the dial, else None; ``dead_where`` selects the tombstones."""
-        roots = self._local_roots(spark, self.bucket_path(bucket),
+    def _driver_events(self, spark: SparkSession, aid: bytes,
+                       fields: tuple[str, ...], where: ds.Expression | None,
+                       order: tuple = (), limit: int | None = None
+                       ) -> list[Row] | None:
+        """Live rows of aggregate ``aid`` that match ``where``, sorted by
+        ``order`` and cut to ``limit``, as the ``Row``s of ``fields`` a
+        Spark collect returns; None when the read belongs to Spark."""
+        aid = bytes(aid)
+        key = ds.field("id") == pa.scalar(aid, pa.binary())
+        where = key if where is None else key & where
+        roots = self._local_roots(spark, self.bucket_path(self.bucket_of(aid)),
                                   self.tombstones_path)
         if roots is None:
             return None
         events, n_events = _pruned(roots[0], _EVENTS_ARROW, where)
-        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, dead_where)
+        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, key)
         if n_events + n_tombs > DRIVER_READ_MAX_BYTES:
             return None
-        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, dead_where)))
-        return events, dead
-
-    def driver_events(self, spark: SparkSession, aid: bytes,
-                      fields: tuple[str, ...],
-                      where: ds.Expression | None = None,
-                      order: tuple = (), limit: int | None = None
-                      ) -> list[Row] | None:
-        """Live rows of aggregate ``aid`` read on the driver, as the
-        ``Row``s of ``fields`` a Spark collect returns: ``where`` (an
-        Arrow expression over the envelope columns) filters them,
-        ``order`` (``(column, "ascending" | "descending")`` pairs) sorts
-        them and ``limit`` cuts them. None when the read belongs to
-        Spark."""
-        aid = bytes(aid)
-        key = ds.field("id") == pa.scalar(aid, pa.binary())
-        where = key if where is None else key & where
-        source = self._events_source(spark, self.bucket_of(aid), where, key)
-        if source is None:
-            return None
-        events, dead = source
+        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, key)))
         table = _live(_table(events, _EVENTS_ARROW, where), dead)
-        if order:
-            table = table.sort_by(list(order))
-        if limit is not None:
-            table = table.slice(0, limit)
-        return _rows(table, fields, _binary_type(spark))
+        return _rows(_first(table, order, limit), fields, _binary_type(spark))
+
+    def driver_event(self, spark: SparkSession, aid: bytes, rev: int,
+                     pos: int) -> list[Row] | None:
+        """The live (data, ts) ``Row`` of event (``aid``, ``rev``,
+        ``pos``) read on the driver ([] when there is none); None when
+        the read belongs to Spark."""
+        return self._driver_events(
+            spark, aid, ("data", "ts"),
+            (ds.field("rev") == rev) & (ds.field("pos") == pos), limit=1,
+        )
+
+    def driver_event_page(self, spark: SparkSession, aid: bytes,
+                          after: tuple[int, int] | None, descending: bool,
+                          limit: int) -> list[Row] | None:
+        """Up to ``limit`` live (rev, pos, ts, data) ``Row``s of
+        aggregate ``aid`` read on the driver, in (rev, pos) order
+        (``descending`` or not), starting past the keyset position
+        ``after`` = (rev, pos) when given; None when the read belongs to
+        Spark."""
+        direction = "descending" if descending else "ascending"
+        return self._driver_events(
+            spark, aid, ("rev", "pos", "ts", "data"),
+            None if after is None else _past(_EVENT_PAGE_KEY, after,
+                                             descending),
+            tuple((k, direction) for k in _EVENT_PAGE_KEY), limit,
+        )
 
     def driver_bucket_rows(self, spark: SparkSession, bucket: int,
-                           where: ds.Expression | None
+                           after: int | None, before: int | None
                            ) -> Iterator[Row] | None:
-        """Live rows of one bucket that match ``where``, streamed on the
-        driver as (id, rev, pos, ts, data) ``Row``s; None when the read
-        belongs to Spark."""
-        source = self._events_source(spark, bucket, where, None)
-        if source is None:
+        """Live rows of one bucket whose ts lies in [``after``,
+        ``before``] (each bound optional), streamed on the driver as
+        (id, rev, pos, ts, data) ``Row``s one record batch at a time;
+        None when the read belongs to Spark.
+
+        Only the dead keys are held whole, so only the tombstones count
+        against the dial; the bucket itself may be of any size."""
+        roots = self._local_roots(spark, self.bucket_path(bucket),
+                                  self.tombstones_path)
+        if roots is None:
             return None
-        events, dead = source
+        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, None)
+        if n_tombs > DRIVER_READ_MAX_BYTES:
+            return None
+        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, None)))
+        where = _ts_window(after, before)
+        events, _ = _pruned(roots[0], _EVENTS_ARROW, where)
         return _stream(events, where, dead, _binary_type(spark))
 
-    def driver_index(self, spark: SparkSession, et: str, pid: int,
-                     where: ds.Expression | None, order: tuple,
-                     limit: int) -> list[Row] | None:
-        """Rows of one (et, pid) index directory read on the driver, as
-        the ``Row``s of a Spark collect of the index (``et`` and ``pid``
-        are the directory's values): filtered by ``where``, sorted by
-        ``order``, cut to ``limit``. None when the read belongs to
-        Spark."""
+    def driver_index_page(self, spark: SparkSession, et: str, pid: int,
+                          after: tuple | None, limit: int
+                          ) -> list[Row] | None:
+        """Up to ``limit`` rows of one (et, pid) index directory read on
+        the driver, as the ``Row``s of a Spark collect of the index
+        (``et`` and ``pid`` are the directory's values), in
+        ``INDEX_PAGE_KEY`` order starting past the keyset position
+        ``after`` (its values) when given; None when the read belongs
+        to Spark."""
         if not (isinstance(et, str) and isinstance(pid, int)):
             return None
         roots = self._local_roots(spark, self.index_partition_path(et, pid))
         if roots is None:
             return None
+        where = None if after is None else _past(INDEX_PAGE_KEY, after)
         rows, nbytes = _pruned(roots[0], _INDEX_ARROW, where)
         if nbytes > DRIVER_READ_MAX_BYTES:
             return None
-        table = _table(rows, _INDEX_ARROW, where).sort_by(list(order))
-        return _rows(table.slice(0, limit), tuple(schemas.INDEX_SCHEMA.names),
+        table = _first(_table(rows, _INDEX_ARROW, where),
+                       tuple((k, "ascending") for k in INDEX_PAGE_KEY), limit)
+        return _rows(table, tuple(schemas.INDEX_SCHEMA.names),
                      _binary_type(spark), {"et": et, "pid": pid})
 
     def driver_counter_sum(self, spark: SparkSession,

@@ -301,3 +301,22 @@ def test_a_read_above_the_dial_runs_on_spark(spark, monkeypatch, es):
     monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 1)
     _, jobs = _jobs_of(spark, lambda: store.load_event_raw(AIDS[3], 1, 0))
     assert jobs >= 1
+
+
+def test_replay_chunked_streams_a_bucket_larger_than_the_dial(
+        spark, monkeypatch, es):
+    """The streamed replay holds only the dead keys whole, so only the
+    tombstones count against the dial, not the bucket's size."""
+    store, _ = es
+    lay = store.layout
+    _, n_tombs = L._pruned(lay.tombstones_path, L._TOMBSTONE_ARROW, None)
+    _, n_bucket = L._pruned(lay.bucket_path(0), L._EVENTS_ARROW, None)
+    assert 0 < n_tombs < n_bucket
+    monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", n_tombs)
+    rows, _, tokens = _both_paths(
+        spark, monkeypatch, lambda: _replay(store, PlayerOptions())
+    )
+    assert len(rows) == 12 * 12 - 3 and len(tokens) == N_BUCKETS
+    monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", n_tombs - 1)
+    _, jobs = _jobs_of(spark, lambda: _replay(store, PlayerOptions()))
+    assert jobs >= N_BUCKETS  # every bucket back on Spark

@@ -314,13 +314,12 @@ class TestSingleKeyReadsOneStage:
         monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)  # force the Spark path
         assert _jobs_of(spark, self._read(spark, bucketed, read)) == 1
 
-    @pytest.mark.parametrize(
-        "read",
-        ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
-    )
-    def test_driver_path_jobs(self, spark, bucketed, read):
-        expected = 1 if read == "load_aggregate" else 0
-        assert _jobs_of(spark, self._read(spark, bucketed, read)) == expected
+    def test_load_aggregate_one_job_at_default_dial(self, spark, bucketed):
+        """The driver reader serves only Python-valued reads (their 0 jobs
+        are asserted in tests/test_driver_reads.py): ``load_aggregate``
+        stays a one-stage DataFrame on a local store too."""
+        read = self._read(spark, bucketed, "load_aggregate")
+        assert _jobs_of(spark, read) == 1
 
     def test_load_aggregate_plan_has_no_exchange(self, bucketed):
         store, aids = bucketed
