@@ -4,8 +4,9 @@ Spark-first re-expression of the reference's CassandraEventStore
 (reference: src/One.Inception.EventStore.Cassandra/CassandraEventStore.cs):
 appends are bulk DataFrame writes; ``load_aggregate`` and the replays
 are Catalyst-pruned scans; replay is a single filtered/grouped job; the
-index-driven replay is a broadcast-hash join instead of a client-side
-index-nested-loop.
+index-driven replay is a left-semi join of the event log to one event
+type's index directory (AQE broadcasts a small selection) instead of a
+client-side index-nested-loop.
 
 The reads that return Python values rather than a DataFrame
 (``load_event_raw``/``load_event``, ``load_with_paging`` and
@@ -642,32 +643,37 @@ class EventStore:
 
     def replay_by_event_type(self, index: IndexByEventTypeStore,
                              options: PlayerOptions) -> DataFrame:
-        """R11: index-driven replay = index selection joined back to the
-        event log (reference does a client-side index-nested-loop with
-        bounded parallelism, CassandraEventStore.cs:278-334; here the
-        day-pruned index selection joins on (id, rev, pos) and AQE picks
-        broadcast when the selection is small).
+        """R11: index-driven replay = the event log semi-joined to the
+        index selection (reference does a client-side index-nested-loop
+        with bounded parallelism, CassandraEventStore.cs:278-334). The
+        selection reads only the type's ``et=`` directory, pruned to the
+        window's days, and the event rows are kept by a ``left_semi``
+        join on (id, rev, pos): each stored row comes out at most once
+        however many index rows match it, so duplicated index rows need
+        no dedup aggregate (and no exchange) first. AQE broadcasts the
+        selection when it is small.
 
         ``options.event_type_id`` is required (ValueError when None):
         the untyped replays are ``replay()`` and ``replay_grouped()``."""
         _require_event_type(options)
         sel = index.records(options.event_type_id, options.after, options.before)
-        sel = sel.select(
-            F.col("aid").alias("id"), "rev", "pos"
-        ).dropDuplicates(["id", "rev", "pos"])
-        return self.events_df().join(sel, ["id", "rev", "pos"], "inner")
+        sel = sel.select(F.col("aid").alias("id"), "rev", "pos")
+        return self.events_df().join(sel, ["id", "rev", "pos"], "left_semi")
 
     def replay_aggregates_by_event_type(self, index: IndexByEventTypeStore,
                                         options: PlayerOptions) -> DataFrame:
         """R11 variant (OnAggregateStreamLoadedAsync): full commit streams
-        of every aggregate that has at least one matching event — a
-        semi-join then R10 grouping (SURVEY §2 R11).
+        of every aggregate that has at least one matching event — the
+        event log semi-joined on id to the type's index selection, then
+        R10 grouping (SURVEY §2 R11). The semi join keeps each event
+        row once however many index rows name its aggregate, so the ids
+        are not deduplicated first.
 
         ``options.event_type_id`` is required (ValueError when None):
         the untyped replays are ``replay()`` and ``replay_grouped()``."""
         _require_event_type(options)
         sel = index.records(options.event_type_id, options.after, options.before)
-        hit_ids = sel.select(F.col("aid").alias("id")).distinct()
+        hit_ids = sel.select(F.col("aid").alias("id"))
         # no broadcast hint: a broad type+time selection can hit most
         # aggregates — AQE broadcasts the id set only when it is small
         rows = self.events_df().join(hit_ids, ["id"], "left_semi")

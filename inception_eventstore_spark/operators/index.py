@@ -2,9 +2,12 @@
 
 Reference: src/One.Inception.EventStore.Cassandra/IndexByEventTypeStore.cs.
 The Cassandra table is partitioned by (et, pid) with ts-ordered clustering;
-here (et, pid) are directory partition columns, so the reference's manual
-day-partition loop (GetRecordsAsync, :174-258) collapses into a single
-``pid BETWEEN`` predicate that Catalyst prunes statically.
+here (et, pid) are directory partition columns. Every read of one type
+(X2, X3, X6) lists and reads only that type's ``et=`` directory
+(``EventStoreLayout.read_index(spark, et)``), as a Cassandra read of one
+type touches only that type's partitions; inside it, the reference's
+manual day-partition loop (GetRecordsAsync, :174-258) collapses into a
+single ``pid BETWEEN`` predicate that Catalyst prunes statically.
 """
 
 from __future__ import annotations
@@ -56,10 +59,12 @@ class IndexByEventTypeStore:
 
     def get(self, et: str, pid: int) -> DataFrame:
         """X2: one (event type, day) partition, ts-ordered (reference:
-        IndexByEventTypeStore.cs:125-136)."""
+        IndexByEventTypeStore.cs:125-136), read from that type's ``et=``
+        directory. ``et`` is required (ValueError when None)."""
+        _require_et(et)
         return (
-            self.index_df()
-            .where((F.col("et") == et) & (F.col("pid") == pid))
+            self.layout.read_index(self.spark, et)
+            .where(F.col("pid") == pid)
             .orderBy(*INDEX_PAGE_KEY)
         )
 
@@ -121,13 +126,14 @@ class IndexByEventTypeStore:
         """X3: time-range scan across day partitions (reference:
         GetRecordsAsync, IndexByEventTypeStore.cs:174-258).
 
-        Bound defaults mirror the reference (:239-257): after ← MIN(ts)
-        of the index (X5), before ← now + 1 day. The reference's
-        calendar-aware partition loop becomes ``pid BETWEEN`` — pruned
-        to the day range by Catalyst. ``et`` is required (ValueError
-        when None)."""
+        Only the ``et=`` directory of ``et`` is listed and read; a type
+        with no directory gives an empty frame. Bound defaults mirror
+        the reference (:239-257): after ← MIN(ts) of the index (X5),
+        before ← now + 1 day. The reference's calendar-aware partition
+        loop becomes ``pid BETWEEN`` — pruned to the day range by
+        Catalyst. ``et`` is required (ValueError when None)."""
         _require_et(et)
-        df = self.index_df().where(F.col("et") == et)
+        df = self.layout.read_index(self.spark, et)
         if after is None:
             after = self.min_ts()
             if after is None:
@@ -169,4 +175,4 @@ class IndexByEventTypeStore:
         returns 0 unconditionally); Spark implements the intent. ``et``
         is required (ValueError when None)."""
         _require_et(et)
-        return self.index_df().where(F.col("et") == et).count()
+        return self.layout.read_index(self.spark, et).count()

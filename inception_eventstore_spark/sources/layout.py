@@ -366,8 +366,15 @@ class EventStoreLayout:
 
     Every read pins its store's schema: no schema-inference job, and a
     partition value keeps its declared type (event type ``"007"`` stays
-    a string). Index, counter and message reads of a store holding no
-    data return an empty DataFrame with the canonical schema.
+    a string). ``read_index(spark, et)`` lists and reads only the
+    ``et=`` directory of that type, with the index root as Spark's
+    ``basePath`` so ``et`` and ``pid`` stay pinned columns. Index,
+    counter and message reads return an empty DataFrame with the
+    canonical schema when their directory holds no data file: a missing
+    directory is answered without Spark, and an existing one is read as
+    is, since a pinned-schema read of a directory holding only
+    ``_SUCCESS`` or ``_temporary/`` is already empty; no recursive
+    walk looks for a data file first.
 
     Small reads that end in Python values have a second, driver-local
     reader built on ``pyarrow.dataset`` (``driver_event``,
@@ -424,10 +431,11 @@ class EventStoreLayout:
     def bucket_path(self, bucket: int) -> str:
         return os.path.join(self.events_path, f"bucket={bucket}")
 
+    def index_type_path(self, et: str) -> str:
+        return os.path.join(self.index_path, f"et={escape_path_name(et)}")
+
     def index_partition_path(self, et: str, pid: int) -> str:
-        return os.path.join(
-            self.index_path, f"et={escape_path_name(et)}", f"pid={pid}"
-        )
+        return os.path.join(self.index_type_path(et), f"pid={pid}")
 
     def prop_index_path(self, name: str) -> str:
         return os.path.join(self.root, f"prop_index_{name}")
@@ -515,8 +523,12 @@ class EventStoreLayout:
             return None
         return spark.read.schema(TOMBSTONE_SCHEMA).parquet(*files)
 
-    def read_index(self, spark: SparkSession) -> DataFrame:
-        return _read(spark, self.index_path, schemas.INDEX_SCHEMA)
+    def read_index(self, spark: SparkSession,
+                   et: str | None = None) -> DataFrame:
+        """The index rows; given ``et``, only that type's ``et=``
+        directory is listed and read (empty when it has none)."""
+        path = self.index_path if et is None else self.index_type_path(et)
+        return _read(spark, path, schemas.INDEX_SCHEMA, base=self.index_path)
 
     def read_counter_deltas(self, spark: SparkSession) -> DataFrame:
         return _read(spark, self.counter_path, schemas.COUNTER_SCHEMA)
@@ -709,12 +721,25 @@ class EventStoreLayout:
              self.message_store_path, False, "date")
 
 
-def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+def _read(spark: SparkSession, path: str, schema: T.StructType,
+          base: str | None = None) -> DataFrame:
     """A store read with its schema pinned, columns in canonical order
-    (a pinned read returns partition columns last)."""
-    if not fsutil.has_data(spark, path):
+    (a pinned read returns partition columns last). ``base`` is the
+    store's root when ``path`` is one of its partition directories, so
+    the directory columns above ``path`` are still read from it.
+
+    A missing ``path`` gives an empty frame without a Spark read. An
+    existing one is read as it is: with the schema pinned, a directory
+    holding no data file (empty, or only ``_SUCCESS``/``_temporary/``)
+    already reads as an empty frame, so nothing walks it first."""
+    if not fsutil.path_exists(spark, path):
         return spark.createDataFrame([], schema=schema)
-    return spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base or path)
+        .parquet(path)
+        .select(*schema.fieldNames())
+    )
 
 
 def _put(frame: DataFrame, path: str, replace: bool,

@@ -6,6 +6,8 @@ scenarios FIXTURES.md §2, reference tests CassandraEventStoreTests.cs).
 from __future__ import annotations
 
 import json
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -444,6 +446,251 @@ class TestEventTypesStayStrings:
         opts = PlayerOptions(event_type_id=mine, after=T0, before=T0)
         got = store.replay_by_event_type(idx, opts).collect()
         assert [bytes(r["data"]) for r in got] == [_payload("a", mine)]
+
+
+def _stored_rows(*batches) -> list[tuple]:
+    """The envelope rows ``append_commits`` stores for each batch, in
+    Python: private event i at pos i, public event i at pos N-1+5+i."""
+    rows = []
+    for batch in batches:
+        for c in batch:
+            n = len(c.events)
+            rows += [(c.aggregate_root_id, c.revision, i, c.timestamp, d)
+                     for i, d in enumerate(c.events)]
+            rows += [(c.aggregate_root_id, c.revision, n - 1 + 5 + i,
+                      c.timestamp, d)
+                     for i, d in enumerate(c.public_events)]
+    return rows
+
+
+def _type_of(data: bytes) -> str:
+    return json.loads(data)["et"]
+
+
+def _oracle(rows, et, after, before):
+    """R11 by hand: the stored rows (with their multiplicity) whose key
+    has an index row of type ``et`` inside [after, before], and the
+    (id, rev) commits of every aggregate such a key names."""
+    keys = {
+        r[:3] for r in rows
+        if _type_of(r[4]) == et and after <= r[3] <= before
+    }
+    events = Counter(r for r in rows if r[:3] in keys)
+    hit = {k[0] for k in keys}
+    commits = {r[:2] for r in rows if r[0] in hit}
+    datas = Counter(r[4] for r in rows if r[0] in hit)
+    return events, commits, datas
+
+
+def _event_rows(df) -> Counter:
+    return Counter(
+        (bytes(r["id"]), r["rev"], r["pos"], r["ts"], bytes(r["data"]))
+        for r in df.collect()
+    )
+
+
+def _check_r11(store, idx, rows, et, after, before):
+    """Both R11 replays of ``et`` equal the Python oracle; the event
+    replay also equals an inner join to the deduplicated selection."""
+    want_events, want_commits, want_datas = _oracle(rows, et, after, before)
+    opts = PlayerOptions(event_type_id=et, after=after, before=before)
+    got = _event_rows(store.replay_by_event_type(idx, opts))
+    assert got == want_events
+    sel = (
+        idx.records(et, after, before)
+        .select(F.col("aid").alias("id"), "rev", "pos")
+        .dropDuplicates(["id", "rev", "pos"])
+    )
+    assert got == _event_rows(
+        store.events_df().join(sel, ["id", "rev", "pos"], "inner")
+    )
+    commits = store.replay_aggregates_by_event_type(idx, opts).collect()
+    got_keys = [(bytes(c["id"]), c["rev"]) for c in commits]
+    assert len(got_keys) == len(set(got_keys))
+    assert set(got_keys) == want_commits
+    assert Counter(
+        bytes(e)
+        for c in commits
+        for e in list(c["events"] or []) + list(c["public_events"] or [])
+    ) == want_datas
+
+
+def _batch(types, days=4):
+    """One commit per aggregate and day; each commit's two private and
+    one public event cycle through ``types``."""
+    return [
+        AggregateCommit(
+            aid, day + 1, T0 + day * DAY + i * SEC,
+            [_payload(f"{n}-{day}-{k}", types[(i + day + k) % len(types)])
+             for k in range(2)],
+            [_payload(f"{n}-{day}-pub", types[(i + day + 2) % len(types)])],
+        )
+        for day in range(days)
+        for i, (n, aid) in enumerate(
+            (n, f"agg-{n}".encode()) for n in ("a", "b", "c")
+        )
+    ]
+
+
+class TestIndexDrivenReplayDuplicates:
+    """The index may hold a key more than once: ``append`` dedups only
+    within one call, and bulk appends do not dedup across batches. The
+    semi join must still return each stored event row once."""
+
+    WINDOW = (T0 + DAY, T0 + 3 * DAY)
+
+    def test_index_records_written_twice(self, store):
+        batch = _batch(("type-a", "type-b"))
+        store.append_commits(batch, maintain_index=False)
+        rows = _stored_rows(batch)
+        idx = IndexByEventTypeStore(store.spark, store.layout)
+        records = store.spark.createDataFrame(
+            [(_type_of(d), aid, rev, pos, ts) for aid, rev, pos, ts, d in rows],
+            "et string, aid binary, rev int, pos int, ts long",
+        )
+        idx.append(records)
+        idx.append(records)
+        assert idx.count("type-a") == 2 * sum(
+            _type_of(r[4]) == "type-a" for r in rows
+        )
+        for et in ("type-a", "type-b"):
+            _check_r11(store, idx, rows, et, *self.WINDOW)
+
+    def test_batch_appended_twice(self, store):
+        batch = _batch(("type-a", "type-b"))
+        store.append_commits(batch)
+        store.append_commits(batch)
+        rows = _stored_rows(batch, batch)
+        idx = IndexByEventTypeStore(store.spark, store.layout)
+        for et in ("type-a", "type-b"):
+            _check_r11(store, idx, rows, et, *self.WINDOW)
+
+
+SCOPED_TYPES = ("ns:Created", "orders/Shipped", "007", "7")
+
+
+class TestIndexTypeScope:
+    """A read of one event type lists and reads only that type's ``et=``
+    directory, whatever characters the type holds."""
+
+    @pytest.fixture()
+    def seeded(self, store):
+        batch = _batch(SCOPED_TYPES)
+        store.append_commits(batch)
+        return store, IndexByEventTypeStore(store.spark, store.layout), (
+            _stored_rows(batch)
+        )
+
+    @pytest.mark.parametrize("et", SCOPED_TYPES)
+    def test_records_read_only_their_type(self, seeded, et):
+        from urllib.parse import unquote
+
+        store, idx, rows = seeded
+        df = idx.records(et)
+        files = [unquote(f) for f in df.inputFiles()]
+        assert files
+        assert all(f"/et={L.escape_path_name(et)}/" in f for f in files)
+        assert sorted(
+            (r["et"], bytes(r["aid"]), r["rev"], r["pos"], r["ts"])
+            for r in df.collect()
+        ) == sorted(
+            (et, aid, rev, pos, ts)
+            for aid, rev, pos, ts, d in rows if _type_of(d) == et
+        )
+        _check_r11(store, idx, rows, et, T0, T0 + 3 * DAY)
+        _check_r11(store, idx, rows, et, T0 + DAY, T0 + 2 * DAY)
+
+    def test_unwritten_type_is_empty(self, seeded):
+        from inception_eventstore_spark import schemas
+
+        store, idx, _ = seeded
+        et = "never:Written"
+        records = idx.records(et, T0, T0 + 3 * DAY)
+        assert records.collect() == []
+        assert records.dtypes == [
+            (f.name, f.dataType.simpleString())
+            for f in schemas.INDEX_SCHEMA.fields
+        ]
+        assert idx.count(et) == 0
+        opts = PlayerOptions(event_type_id=et, after=T0, before=T0 + 3 * DAY)
+        events = store.replay_by_event_type(idx, opts)
+        assert events.collect() == []
+        assert events.dtypes == store.events_df().dtypes
+        assert store.replay_aggregates_by_event_type(idx, opts).collect() == []
+
+
+class TestIndexDrivenReplayPlan:
+    @pytest.fixture()
+    def seeded(self, spark, tmp_path):
+        lay = L.EventStoreLayout(
+            warehouse=str(tmp_path / "wh"), keyspace="r11_plan", n_buckets=4
+        )
+        lay.ensure_storage()
+        store = EventStore(spark, lay, event_type_expr=_et_expr)
+        store.append_commits(_batch(("type-a", "type-b")))
+        return store, IndexByEventTypeStore(spark, lay)
+
+    OPTS = PlayerOptions(event_type_id="type-a", after=T0, before=T0 + 3 * DAY)
+
+    def test_semi_join_without_index_aggregate(self, seeded):
+        store, idx = seeded
+        plan = (
+            store.replay_by_event_type(idx, self.OPTS)
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert "Join LeftSemi" in plan
+        assert "Aggregate" not in plan
+
+    def test_counted_replay_runs_three_jobs(self, spark, seeded):
+        """The index selection's broadcast, the events scan and the
+        final count: no dedup stage on the selection."""
+        store, idx = seeded
+        df = store.replay_by_event_type(idx, self.OPTS)
+        assert _jobs_of(
+            spark, lambda: df.agg(F.count(F.lit(1)), F.sum("rev")).collect()
+        ) == 3
+
+
+class TestStoreWithoutDataFiles:
+    """An index, counter or message directory that holds only
+    ``_SUCCESS`` and ``_temporary/`` (an interrupted first write) reads
+    as an empty frame with the store's schema; the part file under
+    ``_temporary/`` is not parquet, so reading it would raise."""
+
+    @staticmethod
+    def _strand(path):
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+        for name in ("_temporary/0/part-00000.parquet", "_SUCCESS"):
+            with open(os.path.join(path, name), "wb") as fh:
+                fh.write(b"not parquet")
+
+    @pytest.mark.parametrize("store_name", ["index", "index_type", "counter",
+                                            "messages"])
+    def test_reads_empty_with_schema(self, spark, tmp_path, store_name):
+        from inception_eventstore_spark import schemas
+
+        lay = L.EventStoreLayout(warehouse=str(tmp_path / "wh"),
+                                 keyspace="stranded")
+        lay.ensure_storage()
+        path, read, schema = {
+            "index": (lay.index_path, lambda: lay.read_index(spark),
+                      schemas.INDEX_SCHEMA),
+            "index_type": (lay.index_type_path("ns:Created"),
+                           lambda: lay.read_index(spark, "ns:Created"),
+                           schemas.INDEX_SCHEMA),
+            "counter": (lay.counter_path,
+                        lambda: lay.read_counter_deltas(spark),
+                        schemas.COUNTER_SCHEMA),
+            "messages": (lay.message_store_path,
+                         lambda: lay.read_messages(spark),
+                         schemas.MESSAGE_STORE_SCHEMA),
+        }[store_name]
+        self._strand(path)
+        df = read()
+        assert df.collect() == []
+        assert df.dtypes == [
+            (f.name, f.dataType.simpleString()) for f in schema.fields
+        ]
 
 
 KEPT, GONE, OTHER = _payload("kept"), _payload("gone"), _payload("other")
