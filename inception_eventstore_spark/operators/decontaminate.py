@@ -211,8 +211,8 @@ def ngram_novelty(
     lowercase token n-gram (`sampling.md5_prefix60` — the repo-wide
     cross-engine hash), so counts replay exactly in SQL. Scale shape:
     each side collapses to its distinct gram-hash set first (one
-    partial-aggregated shuffle each, 8-byte keys), then one hash
-    anti-join; the corpus text never shuffles."""
+    partial-aggregated shuffle each, 8-byte keys), then one full-outer
+    join of the two sets; the corpus text never shuffles."""
     from inception_eventstore_spark.operators.sampling import md5_prefix60
 
     if n < 1:

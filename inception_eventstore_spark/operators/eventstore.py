@@ -12,13 +12,11 @@ The reads that return Python values rather than a DataFrame
 (``load_event_raw``/``load_event``, ``load_with_paging`` and
 ``replay_chunked`` here; ``IndexByEventTypeStore.get_paged`` and
 ``MessageCounter.get_count`` likewise) are served on the driver by the
-layout's Arrow reader when the store is on the local file system and
-what the read holds whole fits ``layout.DRIVER_READ_MAX_BYTES``: the
-row groups the read's filter keeps plus the tombstones, or for
-``replay_chunked``, which streams a bucket one record batch at a time,
-the tombstones alone. No Spark job, the same Rows. Any other store
-(hdfs:/, s3a:/), a larger read, or a dial of 0 takes the Spark scan
-below, as do snapshot reads.
+layout's Arrow reader whenever the store is on the local file system,
+whatever its size: each read streams its directory one record batch at
+a time and holds only what it returns plus the dead keys. No Spark job,
+the same Rows. A store anywhere else (hdfs:/, s3a:/) takes the Spark
+scan below, as do snapshot reads.
 
 The on-disk format of every store (paths, schemas, bucket and (et, pid)
 directories, sort orders, the tombstone log) belongs to
@@ -769,14 +767,15 @@ class EventStore:
         HandlePaginationStateChangesAsync. The order of rows inside a
         bucket is unspecified.
 
-        Driver memory is bounded by ``chunk_rows`` plus one row group
-        and the dead keys, never a whole bucket, matching the reference's page-wise
-        ``IAsyncEnumerable`` contract (CassandraEventStore.cs:416-460):
-        a local bucket streams through the layout's Arrow reader one
-        record batch at a time with the ts window pushed down to row
-        groups, and a bucket the reader does not serve (see the module
-        docstring) streams from a partition-pruned Spark scan one
-        partition at a time."""
+        Driver memory is bounded by ``chunk_rows`` plus the record
+        batches the scan reads ahead (a few files' row groups) and the
+        dead keys, never a whole bucket, matching the reference's
+        page-wise ``IAsyncEnumerable`` contract
+        (CassandraEventStore.cs:416-460): a local bucket streams through
+        the layout's Arrow reader one record batch at a time with the ts
+        window pushed down to row groups, and a bucket of a non-local
+        store streams from a partition-pruned Spark scan one partition
+        at a time."""
         from inception_eventstore_spark.functions.paging import decode_token
 
         options = options or PlayerOptions()

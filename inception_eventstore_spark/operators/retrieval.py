@@ -999,6 +999,9 @@ def retrieval_map(
             ).alias("ap_ppm"),
         )
         .orderBy("query_id")
-    ).localCheckpoint(eager=True)  # |queries| rows
+    )
+    if not checkpoint:
+        return out  # plan inspection only — caches then outlive the call
+    out = out.localCheckpoint(eager=True)  # |queries| rows
     scored.unpersist()
     return out

@@ -14913,7 +14913,7 @@ QUERIES = {**_R10C_QUERIES, **QUERIES}
 def q_ngram_novelty(spark, sf_dir):
     """Train/test 3-gram novelty over an 80/20 portable-hash document
     split (decontaminate.ngram_novelty): distinct md5-60 gram sets per
-    side, one anti-join — the eval-split overlap gate. Oracle replays
+    side, one full-outer join — the eval-split overlap gate. Oracle replays
     the split, the grams, the hash, and the ratio."""
     from inception_eventstore_spark.operators.decontaminate import (
         ngram_novelty,

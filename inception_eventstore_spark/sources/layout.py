@@ -27,7 +27,7 @@ import json
 import os
 import weakref
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -72,16 +72,6 @@ _ESCAPED_CHARS = frozenset(map(chr, range(1, 32))) | frozenset(
     "\"#%'*/:=?[\\]^{\x7f"
 )
 
-
-#: The driver-local reader serves a read itself when the bytes of the
-#: row groups its filter's statistics keep, plus the tombstones it
-#: folds, are at most this many; larger reads, and every read when this
-#: is 0 or less, run on Spark. It bounds driver memory, not time: on a
-#: shared 4-core host against a local[2] session the driver path was at
-#: least 3x faster at every size measured (to 199 MiB per bucket and
-#: 242 MiB per (et, pid) directory), while a first ``get_paged`` page
-#: decodes its whole directory, about 3.8x these (encoded) bytes.
-DRIVER_READ_MAX_BYTES = 64 * 1024 * 1024
 
 _ARROW_TYPES = {
     T.BinaryType(): pa.binary(),
@@ -178,45 +168,37 @@ def _local_data_files(root: str) -> list[str]:
     return out
 
 
-def _pruned(root: str, schema: pa.Schema,
-            where: ds.Expression | None) -> tuple[ds.Dataset | None, int]:
-    """The row groups of ``root``'s files whose statistics do not rule
-    out ``where``, as a dataset (None when there are none), and their
-    uncompressed bytes."""
-    files = _local_data_files(root)
-    if not files:
-        return None, 0
-    whole = ds.dataset(files, schema=schema, format="parquet")
-    groups = [
-        rg
-        for frag in whole.get_fragments()
-        for rg in frag.split_by_row_group(filter=where, schema=schema)
-    ]
-    if not groups:
-        return None, 0
-    nbytes = sum(rg.row_groups[0].total_byte_size for rg in groups)
-    return ds.FileSystemDataset(groups, schema, whole.format,
-                                whole.filesystem), nbytes
+def _batches(root: str, schema: pa.Schema,
+             where: ds.Expression | None) -> Iterator[pa.Table]:
+    """The rows of ``root``'s data files that match ``where``, one record
+    batch at a time (as a one-batch table). The parquet scan skips the
+    row groups whose statistics rule ``where`` out."""
+    files = ds.dataset(_local_data_files(root), schema=schema, format="parquet")
+    # pyarrow's default readahead decodes a few files at once: against
+    # none, point reads were ~10% and large pages ~2x faster, and the
+    # peak is bounded by that window, not by the directory (CHANGES.md)
+    for batch in files.scanner(filter=where, use_threads=False).to_batches():
+        yield pa.Table.from_batches([batch])
 
 
-def _table(pruned: ds.Dataset | None, schema: pa.Schema,
-           where: ds.Expression | None) -> pa.Table:
-    if pruned is None:
-        return schema.empty_table()
-    return pruned.to_table(filter=where, use_threads=False)
-
-
-def _first(table: pa.Table, order: tuple, limit: int | None) -> pa.Table:
-    """The first ``limit`` rows of ``table`` (all when None) in
-    ``order``, ``(column, "ascending" | "descending")`` pairs: a top-k
-    selection, not a sort of the whole table, picks them."""
-    if limit is not None and table.num_rows > limit:
+def _first(tables: Iterable[pa.Table], schema: pa.Schema, order: tuple,
+           limit: int | None) -> pa.Table:
+    """The first ``limit`` rows of ``tables`` (all when None) in
+    ``order``, ``(column, "ascending" | "descending")`` pairs. Each table
+    is folded into a top-k selection as it arrives, so at most ``limit``
+    rows plus one table are held; with no order the first ``limit`` rows
+    found are the answer and no further table is drawn."""
+    kept = schema.empty_table()
+    for table in tables:
+        kept = pa.concat_tables([kept, table])
+        if limit is None or kept.num_rows < limit:
+            continue
         if not order:
-            return table.slice(0, limit)
-        table = table.take(
-            pc.select_k_unstable(table, k=limit, sort_keys=list(order))
+            return kept.slice(0, limit)
+        kept = kept.take(
+            pc.select_k_unstable(kept, k=limit, sort_keys=list(order))
         )
-    return table.sort_by(list(order)) if order else table
+    return kept.sort_by(list(order)) if order else kept
 
 
 def _keys(table: pa.Table) -> Iterator[tuple]:
@@ -225,24 +207,18 @@ def _keys(table: pa.Table) -> Iterator[tuple]:
                  for c in TOMBSTONE_SCHEMA.names))
 
 
+def _dead(root: str, where: ds.Expression | None) -> set:
+    """The deleted keys of the tombstone directory ``root`` that match
+    ``where``, held whole (as the Spark path broadcasts them)."""
+    return {k for t in _batches(root, _TOMBSTONE_ARROW, where)
+            for k in _keys(t)}
+
+
 def _live(table: pa.Table, dead: set) -> pa.Table:
     """``table`` without its rows whose key is in ``dead``."""
     if not dead or table.num_rows == 0:
         return table
     return table.filter(pa.array([k not in dead for k in _keys(table)]))
-
-
-def _stream(pruned: ds.Dataset | None, where: ds.Expression | None,
-            dead: set, binary: type) -> Iterator[Row]:
-    """The live rows of ``pruned`` one record batch at a time, so at
-    most one row group is decoded at once (no readahead)."""
-    if pruned is None:
-        return
-    scanner = pruned.scanner(filter=where, batch_readahead=0,
-                             fragment_readahead=0, use_threads=False)
-    for batch in scanner.to_batches():
-        yield from _rows(_live(pa.Table.from_batches([batch]), dead),
-                         tuple(_EVENTS_ARROW.names), binary)
 
 
 def _column(col: pa.ChunkedArray, binary: type) -> list:
@@ -381,14 +357,15 @@ class EventStoreLayout:
     ``driver_event_page``, ``driver_bucket_rows``, ``driver_index_page``,
     ``driver_counter_sum``). Callers pass plain key and bound values; the
     reader builds the Arrow filters itself. It reads one bucket
-    directory, one (et, pid) directory or the counter deltas, prunes row
-    groups by the filter's parquet statistics, folds the tombstones out,
-    skips hidden files by Spark's rule and supplies the directory values
-    itself, returning the Rows a Spark collect would. One dial picks the
-    path: the store must resolve to the local file system
-    (``local_path``) and what the read holds whole must fit
-    ``DRIVER_READ_MAX_BYTES`` (the kept row groups plus the tombstones;
-    for the streamed bucket replay, the tombstones alone); otherwise
+    directory, one (et, pid) directory or the counter deltas through one
+    scan (``_batches``) that skips row groups by the filter's parquet
+    statistics and yields one record batch at a time; each read folds
+    the batches as they come (a top-k for a page, a sum for a count, a
+    stream for the replay), dropping the dead keys, so only the
+    tombstones are held whole. Hidden files are skipped by Spark's rule
+    and the directory values supplied, returning the Rows a Spark
+    collect would. One rule picks the path: a store on the local file
+    system (``local_path``) is read on the driver; for any other store
     each method returns None and the caller reads through Spark.
     """
 
@@ -510,11 +487,13 @@ class EventStoreLayout:
     def read_tombstones(self, spark: SparkSession,
                         version: int | None = None) -> DataFrame | None:
         """Deleted (id, rev, pos) keys — current, or those snapshot
-        ``version`` froze; None when there are none."""
+        ``version`` froze; None when there is no tombstone directory (or
+        the snapshot froze no file). As in ``_read``, a directory holding
+        no data file is read as it is: it is already empty."""
         if version is None:
             files = (
                 [self.tombstones_path]
-                if fsutil.has_data(spark, self.tombstones_path)
+                if fsutil.path_exists(spark, self.tombstones_path)
                 else []
             )
         else:
@@ -538,12 +517,10 @@ class EventStoreLayout:
             spark, self.message_store_path, schemas.MESSAGE_STORE_SCHEMA
         )
 
-    # -- driver-local reads: each returns None when the read belongs to
-    # Spark (a non-local path, or more bytes than DRIVER_READ_MAX_BYTES)
+    # -- driver-local reads: each returns None when the store is not on
+    # the local file system, and the caller then reads through Spark
     def _local_roots(self, spark: SparkSession,
                      *paths: str) -> list[str] | None:
-        if DRIVER_READ_MAX_BYTES <= 0:
-            return None
         default_fs = _default_fs(spark)
         roots = [local_path(p, default_fs) for p in paths]
         return None if None in roots else roots
@@ -562,13 +539,10 @@ class EventStoreLayout:
                                   self.tombstones_path)
         if roots is None:
             return None
-        events, n_events = _pruned(roots[0], _EVENTS_ARROW, where)
-        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, key)
-        if n_events + n_tombs > DRIVER_READ_MAX_BYTES:
-            return None
-        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, key)))
-        table = _live(_table(events, _EVENTS_ARROW, where), dead)
-        return _rows(_first(table, order, limit), fields, _binary_type(spark))
+        dead = _dead(roots[1], key)
+        live = (_live(t, dead) for t in _batches(roots[0], _EVENTS_ARROW, where))
+        table = _first(live, _EVENTS_ARROW, order, limit)
+        return _rows(table, fields, _binary_type(spark))
 
     def driver_event(self, spark: SparkSession, aid: bytes, rev: int,
                      pos: int) -> list[Row] | None:
@@ -602,21 +576,18 @@ class EventStoreLayout:
         """Live rows of one bucket whose ts lies in [``after``,
         ``before``] (each bound optional), streamed on the driver as
         (id, rev, pos, ts, data) ``Row``s one record batch at a time;
-        None when the read belongs to Spark.
-
-        Only the dead keys are held whole, so only the tombstones count
-        against the dial; the bucket itself may be of any size."""
+        None when the read belongs to Spark. Only the dead keys are held
+        whole; the bucket itself may be of any size."""
         roots = self._local_roots(spark, self.bucket_path(bucket),
                                   self.tombstones_path)
         if roots is None:
             return None
-        tombs, n_tombs = _pruned(roots[1], _TOMBSTONE_ARROW, None)
-        if n_tombs > DRIVER_READ_MAX_BYTES:
-            return None
-        dead = set(_keys(_table(tombs, _TOMBSTONE_ARROW, None)))
-        where = _ts_window(after, before)
-        events, _ = _pruned(roots[0], _EVENTS_ARROW, where)
-        return _stream(events, where, dead, _binary_type(spark))
+        dead, binary = _dead(roots[1], None), _binary_type(spark)
+        return (
+            row
+            for t in _batches(roots[0], _EVENTS_ARROW, _ts_window(after, before))
+            for row in _rows(_live(t, dead), tuple(_EVENTS_ARROW.names), binary)
+        )
 
     def driver_index_page(self, spark: SparkSession, et: str, pid: int,
                           after: tuple | None, limit: int
@@ -633,10 +604,7 @@ class EventStoreLayout:
         if roots is None:
             return None
         where = None if after is None else _past(INDEX_PAGE_KEY, after)
-        rows, nbytes = _pruned(roots[0], _INDEX_ARROW, where)
-        if nbytes > DRIVER_READ_MAX_BYTES:
-            return None
-        table = _first(_table(rows, _INDEX_ARROW, where),
+        table = _first(_batches(roots[0], _INDEX_ARROW, where), _INDEX_ARROW,
                        tuple((k, "ascending") for k in INDEX_PAGE_KEY), limit)
         return _rows(table, tuple(schemas.INDEX_SCHEMA.names),
                      _binary_type(spark), {"et": et, "pid": pid})
@@ -650,12 +618,8 @@ class EventStoreLayout:
         roots = self._local_roots(spark, self.counter_path)
         if roots is None:
             return None
-        where = ds.field("msgid") == msgid
-        deltas, nbytes = _pruned(roots[0], _COUNTER_ARROW, where)
-        if nbytes > DRIVER_READ_MAX_BYTES:
-            return None
-        cv = _table(deltas, _COUNTER_ARROW, where).column("cv")
-        return sum(cv.to_pylist())
+        deltas = _batches(roots[0], _COUNTER_ARROW, ds.field("msgid") == msgid)
+        return sum(sum(t.column("cv").to_pylist()) for t in deltas)
 
     # -- snapshots (time travel over the events store)
     def snapshots(self, spark: SparkSession) -> SnapshotLog:

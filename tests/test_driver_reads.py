@@ -2,10 +2,12 @@
 
 Every read the layout's Arrow reader serves (``load_event_raw``,
 ``load_with_paging``, ``get_paged``, ``get_count``, ``replay_chunked``)
-runs once at the default ``DRIVER_READ_MAX_BYTES`` (the driver path,
-which must launch no Spark job) and once at 0 (the Spark path); the
-results must be equal value for value, field order and Python types
-included.
+runs once on the driver (the store is local, so the layout's one rule
+picks the Arrow reader, which must launch no Spark job) and once on the
+Spark path, reached through the same rule: under an ``hdfs:`` default
+file system a scheme-less store path is not local, while the JVM still
+reads the local files. The results must be equal value for value, field
+order and Python types included.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import datetime as dt
 import os
 import uuid
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,13 +74,19 @@ def _jobs_of(spark, action):
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _on_spark(monkeypatch):
+    """Make the layout see a non-local default file system, so every
+    scheme-less store path reads through Spark."""
+    monkeypatch.setattr(L, "_default_fs", lambda spark: "hdfs://nn:8020")
+
+
 def _both_paths(spark, monkeypatch, action):
     """``action`` on the driver path (asserting it ran no Spark job) and
     on the Spark path; asserts the two agree and returns the result."""
     on_driver, jobs = _jobs_of(spark, action)
     assert jobs == 0
     with monkeypatch.context() as m:
-        m.setattr(L, "DRIVER_READ_MAX_BYTES", 0)
+        _on_spark(m)
         on_spark = action()
     assert _typed(on_driver) == _typed(on_spark)
     return on_driver
@@ -202,10 +211,10 @@ def test_get_count(spark, monkeypatch, es, et):
     assert n == (48 if et in TYPES else 0)
 
 
-@pytest.mark.parametrize("dial", ["driver", "spark"])
-def test_counter_empty_reset_and_compact(spark, monkeypatch, tmp_path, dial):
-    if dial == "spark":
-        monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_counter_empty_reset_and_compact(spark, monkeypatch, tmp_path, path):
+    if path == "spark":
+        _on_spark(monkeypatch)
     lay = L.EventStoreLayout(warehouse=str(tmp_path), keyspace="counters")
     lay.ensure_storage(spark)
     counter = MessageCounter(spark, lay)
@@ -219,10 +228,10 @@ def test_counter_empty_reset_and_compact(spark, monkeypatch, tmp_path, dial):
     assert (counter.get_count("007"), counter.get_count("7")) == (0, 1)
 
 
-@pytest.mark.parametrize("dial", ["driver", "spark"])
-def test_counter_with_no_store_directory(spark, monkeypatch, tmp_path, dial):
-    if dial == "spark":
-        monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_counter_with_no_store_directory(spark, monkeypatch, tmp_path, path):
+    if path == "spark":
+        _on_spark(monkeypatch)
     lay = L.EventStoreLayout(warehouse=str(tmp_path), keyspace="missing")
     assert MessageCounter(spark, lay).get_count("x") == 0
 
@@ -296,27 +305,49 @@ def test_local_path(path, default_fs, local):
     assert L.local_path(path, default_fs) == local
 
 
-def test_a_read_above_the_dial_runs_on_spark(spark, monkeypatch, es):
-    store, _ = es
-    monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 1)
-    _, jobs = _jobs_of(spark, lambda: store.load_event_raw(AIDS[3], 1, 0))
-    assert jobs >= 1
+_FIRST_SCHEMA = pa.schema([("k", pa.int32()), ("v", pa.int32())])
 
 
-def test_replay_chunked_streams_a_bucket_larger_than_the_dial(
-        spark, monkeypatch, es):
-    """The streamed replay holds only the dead keys whole, so only the
-    tombstones count against the dial, not the bucket's size."""
-    store, _ = es
-    lay = store.layout
-    _, n_tombs = L._pruned(lay.tombstones_path, L._TOMBSTONE_ARROW, None)
-    _, n_bucket = L._pruned(lay.bucket_path(0), L._EVENTS_ARROW, None)
-    assert 0 < n_tombs < n_bucket
-    monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", n_tombs)
-    rows, _, tokens = _both_paths(
-        spark, monkeypatch, lambda: _replay(store, PlayerOptions())
-    )
-    assert len(rows) == 12 * 12 - 3 and len(tokens) == N_BUCKETS
-    monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", n_tombs - 1)
-    _, jobs = _jobs_of(spark, lambda: _replay(store, PlayerOptions()))
-    assert jobs >= N_BUCKETS  # every bucket back on Spark
+def _tables(*batches):
+    return [pa.table({"k": [k for k, _ in b], "v": [v for _, v in b]},
+                     schema=_FIRST_SCHEMA) for b in batches]
+
+
+@pytest.mark.parametrize("batches,order,limit", [
+    # the k smallest rows arrive in the last batch
+    ([[(9, 0), (8, 1)], [(7, 2), (6, 3)], [(1, 4), (0, 5)]],
+     (("k", "ascending"),), 2),
+    # ties on k span batches; v breaks them
+    ([[(1, 3), (2, 0)], [(1, 1), (1, 2)], [(1, 0)]],
+     (("k", "ascending"), ("v", "ascending")), 3),
+    ([[(1, 3), (2, 0)], [(1, 1), (1, 2)], [(1, 0)]],
+     (("k", "descending"), ("v", "descending")), 3),
+    ([[(3, 0)], [], [(5, 1), (4, 2)], [(6, 3)]], (("k", "descending"),), 2),
+    ([[(3, 0)], [], [(5, 1), (4, 2)], [(6, 3)]], (("k", "ascending"),), None),
+    ([[(3, 0)], [(5, 1)]], (("k", "ascending"),), 5),
+    ([], (("k", "ascending"),), 2),
+])
+def test_first_streams_a_top_k(batches, order, limit):
+    """``_first`` over a stream of tables gives what a sort of all the
+    rows, cut to ``limit``, gives."""
+    rows = [r for b in batches for r in b]
+    expected = sorted(rows, key=lambda r: tuple(
+        -r["kv".index(c)] if d == "descending" else r["kv".index(c)]
+        for c, d in order))[:limit]
+    got = L._first(iter(_tables(*batches)), _FIRST_SCHEMA, order, limit)
+    assert list(zip(*got.to_pydict().values())) == expected
+
+
+def test_first_without_order_stops_at_limit():
+    """With no order the first ``limit`` rows found are the answer, and
+    no table past them is drawn from the stream."""
+    drawn = []
+
+    def stream():
+        for t in _tables([(1, 0), (2, 1)], [(3, 2)], [(4, 3)]):
+            drawn.append(t)
+            yield t
+
+    got = L._first(stream(), _FIRST_SCHEMA, (), 3)
+    assert got.to_pydict() == {"k": [1, 2, 3], "v": [0, 1, 2]}
+    assert len(drawn) == 2

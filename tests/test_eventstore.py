@@ -313,13 +313,15 @@ class TestSingleKeyReadsOneStage:
         ["load_aggregate", "load_event_raw", "load_with_paging", "get_count"],
     )
     def test_one_job(self, spark, bucketed, read, monkeypatch):
-        monkeypatch.setattr(L, "DRIVER_READ_MAX_BYTES", 0)  # force the Spark path
+        # a non-local default file system sends the store to Spark
+        monkeypatch.setattr(L, "_default_fs", lambda spark: "hdfs://nn:8020")
         assert _jobs_of(spark, self._read(spark, bucketed, read)) == 1
 
     def test_load_aggregate_one_job_at_default_dial(self, spark, bucketed):
         """The driver reader serves only Python-valued reads (their 0 jobs
         are asserted in tests/test_driver_reads.py): ``load_aggregate``
-        stays a one-stage DataFrame on a local store too."""
+        stays a one-stage DataFrame on a local store, which every other
+        read of this class serves on the driver."""
         read = self._read(spark, bucketed, "load_aggregate")
         assert _jobs_of(spark, read) == 1
 
@@ -691,6 +693,20 @@ class TestStoreWithoutDataFiles:
         assert df.dtypes == [
             (f.name, f.dataType.simpleString()) for f in schema.fields
         ]
+
+    def test_tombstones_delete_nothing(self, spark, store):
+        """A tombstone directory with no data file deletes nothing: the
+        Spark scans still return every row."""
+        store.append_commits([
+            AggregateCommit(AID1, 1, T0, [_payload("a"), _payload("b")],
+                            [_payload("c")]),
+            AggregateCommit(AID2, 1, T0, [_payload("d")], []),
+        ])
+        self._strand(store.layout.tombstones_path)
+        assert len(store.events_df().collect()) == 4
+        commits = store.load_aggregate(AID1).collect()
+        assert [len(c["events"]) + len(c["public_events"])
+                for c in commits] == [3]
 
 
 KEPT, GONE, OTHER = _payload("kept"), _payload("gone"), _payload("other")

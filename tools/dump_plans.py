@@ -180,6 +180,8 @@ CHECKS = {
         ("no python UDF in the path", "!BatchEvalPython|ArrowEvalPython"),
     ],
     "quality_correlations": [
+        # reads the finish's input plan (_FINISH_INPUT): the fold is
+        # collected and the result rebuilt as a local frame
         ("one partial-aggregated correlation fold",
          r"HashAggregate.*partial|partial_corr|partial_count"),
         ("no python UDF in the path", "!BatchEvalPython|ArrowEvalPython"),
@@ -215,6 +217,8 @@ CHECKS = {
         ("no python UDF in the path", "!BatchEvalPython|ArrowEvalPython"),
     ],
     "winnow_matches": [
+        # reads the finish's input plan (_FINISH_INPUT): the pair
+        # counts are eagerly checkpointed
         ("pairs form on the fingerprint equi-join, never a document "
          "cross join", "!CartesianProduct|BroadcastNestedLoopJoin"),
         ("shared counts partial-aggregated",
@@ -905,6 +909,8 @@ CHECKS = {
         ("no window anywhere — closed-form minimax joins", "!Window"),
     ],
     "item_item_cf": [
+        # reads the finish's input plan (_FINISH_INPUT): the ranked
+        # neighbor table is eagerly checkpointed
         ("pair generation is a basket-keyed self-equi-join, never a "
          "cartesian", "!CartesianProduct"),
         ("pair/margin counts partial-aggregate before their shuffles",
@@ -2258,6 +2264,33 @@ EXTRA_CHECKS = [
 ]
 
 
+#: Queries whose result is a driver-built or eagerly checkpointed
+#: frame, so their final plan is a scan of it. Their checks also read
+#: the plan of the last Spark job their build ran, the job whose output
+#: the finish holds; each entry names that job.
+_FINISH_INPUT: dict[str, str] = {
+    "quality_correlations": "the one-row correlation aggregate, "
+    "collected to the driver (curation.quality_signal_correlations)",
+    "winnow_matches": "the pair-count aggregate, eagerly "
+    "localCheckpointed (text.winnow_matches)",
+    "item_item_cf": "the ranked top-k neighbor table, eagerly "
+    "localCheckpointed (basket.item_item_topk)",
+}
+
+
+def _newest_execution(spark) -> tuple[int, str]:
+    """(id, physical plan) of the newest SQL execution in the status
+    store, once the listener bus has delivered every event so far;
+    (-1, "") before any."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    if n == 0:
+        return -1, ""
+    newest = store.executionsList(n - 1, 1).head()
+    return newest.executionId(), newest.physicalPlanDescription()
+
+
 #: Queries allowed to window over a single partition, with the reason
 #: (must be a documented cardinality bound, never "it was fast at sf0.1").
 _SINGLE_TASK_WINDOW_ALLOWED: dict[str, str] = {}
@@ -2305,8 +2338,11 @@ CHECKS.update({
         _NO_CARTESIAN, _JVM_ONLY,
     ],
     "ngram_novelty": [
-        ("novel grams via an anti-join on the 8-byte hash",
-         r"LeftAnti"),
+        # one full-outer join of the two distinct hash sets carries
+        # both presence markers, so one aggregate yields all three
+        # counts; a novel gram is a test-only row of that join
+        ("novel grams via ONE full-outer join of the two distinct "
+         "8-byte hash sets", r"Join \[gh#\d+L?\], \[gh#\d+L?\], FullOuter"),
         ("gram sets partial-aggregated before their shuffles",
          r"HashAggregate[^\n]*partial|partial_count"),
         _NO_CARTESIAN, _JVM_ONLY,
@@ -2483,7 +2519,11 @@ def main() -> int:
                       extra_configs={"spark.sql.shuffle.partitions": "8",
                                      # 150+ probed plans in one JVM:
                                      # UI listener throttles (CLAUDE.md)
-                                     "spark.ui.enabled": "false"})
+                                     "spark.ui.enabled": "false",
+                                     # a finish's input plan is read
+                                     # back from the status store in
+                                     # the executedPlan's own form
+                                     "spark.sql.ui.explainMode": "simple"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = spark_queries()
 
@@ -2503,7 +2543,12 @@ def main() -> int:
     if only is not None:
         targets = [t for t in targets if t[0] in only]
     for name, build, checks in targets:
+        probed = name in _FINISH_INPUT
+        seen = _newest_execution(spark)[0] if probed else -1
         df = build(spark, sf_dir)
+        newest, finish = _newest_execution(spark) if probed else (-1, "")
+        if newest == seen:
+            finish = ""  # the build ran no job
         # collect() executes THIS queryExecution so AQE finalizes —
         # codegen markers (*(n)) only appear in the final plan (a noop
         # write would wrap the df in a fresh, unfinalised plan)
@@ -2512,9 +2557,15 @@ def main() -> int:
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
-        plan = qe.executedPlan().toString() + "\n" + qe.explainString(mode)
+        plan = "\n".join(
+            [qe.executedPlan().toString(), qe.explainString(mode), finish]
+        )
         lines.append(f"## {name}")
         lines.append("")
+        if name in _FINISH_INPUT:
+            lines.append(f"Checks also read the plan of the finish's "
+                         f"input: {_FINISH_INPUT[name]}.")
+            lines.append("")
         for desc, pattern in checks:
             negated = pattern.startswith("!")
             m = re.search(pattern[1:] if negated else pattern, plan)
