@@ -63,20 +63,13 @@ class MessageCounter:
     def get_count(self, msgid: str) -> int:
         """C3: current value, 0 if absent (reference: MessageCounter.cs:87-111).
 
-        A local store's deltas are summed on the driver; on Spark, one
-        msgid's deltas are few: they are summed in one partition, so the
-        read is one Spark stage with no exchange."""
-        n = self.layout.driver_counter_sum(self.spark, msgid)
-        if n is not None:
-            return n
-        row = (
-            self.layout.read_counter_deltas(self.spark)
-            .where(F.col("msgid") == msgid)
-            .coalesce(1)
-            .agg(F.sum("cv").alias("cv"))
-            .first()
-        )
-        return 0 if row["cv"] is None else int(row["cv"])
+        One call to ``EventStoreLayout.counter_sum``, which sums a local
+        store's deltas on the driver and any other store's in one Spark
+        stage. ``msgid`` is a ``str``; None counts nothing (0), as no
+        delta's key equals it; any other type raises TypeError."""
+        if msgid is not None and not isinstance(msgid, str):
+            raise TypeError(f"a msgid is a str, got {type(msgid).__name__}")
+        return self.layout.counter_sum(self.spark, msgid)
 
     def reset(self, msgid: str) -> None:
         """C4: observable result = row present with cv = 0 (reference:

@@ -11,18 +11,19 @@ client-side index-nested-loop.
 The reads that return Python values rather than a DataFrame
 (``load_event_raw``/``load_event``, ``load_with_paging`` and
 ``replay_chunked`` here; ``IndexByEventTypeStore.get_paged`` and
-``MessageCounter.get_count`` likewise) are served on the driver by the
-layout's Arrow reader whenever the store is on the local file system,
-whatever its size: each read streams its directory one record batch at
-a time and holds only what it returns plus the dead keys. No Spark job,
-the same Rows. A store anywhere else (hdfs:/, s3a:/) takes the Spark
-scan below, as do snapshot reads.
+``MessageCounter.get_count`` likewise) are each one call to the layout,
+which answers them on either reader: on the driver through Arrow when
+the store is on the local file system, whatever its size (each read
+streams its directory one record batch at a time and holds only what it
+returns plus the dead keys; no Spark job, the same Rows), and through
+Spark when it is anywhere else (hdfs:/, s3a:/).
 
 The on-disk format of every store (paths, schemas, bucket and (et, pid)
 directories, sort orders, the tombstone log) belongs to
 ``sources/layout.EventStoreLayout``; this module decides what to read
-and write through it, and every Spark load and replay is one
-tombstone-filtered scan (``EventStore._scan``).
+and write through it, and every DataFrame load, snapshot read and
+replay is one tombstone-filtered scan
+(``EventStoreLayout.live_events``).
 
 Physical design for 100 TB:
 - events live in one directory per ``hash(id) % n_buckets`` bucket with
@@ -56,6 +57,7 @@ from inception_eventstore_spark.sources import fsutil
 from inception_eventstore_spark.sources.layout import (
     TOMBSTONE_SCHEMA,
     EventStoreLayout,
+    ts_window,
 )
 
 if TYPE_CHECKING:
@@ -87,15 +89,6 @@ class PlayerOptions:
     after: int | None = None  # inclusive lower ts bound (FileTime)
     before: int | None = None  # inclusive upper ts bound (FileTime)
     event_type_id: str | None = None
-
-
-def _in_window(df: DataFrame, options: PlayerOptions) -> DataFrame:
-    """Rows whose ts lies inside the options' inclusive bounds."""
-    if options.after is not None:
-        df = df.where(F.col("ts") >= options.after)
-    if options.before is not None:
-        df = df.where(F.col("ts") <= options.before)
-    return df
 
 
 def _require_event_type(options: PlayerOptions) -> None:
@@ -359,45 +352,9 @@ class EventStore:
         finally:
             index_rows.unpersist()
 
-    # ------------------------------------------------------------------
-    # The one read path
-    # ------------------------------------------------------------------
-    def _scan(self, aids: list[bytes] | None = None,
-              buckets: list[int] | None = None,
-              version: int | None = None) -> DataFrame:
-        """Live envelope rows; every load and replay reads through here.
-
-        ``aids`` prunes to those aggregates' bucket directories (each
-        computed driver-side, no Spark job) and, by parquet min/max on
-        ``id``, to their files; ``buckets`` prunes to whole bucket
-        directories; ``version`` reads a snapshot's files and tombstones
-        instead of the current ones. Deleted rows are folded out by a
-        broadcast anti-join with the (tiny) tombstone set.
-
-        A scan of exactly one aggregate returns one partition: its rows
-        are a few row groups of one bucket directory (``optimize_buckets``
-        keeps a bucket to a few files), and one task reading them lets a
-        grouping or an ordering on top skip the exchange (and a sort's
-        range-sampling job)."""
-        if aids is not None:
-            aids = [bytes(a) for a in aids]
-            buckets = sorted({self.layout.bucket_of(a) for a in aids})
-        df = self.layout.read_events(self.spark, version)
-        if buckets is not None:
-            df = df.where(F.col("bucket").isin(buckets))
-        df = df.drop("bucket")
-        if aids is not None:
-            df = df.where(F.col("id").isin(aids))
-            if len(set(aids)) == 1:
-                df = df.coalesce(1)
-        tombs = self.layout.read_tombstones(self.spark, version)
-        if tombs is not None:
-            df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
-        return df
-
     def events_df(self) -> DataFrame:
         """Live envelope rows (tombstones folded out via broadcast anti-join)."""
-        return self._scan()
+        return self.layout.live_events(self.spark)
 
     # ------------------------------------------------------------------
     # Snapshots (time travel)
@@ -419,7 +376,7 @@ class EventStore:
     def events_snapshot(self, version: int) -> DataFrame:
         """``events_df`` as of ``version`` — the manifest's event files
         anti-joined with the manifest's (not the current) tombstones."""
-        return self._scan(version=version)
+        return self.layout.live_events(self.spark, version=version)
 
     # ------------------------------------------------------------------
     # Read path
@@ -429,13 +386,17 @@ class EventStore:
         private/public split (reference: CassandraEventStore.cs:112-117,
         AggregateCommitBlock.cs:33-76). Returns the commit DataFrame,
         already ordered by rev; it runs as one Spark stage."""
-        return group_commits(self._scan([aid])).orderBy("rev")
+        return group_commits(
+            self.layout.live_events(self.spark, [aid])
+        ).orderBy("rev")
 
     def load_aggregates(self, aids: list[bytes]) -> DataFrame:
         """Bulk R3: commit streams of MANY aggregates in one job — the
         reference can only loop LoadAsync per aggregate; Spark-first the
         id set becomes one pruned scan + one grouping shuffle."""
-        return group_commits(self._scan(aids)).orderBy("id", "rev")
+        return group_commits(
+            self.layout.live_events(self.spark, aids)
+        ).orderBy("id", "rev")
 
     def load_with_paging(
         self,
@@ -451,14 +412,11 @@ class EventStore:
         Returns (rows, next_token)."""
         keys = (token.keys if token else {}) or {}
         last_rev, last_pos = keys.get("rev"), keys.get("pos")
-        rows = self.layout.driver_event_page(
+        rows = self.layout.event_page(
             self.spark, aid,
             None if last_rev is None else (last_rev, last_pos),
             descending, take + 1,
         )
-        if rows is None:
-            rows = self._page_on_spark(aid, take, last_rev, last_pos,
-                                       descending)
         has_more = len(rows) > take
         rows = rows[:take]
         if rows:
@@ -470,37 +428,10 @@ class EventStore:
             next_token = PagingToken(keys=keys, has_more=False)
         return rows, next_token
 
-    def _page_on_spark(self, aid: bytes, take: int, last_rev, last_pos,
-                       descending: bool) -> list:
-        df = self._scan([aid]).select("rev", "pos", "ts", "data")
-        if last_rev is not None:
-            boundary = (F.col("rev") < last_rev) if descending else (
-                F.col("rev") > last_rev
-            )
-            tie = (F.col("rev") == last_rev) & (
-                (F.col("pos") < last_pos) if descending else (F.col("pos") > last_pos)
-            )
-            df = df.where(boundary | tie)
-        order = (
-            [F.col("rev").desc(), F.col("pos").desc()]
-            if descending
-            else [F.col("rev").asc(), F.col("pos").asc()]
-        )
-        return df.orderBy(*order).limit(take + 1).collect()
-
     def load_event_raw(self, aid: bytes, rev: int, pos: int):
         """R6: point lookup (reference: CassandraEventStore.cs:177-193).
         Returns a Row or None."""
-        rows = self.layout.driver_event(self.spark, aid, rev, pos)
-        if rows is None:
-            rows = (
-                self._scan([aid])
-                .where((F.col("rev") == rev) & (F.col("pos") == pos))
-                .select("data", "ts")
-                .limit(1)
-                .collect()
-            )
-        return rows[0] if rows else None
+        return self.layout.event(self.spark, aid, rev, pos)
 
     def load_event(self, aid: bytes, rev: int, pos: int,
                    deserialize: Callable[[bytes], object]):
@@ -630,7 +561,10 @@ class EventStore:
         pushed down to parquet row groups — the reference applies this
         filter client-side after a full scan (CassandraEventStore.cs:440);
         Catalyst does strictly better (SURVEY §4)."""
-        return _in_window(self.events_df(), options or PlayerOptions())
+        options = options or PlayerOptions()
+        window = ts_window(F.col, options.after, options.before)
+        df = self.events_df()
+        return df if window is None else df.where(window)
 
     def replay_grouped(self, options: PlayerOptions | None = None) -> DataFrame:
         """R10: replay grouped into per-aggregate commit streams
@@ -771,11 +705,11 @@ class EventStore:
         batches the scan reads ahead (a few files' row groups) and the
         dead keys, never a whole bucket, matching the reference's
         page-wise ``IAsyncEnumerable`` contract
-        (CassandraEventStore.cs:416-460): a local bucket streams through
-        the layout's Arrow reader one record batch at a time with the ts
-        window pushed down to row groups, and a bucket of a non-local
-        store streams from a partition-pruned Spark scan one partition
-        at a time."""
+        (CassandraEventStore.cs:416-460): each bucket's rows come from
+        ``EventStoreLayout.bucket_rows``, which streams a local bucket
+        through Arrow one record batch at a time with the ts window
+        pushed down to row groups, and a bucket of a non-local store
+        from a partition-pruned Spark scan one partition at a time."""
         from inception_eventstore_spark.functions.paging import decode_token
 
         options = options or PlayerOptions()
@@ -783,13 +717,9 @@ class EventStore:
         if resume_token is not None:
             start_after = decode_token(resume_token).keys.get("bucket", -1)
         for bucket in range(start_after + 1, self.layout.n_buckets):
-            rows = self.layout.driver_bucket_rows(
+            rows = self.layout.bucket_rows(
                 self.spark, bucket, options.after, options.before
             )
-            if rows is None:
-                rows = _in_window(
-                    self._scan(buckets=[bucket]), options
-                ).toLocalIterator(prefetchPartitions=False)
             n_rows = 0
             chunk: list = []
             for r in rows:

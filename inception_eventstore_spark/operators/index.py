@@ -13,6 +13,7 @@ single ``pid BETWEEN`` predicate that Catalyst prunes statically.
 from __future__ import annotations
 
 import datetime as _dt
+import operator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,9 +32,13 @@ from inception_eventstore_spark.sources.layout import (
 
 def _require_et(et: str | None) -> None:
     """``et = NULL`` matches no index row: refuse a None type rather
-    than answer an empty selection."""
+    than answer an empty selection (ValueError), and any other type
+    that is not a ``str`` (TypeError) rather than let each reader fail
+    its own way."""
     if et is None:
         raise ValueError("an event type is required, got None")
+    if not isinstance(et, str):
+        raise TypeError(f"an event type is a str, got {type(et).__name__}")
 
 
 class IndexByEventTypeStore:
@@ -72,17 +77,22 @@ class IndexByEventTypeStore:
                   token: PagingToken | None = None) -> tuple[list, PagingToken]:
         """X2 paged form with a deterministic keyset token
         (pid, ts, aid, rev, pos) — replaces the reference's opaque
-        driver paging state (:138-170). A local partition is paged on
-        the driver by the layout's Arrow reader (no Spark job); see
-        ``EventStoreLayout.driver_index_page``."""
+        driver paging state (:138-170). The page is one call to
+        ``EventStoreLayout.index_page``, which answers it on either
+        reader (a local partition on the driver, with no Spark job).
+
+        ``et`` is required (ValueError when None, TypeError when not a
+        ``str``); ``pid`` is an integer day number (anything
+        ``operator.index`` accepts, so numpy integers too; TypeError
+        otherwise)."""
+        _require_et(et)
+        pid = operator.index(pid)
         keys = (token.keys if token else {}) or {}
-        rows = self.layout.driver_index_page(
+        rows = self.layout.index_page(
             self.spark, et, pid,
             tuple(keys[k] for k in INDEX_PAGE_KEY) if "ts" in keys else None,
             page_size + 1,
         )
-        if rows is None:
-            rows = self._page_on_spark(et, pid, page_size, keys)
         has_more = len(rows) > page_size
         rows = rows[:page_size]
         if rows:
@@ -100,26 +110,6 @@ class IndexByEventTypeStore:
         else:
             next_token = PagingToken(keys=keys, has_more=False)
         return rows, next_token
-
-    def _page_on_spark(self, et: str, pid: int, page_size: int,
-                       keys: dict) -> list:
-        df = self.get(et, pid)
-        if "ts" in keys:
-            df = df.where(
-                (F.col("ts") > keys["ts"])
-                | (
-                    (F.col("ts") == keys["ts"])
-                    & (
-                        F.struct("aid", "rev", "pos")
-                        > F.struct(
-                            F.lit(keys["aid"]).alias("aid"),
-                            F.lit(keys["rev"]).alias("rev"),
-                            F.lit(keys["pos"]).alias("pos"),
-                        )
-                    )
-                )
-            )
-        return df.limit(page_size + 1).collect()
 
     def records(self, et: str, after: int | None = None,
                 before: int | None = None) -> DataFrame:

@@ -101,28 +101,32 @@ _EVENT_PAGE_KEY = ("rev", "pos")
 INDEX_PAGE_KEY = ("ts", "aid", "rev", "pos")
 
 
-def _past(names: tuple[str, ...], values: tuple,
-          descending: bool = False) -> ds.Expression:
-    """Arrow filter for the rows whose ``names`` columns come after
-    ``values`` in the keyset order: lexicographic, ascending or
-    ``descending`` on every column (binary compares unsigned, as in
-    Spark)."""
+def _past(col, names: tuple[str, ...], values: tuple,
+          descending: bool = False):
+    """Filter for the rows whose ``names`` columns come after ``values``
+    in the keyset order: lexicographic, ascending or ``descending`` on
+    every column; None when ``values`` is. ``col`` is the reader's
+    column constructor, ``ds.field`` or ``F.col``; binary compares
+    unsigned on both."""
+    if values is None:
+        return None
     expr = None
     for name, value in reversed(list(zip(names, values))):
-        col = ds.field(name)
-        past = col < value if descending else col > value
-        expr = past if expr is None else past | ((col == value) & expr)
+        c = col(name)
+        past = c < value if descending else c > value
+        expr = past if expr is None else past | ((c == value) & expr)
     return expr
 
 
-def _ts_window(after: int | None, before: int | None) -> ds.Expression | None:
-    """Arrow filter for ``after`` <= ts <= ``before`` (either bound
-    optional; None when both are)."""
+def ts_window(col, after: int | None, before: int | None):
+    """Filter for ``after`` <= ts <= ``before`` (either bound optional;
+    None when both are), built with the reader's column constructor
+    ``col``, ``ds.field`` or ``F.col``."""
     window = None
     if after is not None:
-        window = ds.field("ts") >= after
+        window = col("ts") >= after
     if before is not None:
-        upper = ds.field("ts") <= before
+        upper = col("ts") <= before
         window = upper if window is None else window & upper
     return window
 
@@ -199,6 +203,22 @@ def _first(tables: Iterable[pa.Table], schema: pa.Schema, order: tuple,
             pc.select_k_unstable(kept, k=limit, sort_keys=list(order))
         )
     return kept.sort_by(list(order)) if order else kept
+
+
+def _collect(df: DataFrame, fields: tuple[str, ...], order: tuple,
+             limit: int | None) -> list[Row]:
+    """The Spark counterpart of ``_first``: the first ``limit`` rows of
+    ``df`` (all when None) in ``order``, ``(column, "ascending" |
+    "descending")`` pairs, collected as the ``Row``s of ``fields``."""
+    df = df.select(*fields)
+    if order:
+        df = df.orderBy(*(F.col(c).desc() if d == "descending"
+                          else F.col(c).asc() for c, d in order))
+    return (df if limit is None else df.limit(limit)).collect()
+
+
+def _where(df: DataFrame, expr: Column | None) -> DataFrame:
+    return df if expr is None else df.where(expr)
 
 
 def _keys(table: pa.Table) -> Iterator[tuple]:
@@ -352,21 +372,25 @@ class EventStoreLayout:
     ``_SUCCESS`` or ``_temporary/`` is already empty; no recursive
     walk looks for a data file first.
 
-    Small reads that end in Python values have a second, driver-local
-    reader built on ``pyarrow.dataset`` (``driver_event``,
-    ``driver_event_page``, ``driver_bucket_rows``, ``driver_index_page``,
-    ``driver_counter_sum``). Callers pass plain key and bound values; the
-    reader builds the Arrow filters itself. It reads one bucket
-    directory, one (et, pid) directory or the counter deltas through one
-    scan (``_batches``) that skips row groups by the filter's parquet
+    The reads that end in Python values (``event``, ``event_page``,
+    ``bucket_rows``, ``index_page``, ``counter_sum``) answer them on
+    either reader, and the caller never sees which one ran. Callers pass
+    plain key and bound values; each read builds its filters with one
+    function per filter (``_past`` for a keyset position, ``ts_window``
+    for a time window) given the reader's column constructor. One rule
+    picks the reader: a store on the local file system (``local_path``)
+    is read on the driver through ``pyarrow.dataset``; any other store
+    is read through Spark, from the tombstone-filtered scan
+    (``live_events``) or the store's pinned-schema read, and collected
+    by ``_collect``. The driver reader reads one bucket directory, one
+    (et, pid) directory or the counter deltas through one scan
+    (``_batches``) that skips row groups by the filter's parquet
     statistics and yields one record batch at a time; each read folds
     the batches as they come (a top-k for a page, a sum for a count, a
     stream for the replay), dropping the dead keys, so only the
     tombstones are held whole. Hidden files are skipped by Spark's rule
     and the directory values supplied, returning the Rows a Spark
-    collect would. One rule picks the path: a store on the local file
-    system (``local_path``) is read on the driver; for any other store
-    each method returns None and the caller reads through Spark.
+    collect would.
     """
 
     warehouse: str
@@ -517,107 +541,151 @@ class EventStoreLayout:
             spark, self.message_store_path, schemas.MESSAGE_STORE_SCHEMA
         )
 
-    # -- driver-local reads: each returns None when the store is not on
-    # the local file system, and the caller then reads through Spark
+    def live_events(self, spark: SparkSession,
+                    aids: list[bytes] | None = None,
+                    buckets: list[int] | None = None,
+                    version: int | None = None) -> DataFrame:
+        """Live envelope rows; every load and replay reads through here.
+
+        ``aids`` prunes to those aggregates' bucket directories (each
+        computed driver-side, no Spark job) and, by parquet min/max on
+        ``id``, to their files; ``buckets`` prunes to whole bucket
+        directories; ``version`` reads a snapshot's files and tombstones
+        instead of the current ones. Deleted rows are folded out by a
+        broadcast anti-join with the (tiny) tombstone set.
+
+        A scan of exactly one aggregate returns one partition: its rows
+        are a few row groups of one bucket directory (``optimize_buckets``
+        keeps a bucket to a few files), and one task reading them lets a
+        grouping or an ordering on top skip the exchange (and a sort's
+        range-sampling job)."""
+        if aids is not None:
+            aids = [bytes(a) for a in aids]
+            buckets = sorted({self.bucket_of(a) for a in aids})
+        df = self.read_events(spark, version)
+        if buckets is not None:
+            df = df.where(F.col("bucket").isin(buckets))
+        df = df.drop("bucket")
+        if aids is not None:
+            df = df.where(F.col("id").isin(aids))
+            if len(set(aids)) == 1:
+                df = df.coalesce(1)
+        tombs = self.read_tombstones(spark, version)
+        if tombs is not None:
+            df = df.join(F.broadcast(tombs), ["id", "rev", "pos"], "left_anti")
+        return df
+
+    # -- served reads: each returns Python values, read on the driver by
+    # the Arrow scan when the store is on the local file system and
+    # through Spark when it is anywhere else
     def _local_roots(self, spark: SparkSession,
                      *paths: str) -> list[str] | None:
         default_fs = _default_fs(spark)
         roots = [local_path(p, default_fs) for p in paths]
         return None if None in roots else roots
 
-    def _driver_events(self, spark: SparkSession, aid: bytes,
-                       fields: tuple[str, ...], where: ds.Expression | None,
-                       order: tuple = (), limit: int | None = None
-                       ) -> list[Row] | None:
-        """Live rows of aggregate ``aid`` that match ``where``, sorted by
-        ``order`` and cut to ``limit``, as the ``Row``s of ``fields`` a
-        Spark collect returns; None when the read belongs to Spark."""
+    def _aggregate_rows(self, spark: SparkSession, aid: bytes,
+                        fields: tuple[str, ...], where,
+                        order: tuple = (), limit: int | None = None
+                        ) -> list[Row]:
+        """Live rows of aggregate ``aid`` that match the filter
+        ``where(col)`` builds with the reader's column constructor (all
+        when it builds None), sorted by ``order`` and cut to ``limit``,
+        as the ``Row``s of ``fields`` a Spark collect returns."""
         aid = bytes(aid)
-        key = ds.field("id") == pa.scalar(aid, pa.binary())
-        where = key if where is None else key & where
         roots = self._local_roots(spark, self.bucket_path(self.bucket_of(aid)),
                                   self.tombstones_path)
         if roots is None:
-            return None
+            df = _where(self.live_events(spark, [aid]), where(F.col))
+            return _collect(df, fields, order, limit)
+        key = ds.field("id") == pa.scalar(aid, pa.binary())
+        match = where(ds.field)
+        match = key if match is None else key & match
         dead = _dead(roots[1], key)
-        live = (_live(t, dead) for t in _batches(roots[0], _EVENTS_ARROW, where))
+        live = (_live(t, dead) for t in _batches(roots[0], _EVENTS_ARROW, match))
         table = _first(live, _EVENTS_ARROW, order, limit)
         return _rows(table, fields, _binary_type(spark))
 
-    def driver_event(self, spark: SparkSession, aid: bytes, rev: int,
-                     pos: int) -> list[Row] | None:
+    def event(self, spark: SparkSession, aid: bytes, rev: int,
+              pos: int) -> Row | None:
         """The live (data, ts) ``Row`` of event (``aid``, ``rev``,
-        ``pos``) read on the driver ([] when there is none); None when
-        the read belongs to Spark."""
-        return self._driver_events(
+        ``pos``), or None when there is none."""
+        rows = self._aggregate_rows(
             spark, aid, ("data", "ts"),
-            (ds.field("rev") == rev) & (ds.field("pos") == pos), limit=1,
+            lambda col: (col("rev") == rev) & (col("pos") == pos), limit=1,
         )
+        return rows[0] if rows else None
 
-    def driver_event_page(self, spark: SparkSession, aid: bytes,
-                          after: tuple[int, int] | None, descending: bool,
-                          limit: int) -> list[Row] | None:
+    def event_page(self, spark: SparkSession, aid: bytes,
+                   after: tuple[int, int] | None, descending: bool,
+                   limit: int) -> list[Row]:
         """Up to ``limit`` live (rev, pos, ts, data) ``Row``s of
-        aggregate ``aid`` read on the driver, in (rev, pos) order
-        (``descending`` or not), starting past the keyset position
-        ``after`` = (rev, pos) when given; None when the read belongs to
-        Spark."""
+        aggregate ``aid`` in (rev, pos) order (``descending`` or not),
+        starting past the keyset position ``after`` = (rev, pos) when
+        given."""
         direction = "descending" if descending else "ascending"
-        return self._driver_events(
+        return self._aggregate_rows(
             spark, aid, ("rev", "pos", "ts", "data"),
-            None if after is None else _past(_EVENT_PAGE_KEY, after,
-                                             descending),
+            lambda col: _past(col, _EVENT_PAGE_KEY, after, descending),
             tuple((k, direction) for k in _EVENT_PAGE_KEY), limit,
         )
 
-    def driver_bucket_rows(self, spark: SparkSession, bucket: int,
-                           after: int | None, before: int | None
-                           ) -> Iterator[Row] | None:
+    def bucket_rows(self, spark: SparkSession, bucket: int,
+                    after: int | None, before: int | None) -> Iterator[Row]:
         """Live rows of one bucket whose ts lies in [``after``,
-        ``before``] (each bound optional), streamed on the driver as
-        (id, rev, pos, ts, data) ``Row``s one record batch at a time;
-        None when the read belongs to Spark. Only the dead keys are held
-        whole; the bucket itself may be of any size."""
+        ``before``] (each bound optional), streamed as (id, rev, pos,
+        ts, data) ``Row``s: on the driver one record batch at a time,
+        holding only the dead keys whole; on Spark from a
+        partition-pruned scan one partition at a time. The bucket itself
+        may be of any size."""
         roots = self._local_roots(spark, self.bucket_path(bucket),
                                   self.tombstones_path)
         if roots is None:
-            return None
+            df = _where(self.live_events(spark, buckets=[bucket]),
+                        ts_window(F.col, after, before))
+            return df.toLocalIterator(prefetchPartitions=False)
         dead, binary = _dead(roots[1], None), _binary_type(spark)
         return (
             row
-            for t in _batches(roots[0], _EVENTS_ARROW, _ts_window(after, before))
+            for t in _batches(roots[0], _EVENTS_ARROW,
+                              ts_window(ds.field, after, before))
             for row in _rows(_live(t, dead), tuple(_EVENTS_ARROW.names), binary)
         )
 
-    def driver_index_page(self, spark: SparkSession, et: str, pid: int,
-                          after: tuple | None, limit: int
-                          ) -> list[Row] | None:
-        """Up to ``limit`` rows of one (et, pid) index directory read on
-        the driver, as the ``Row``s of a Spark collect of the index
-        (``et`` and ``pid`` are the directory's values), in
+    def index_page(self, spark: SparkSession, et: str, pid: int,
+                   after: tuple | None, limit: int) -> list[Row]:
+        """Up to ``limit`` rows of the (``et``, ``pid``) index directory
+        as the ``Row``s of a Spark collect of the index, in
         ``INDEX_PAGE_KEY`` order starting past the keyset position
-        ``after`` (its values) when given; None when the read belongs
-        to Spark."""
-        if not (isinstance(et, str) and isinstance(pid, int)):
-            return None
+        ``after`` (its values) when given; [] when there is no such
+        directory."""
+        fields = tuple(schemas.INDEX_SCHEMA.names)
+        order = tuple((k, "ascending") for k in INDEX_PAGE_KEY)
         roots = self._local_roots(spark, self.index_partition_path(et, pid))
         if roots is None:
-            return None
-        where = None if after is None else _past(INDEX_PAGE_KEY, after)
+            df = self.read_index(spark, et).where(F.col("pid") == pid)
+            df = _where(df, _past(F.col, INDEX_PAGE_KEY, after))
+            return _collect(df, fields, order, limit)
+        where = _past(ds.field, INDEX_PAGE_KEY, after)
         table = _first(_batches(roots[0], _INDEX_ARROW, where), _INDEX_ARROW,
-                       tuple((k, "ascending") for k in INDEX_PAGE_KEY), limit)
-        return _rows(table, tuple(schemas.INDEX_SCHEMA.names),
-                     _binary_type(spark), {"et": et, "pid": pid})
+                       order, limit)
+        return _rows(table, fields, _binary_type(spark), {"et": et, "pid": pid})
 
-    def driver_counter_sum(self, spark: SparkSession,
-                           msgid: str) -> int | None:
-        """Σ cv of ``msgid``'s counter deltas read on the driver (0 when
-        it has none); None when the read belongs to Spark."""
-        if not isinstance(msgid, str):
-            return None
+    def counter_sum(self, spark: SparkSession, msgid: str | None) -> int:
+        """Σ cv of ``msgid``'s counter deltas, 0 when it has none (and
+        for a None ``msgid``, which no delta's key equals). On Spark one
+        msgid's deltas are few: they are summed in one partition, so the
+        read is one stage with no exchange."""
         roots = self._local_roots(spark, self.counter_path)
         if roots is None:
-            return None
+            row = (
+                self.read_counter_deltas(spark)
+                .where(F.col("msgid") == msgid)
+                .coalesce(1)
+                .agg(F.sum("cv").alias("cv"))
+                .first()
+            )
+            return 0 if row["cv"] is None else int(row["cv"])
         deltas = _batches(roots[0], _COUNTER_ARROW, ds.field("msgid") == msgid)
         return sum(sum(t.column("cv").to_pylist()) for t in deltas)
 

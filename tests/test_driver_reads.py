@@ -1,13 +1,16 @@
-"""The driver-local reader and the Spark path return the same answers.
+"""The layout answers each served read the same on either reader.
 
-Every read the layout's Arrow reader serves (``load_event_raw``,
+Every read that returns Python values (``load_event_raw``,
 ``load_with_paging``, ``get_paged``, ``get_count``, ``replay_chunked``)
-runs once on the driver (the store is local, so the layout's one rule
-picks the Arrow reader, which must launch no Spark job) and once on the
-Spark path, reached through the same rule: under an ``hdfs:`` default
-file system a scheme-less store path is not local, while the JVM still
-reads the local files. The results must be equal value for value, field
-order and Python types included.
+is one call to the layout, which picks its reader by one rule. Each runs
+once on the driver (the store is local, so the layout reads it through
+Arrow, which must launch no Spark job) and once on Spark, reached
+through the same rule: under an ``hdfs:`` default file system a
+scheme-less store path is not local, while the JVM still reads the local
+files. That run must launch a Spark job wherever it reads a file, so a
+wrong rule cannot send both runs to Arrow. The results must be equal
+value for value, field order and Python types included, and a bad
+argument must fail the same way on both readers.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ T0 = datetime_to_filetime(dt.datetime(2024, 3, 14, 23, 59, 0,
 SEC = 10_000_000
 TYPES = ("ns:Created", "007", "7")
 N_BUCKETS = 4
+PID = pid_from_filetime(T0)
 AIDS = [b"agg-%02d-" % i + bytes([0x80 + i, i]) for i in range(12)]
 
 
@@ -80,14 +84,18 @@ def _on_spark(monkeypatch):
     monkeypatch.setattr(L, "_default_fs", lambda spark: "hdfs://nn:8020")
 
 
-def _both_paths(spark, monkeypatch, action):
+def _both_paths(spark, monkeypatch, action, reads_files=True):
     """``action`` on the driver path (asserting it ran no Spark job) and
-    on the Spark path; asserts the two agree and returns the result."""
+    on the Spark path (asserting it ran one or more, unless
+    ``reads_files`` is False: a read of a missing directory may be
+    answered without a job); asserts the two agree and returns the
+    result."""
     on_driver, jobs = _jobs_of(spark, action)
     assert jobs == 0
     with monkeypatch.context() as m:
         _on_spark(m)
-        on_spark = action()
+        on_spark, jobs = _jobs_of(spark, action)
+    assert jobs >= 1 or not reads_files
     assert _typed(on_driver) == _typed(on_spark)
     return on_driver
 
@@ -198,17 +206,61 @@ def test_get_paged_three_pages(spark, monkeypatch, es, et):
 def test_get_paged_missing_partition(spark, monkeypatch, es, et, pid):
     _, index = es
     rows, token = _both_paths(
-        spark, monkeypatch, lambda: index.get_paged(et, pid, 10)
+        spark, monkeypatch, lambda: index.get_paged(et, pid, 10),
+        reads_files=False,
     )
     assert rows == [] and token.has_more is False
 
 
-@pytest.mark.parametrize("et", TYPES + ("never-seen",))
+@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("et,pid,error", [
+    (None, PID, ValueError),
+    (7, PID, TypeError),
+    (b"007", PID, TypeError),
+    ("007", "20240314", TypeError),
+    ("007", 1.0, TypeError),
+    ("007", None, TypeError),
+])
+def test_get_paged_refuses_a_bad_partition(spark, monkeypatch, es, path,
+                                           et, pid, error):
+    """A None type, a type that is not a ``str`` and a pid that is not
+    an integer are refused up front, the same on both readers."""
+    _, index = es
+    if path == "spark":
+        _on_spark(monkeypatch)
+    with pytest.raises(error):
+        index.get_paged(et, pid, 10)
+
+
+def test_get_paged_takes_a_numpy_pid(spark, monkeypatch, es):
+    """A numpy integer pid is an integer: the page and its token hold
+    the same Python ``int`` as with a plain pid."""
+    np = pytest.importorskip("numpy")
+    _, index = es
+    page = _both_paths(
+        spark, monkeypatch, lambda: index.get_paged("007", np.int64(PID), 4)
+    )
+    assert _typed(page) == _typed(index.get_paged("007", PID, 4))
+
+
+@pytest.mark.parametrize("et", TYPES + ("never-seen", None))
 def test_get_count(spark, monkeypatch, es, et):
+    """None counts nothing: no delta's key equals it."""
     store, _ = es
     counter = MessageCounter(spark, store.layout)
     n = _both_paths(spark, monkeypatch, lambda: counter.get_count(et))
     assert n == (48 if et in TYPES else 0)
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("msgid", [7, b"007"])
+def test_get_count_refuses_a_msgid_that_is_not_a_str(spark, monkeypatch, es,
+                                                     path, msgid):
+    store, _ = es
+    if path == "spark":
+        _on_spark(monkeypatch)
+    with pytest.raises(TypeError):
+        MessageCounter(spark, store.layout).get_count(msgid)
 
 
 @pytest.mark.parametrize("path", ["driver", "spark"])

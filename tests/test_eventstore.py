@@ -405,7 +405,7 @@ class TestIngestMaintainsDerivedViews:
         store.append_commits(
             [AggregateCommit(AID1, 1, T0, [_payload("x")], [])]
         )
-        df = store._scan([AID1])
+        df = store.layout.live_events(store.spark, [AID1])
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [isnotnull(bucket" in plan or (
             "bucket#" in plan and "PartitionFilters" in plan
