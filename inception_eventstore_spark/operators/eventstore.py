@@ -338,10 +338,12 @@ class EventStore:
             # Spark invalidates caches over a just-written path — a
             # lazily-recomputed plan would then see its own output and
             # anti-join the counter deltas away. Severing the lineage
-            # pins the survivor set computed BEFORE the write.
+            # pins the survivor set computed BEFORE the write, and both
+            # writes read that checkpoint as it is.
             index_rows = self._drop_already_indexed(index_rows)
             index_rows = index_rows.localCheckpoint(eager=True)
-        index_rows = index_rows.persist()
+        else:
+            index_rows = index_rows.persist()
         try:
             self.layout.write_index(index_rows)
             self.layout.write_counter_deltas(
@@ -350,7 +352,8 @@ class EventStore:
                 )
             )
         finally:
-            index_rows.unpersist()
+            if not anti_join_existing:
+                index_rows.unpersist()
 
     def events_df(self) -> DataFrame:
         """Live envelope rows (tombstones folded out via broadcast anti-join)."""

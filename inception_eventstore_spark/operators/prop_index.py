@@ -160,7 +160,7 @@ class PropertyIndex:
         ONE bucket directory (partition filter planned driver-side),
         then the exact value equality inside it, PK-deduped: the
         eventstore retry path intentionally re-appends a redelivered
-        batch (eventstore.py:216-222), so the raw index rows can carry
+        batch (EventStore._append_rows), so the raw index rows can carry
         duplicates — callers joining lookup() output directly must see
         each key once. Raises FileNotFoundError for an index with no
         data at all (never built, or built from rows whose property was

@@ -2755,7 +2755,9 @@ def q_merge_changelog(spark, sf_dir):
 
 
 # ----------------------------------------------------------------------
-# Registry
+# Registry: one dict, grown by each family below with QUERIES.update
+# next to its builders; spark_queries() and oracle_queries() list it in
+# name order.
 # ----------------------------------------------------------------------
 QUERIES: dict[str, QueryDef] = {
     "r3_load_aggregate": QueryDef(
@@ -3489,96 +3491,6 @@ QUERIES: dict[str, QueryDef] = {
     ),
 }
 
-# The driver's correctness sampler reads a PREFIX of this registry in
-# declaration order (CORRECTNESS_r02 covered exactly the first 50 of 76
-# declared queries, leaving every round-2 addition without a driver-side
-# evidence row — VERDICT r2 "missing" #1). Rotate the queries that still
-# lack a driver correctness row to the front so the sampled window always
-# covers the newest operators; the 50 already-evidenced queries follow.
-_SAMPLE_FIRST = [
-    "chunk_docs", "vocab_top100", "lm_bigram_score", "dedup_survivors",
-    "mixture_temperature", "funnel_conversion", "cohort_retention",
-    "value_percentiles", "embedding_covariance", "pca_project",
-    "event_transitions", "multimodal_real_decode", "sim_multi_topk",
-    "nearest_join", "profile_events", "expectations",
-    "text_quality_scores", "dedup_minhash_lsh", "dedup_simhash",
-    "sim_topk_lsh", "sim_topk_ivf", "sim_topk_ivfpq",
-    "sim_cosine_near_dup", "multimodal_features", "text_fingerprints",
-    "decontaminate", "regression_trend", "cube_orders", "window_funcs",
-    "value_histogram", "multimodal_frame_plan", "embedding_dim_stats",
-    "tfidf_weights", "bow_embedding_buckets", "domain_stats",
-    "dsir_importance", "quality_quantile_filter", "pack_sequences",
-    "pack_greedy_stats", "kmeans_assign", "cluster_balanced_sample",
-    "merge_changelog",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _SAMPLE_FIRST},
-    **{n: qd for n, qd in QUERIES.items() if n not in _SAMPLE_FIRST},
-}
-
-
-# Driver-ledger rotation (r6 verdict missing #1): the external driver
-# samples ~50 queries per round from the FRONT of the registry dict,
-# and every round's additions prepend (`QUERIES = {**_Rx, **QUERIES}`),
-# so 44 queries had never appeared in any CORRECTNESS_r*.json despite
-# passing the local gate each round. The export functions below emit
-# these never-driver-checked names FIRST so the r7 driver window lands
-# on them; remove names from this list as driver rows appear.
-_DRIVER_LEDGER_FRONT = [
-    # r11 rotation (VERDICT r10 next #5). The front surfaces THIS
-    # round's new and changed oracles/plans: the 5 r11 queries, the
-    # three queries whose operators took the r10-ADVICE overflow-guard
-    # fixes (hhi decimal square + cr1 decimal multiply,
-    # capture_recapture guard-inside-n_hat, interval_join inverted-
-    # interval raise), the modularity/LPA pair (graph_modularity
-    # shares LPA's plan), and a band of oracles the driver has not
-    # sampled since r8 (mid-registry rows the front-50 window never
-    # reaches).
-    # r11 new:
-    "kn_continuation", "retrieval_map", "graph_modularity",
-    "conformal_interval", "bh_fdr_signtest", "hilbert_cells",
-    "graph_assortativity", "kmv_users_setops", "croston_purchases",
-    "gains_acctbal", "wasserstein_value_drift",
-    # r11-touched operators (ADVICE r10 fixes):
-    "hhi_supplier_nation", "capture_recapture", "interval_join_windows",
-    # shares a plan with the new modularity query:
-    "graph_lpa_knn",
-    # not driver-sampled since r8, most not since r6 (checked against
-    # CORRECTNESS_r01..r10.json — the mid-registry band the front-50
-    # window never reaches):
-    "km_survival", "mmr_diverse_topk", "graph_kcore", "benford_audit",
-    "cusum_changepoints", "retrieval_ndcg", "snapshot_diff",
-    "conversion_ci", "frequent_paths", "acf_daily",
-    "gini_concentration", "sim_topk_filtered", "markov_stationary",
-    "session_flow", "woe_iv", "did_estimate", "label_noise",
-    "kmv_distinct", "bootstrap_ci", "cuped_estimate", "srm_check",
-    "ccf_leadlag", "dbscan_clusters", "theil_sen_trend",
-    "rake_keywords", "holt_linear", "item_item_cf",
-    "isotonic_calibration", "hll_sliding_distinct",
-    "quantile_normalize", "mad_outlier_days", "ess_report",
-    "source_similarity_js", "ratio_metric_ci", "threshold_sweep",
-    "dispersion_report", "lsh_band_plan",
-]
-
-
-def _ledger_ordered() -> list[str]:
-    front = [n for n in _DRIVER_LEDGER_FRONT if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(front)]
-    return front + rest
-
-
-def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].spark for name in _ledger_ordered()}
-
-
-def oracle_queries() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in _ledger_ordered()
-        if QUERIES[name].oracle is not None
-    }
-
-
 # ----------------------------------------------------------------------
 # Round-3 second-wave additions: retrieval, linkage, substring dedup,
 # KNN graph, tokenizer/collocation stats, PageRank, TPC-H-shape extras
@@ -3958,7 +3870,7 @@ def q_q22_acctbal_antijoin(spark, sf_dir):
     )
 
 
-_R3B_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "retrieval_bm25": QueryDef(q_retrieval_bm25, _bm25_oracle()),
     "fuzzy_join_names": QueryDef(q_fuzzy_join_names, _FUZZY_ORACLE),
     "dedup_substring_spans": QueryDef(
@@ -4020,11 +3932,7 @@ _R3B_QUERIES: dict[str, QueryDef] = {
         "                AND o_orderpriority = '1-URGENT') "
         "GROUP BY c_nationkey ORDER BY c_nationkey",
     ),
-}
-
-# new queries rotate to the FRONT so the driver's prefix-sampling
-# correctness window always covers the newest operators (VERDICT r2 #3)
-QUERIES = {**_R3B_QUERIES, **QUERIES}
+})
 
 
 def q_rolling_anomalies(spark, sf_dir):
@@ -4097,11 +4005,10 @@ def _zorder_oracle() -> str:
     )
 
 
-_R3C_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "rolling_anomalies": QueryDef(q_rolling_anomalies, _ROLLING_ORACLE),
     "zorder_cells": QueryDef(q_zorder_cells, _zorder_oracle()),
-}
-QUERIES = {**_R3C_QUERIES, **QUERIES}
+})
 
 
 # Property-index lookups: built once per (sf_dir, process) like the ANN
@@ -4148,14 +4055,13 @@ def q_props_index_lookup(spark, sf_dir):
     return idx.probe(ev, 69).select("event_id", "user_id", "event_type")
 
 
-_R3D_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "props_index_lookup": QueryDef(
         q_props_index_lookup,
         "SELECT event_id, user_id, event_type FROM events "
         "WHERE CAST(props->>'$.k' AS BIGINT) = 69",
     ),
-}
-QUERIES = {**_R3D_QUERIES, **QUERIES}
+})
 
 
 def q_basket_lift(spark, sf_dir):
@@ -4193,10 +4099,9 @@ FROM p JOIN ic ca ON item_a = ca.it JOIN ic cb ON item_b = cb.it
 ORDER BY lift DESC, item_a, item_b LIMIT 100
 """
 
-_R3E_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "basket_lift": QueryDef(q_basket_lift, _BASKET_ORACLE),
-}
-QUERIES = {**_R3E_QUERIES, **QUERIES}
+})
 
 
 def q_q2_min_cost_supplier(spark, sf_dir):
@@ -4302,7 +4207,7 @@ def q_q18_large_orders(spark, sf_dir):
     )
 
 
-_R3F_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "q2_min_cost_supplier": QueryDef(
         q_q2_min_cost_supplier,
         "WITH offer AS (SELECT l_partkey, l_suppkey, "
@@ -4346,8 +4251,7 @@ _R3F_QUERIES: dict[str, QueryDef] = {
         "JOIN customer ON o_custkey = c_custkey "
         "ORDER BY o_totalprice DESC, o_orderkey LIMIT 100",
     ),
-}
-QUERIES = {**_R3F_QUERIES, **QUERIES}
+})
 
 
 _MATVIEW_DIRS: dict[str, str] = {}
@@ -4424,7 +4328,7 @@ def q_q15_top_supplier(spark, sf_dir):
     )
 
 
-_R3G_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "matview_orders": QueryDef(
         q_matview_orders,
         "SELECT o_orderstatus, count(*) AS n, "
@@ -4445,8 +4349,7 @@ _R3G_QUERIES: dict[str, QueryDef] = {
         "WHERE total_revenue = (SELECT max(total_revenue) FROM rev) "
         "ORDER BY s_suppkey",
     ),
-}
-QUERIES = {**_R3G_QUERIES, **QUERIES}
+})
 
 
 _DUCK_MD5_60 = (
@@ -4525,11 +4428,10 @@ FROM rn JOIN off USING (len_bucket)
 """
 
 
-_R3H_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "epoch_shuffle": QueryDef(q_epoch_shuffle, _epoch_shuffle_oracle()),
     "length_batches": QueryDef(q_length_batches, _length_batches_oracle()),
-}
-QUERIES = {**_R3H_QUERIES, **QUERIES}
+})
 
 
 def q_knn_graph_lsh(spark, sf_dir):
@@ -4583,10 +4485,9 @@ FROM r WHERE rank <= {k}
 """
 
 
-_R3I_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "knn_graph_lsh": QueryDef(q_knn_graph_lsh, _knn_graph_lsh_oracle()),
-}
-QUERIES = {**_R3I_QUERIES, **QUERIES}
+})
 
 
 def q_q3_shipping_priority(spark, sf_dir):
@@ -4653,7 +4554,7 @@ def q_q10_returned_items(spark, sf_dir):
     )
 
 
-_R3J_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "q3_shipping_priority": QueryDef(
         q_q3_shipping_priority,
         "WITH rev AS (SELECT l_orderkey, o_orderdate, "
@@ -4681,8 +4582,7 @@ _R3J_QUERIES: dict[str, QueryDef] = {
         "SELECT c_custkey, c_name, n_name, revenue FROM rev "
         "ORDER BY revenue DESC, c_custkey LIMIT 20",
     ),
-}
-QUERIES = {**_R3J_QUERIES, **QUERIES}
+})
 
 
 def q_retrieval_bm25_multi(spark, sf_dir):
@@ -4737,12 +4637,11 @@ FROM r WHERE rank <= 5
 """
 
 
-_R3K_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "retrieval_bm25_multi": QueryDef(
         q_retrieval_bm25_multi, _bm25_multi_oracle()
     ),
-}
-QUERIES = {**_R3K_QUERIES, **QUERIES}
+})
 
 
 def q_lm_stupid_backoff(spark, sf_dir):
@@ -4796,12 +4695,11 @@ FROM sc GROUP BY doc_id
 """
 
 
-_R3L_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "lm_stupid_backoff": QueryDef(
         q_lm_stupid_backoff, _stupid_backoff_oracle()
     ),
-}
-QUERIES = {**_R3L_QUERIES, **QUERIES}
+})
 
 
 def q_q7_nation_volume(spark, sf_dir):
@@ -4890,7 +4788,7 @@ def q_q16_supplier_counts(spark, sf_dir):
     )
 
 
-_R3M_QUERIES: dict[str, QueryDef] = {
+QUERIES.update({
     "q7_nation_volume": QueryDef(
         q_q7_nation_volume,
         "SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, "
@@ -4925,31 +4823,7 @@ _R3M_QUERIES: dict[str, QueryDef] = {
         "GROUP BY p_brand, p_type, p_size "
         "ORDER BY supplier_cnt DESC, p_brand, p_type, p_size",
     ),
-}
-QUERIES = {**_R3M_QUERIES, **QUERIES}
-
-# ----------------------------------------------------------------------
-# Round-4 rotation: the driver's correctness sampler still reads a
-# ~50-query PREFIX of this registry. 18 r2-era queries have never had a
-# driver evidence row in any round (VERDICT r3 "missing" #1 — the r3
-# rotation pushed them out of the window), and `multimodal_real_decode`
-# was red in r03 (fixed this round) and needs a green row. Pull exactly
-# those to the front; everything already driver-evidenced follows in its
-# prior order. Any NEW r4 queries must be prepended AHEAD of this list.
-# ----------------------------------------------------------------------
-_R4_SAMPLE_FIRST = [
-    "sim_topk_ivfpq", "decontaminate", "regression_trend", "cube_orders",
-    "window_funcs", "value_histogram", "multimodal_frame_plan",
-    "embedding_dim_stats", "tfidf_weights", "bow_embedding_buckets",
-    "domain_stats", "dsir_importance", "quality_quantile_filter",
-    "pack_sequences", "pack_greedy_stats", "kmeans_assign",
-    "cluster_balanced_sample", "merge_changelog", "multimodal_real_decode",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _R4_SAMPLE_FIRST},
-    **{n: qd for n, qd in QUERIES.items() if n not in _R4_SAMPLE_FIRST},
-}
-
+})
 
 # ----------------------------------------------------------------------
 # Round-4 additions: the six TPC-H query shapes still missing (Q4, Q5,
@@ -5221,7 +5095,7 @@ def q_q21_waiting_suppliers(spark, sf_dir):
     )
 
 
-_R4A_QUERIES = {
+QUERIES.update({
     "q4_order_priority": QueryDef(
         q_q4_order_priority,
         "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_cnt "
@@ -5308,8 +5182,7 @@ _R4A_QUERIES = {
         "JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_2' "
         "GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100",
     ),
-}
-QUERIES = {**_R4A_QUERIES, **QUERIES}
+})
 
 
 def q_text_entropy(spark, sf_dir):
@@ -5325,7 +5198,7 @@ def q_text_entropy(spark, sf_dir):
     return char_entropy(docs).orderBy("doc_id")
 
 
-_R4B_QUERIES = {
+QUERIES.update({
     "text_entropy": QueryDef(
         q_text_entropy,
         "WITH d AS (SELECT doc_id, text FROM documents WHERE len(text) > 0), "
@@ -5345,8 +5218,7 @@ _R4B_QUERIES = {
         "FROM ent JOIN fr ON ent.doc_id = fr.doc_id "
         "ORDER BY ent.doc_id",
     ),
-}
-QUERIES = {**_R4B_QUERIES, **QUERIES}
+})
 
 
 # --- r4 second wave: graph analytics / EWMA / weighted sampling / PPMI ---
@@ -5570,7 +5442,7 @@ ORDER BY ppmi DESC, tok_x, tok_y LIMIT 100
 """
 
 
-_R4C_QUERIES = {
+QUERIES.update({
     "graph_lpa_knn": QueryDef(q_graph_lpa, _lpa_oracle()),
     "graph_triangles_knn": QueryDef(q_graph_triangles, _TRIANGLES_ORACLE),
     "graph_adamic_adar_knn": QueryDef(
@@ -5581,8 +5453,7 @@ _R4C_QUERIES = {
         q_weighted_sample, _WEIGHTED_SAMPLE_ORACLE
     ),
     "skipgram_ppmi": QueryDef(q_skipgram_ppmi, _SKIPGRAM_PPMI_ORACLE),
-}
-QUERIES = {**_R4C_QUERIES, **QUERIES}
+})
 
 
 def q_multimodal_sample_frames(spark, sf_dir):
@@ -5619,12 +5490,11 @@ FROM f ORDER BY asset_id, frame_idx
 """
 
 
-_R4D_QUERIES = {
+QUERIES.update({
     "multimodal_sample_frames": QueryDef(
         q_multimodal_sample_frames, _SAMPLE_FRAMES_ORACLE
     ),
-}
-QUERIES = {**_R4D_QUERIES, **QUERIES}
+})
 
 
 def q_multimodal_resize(spark, sf_dir):
@@ -5692,12 +5562,11 @@ def _multimodal_resize_oracle(n: int = 256) -> str:
     return sql
 
 
-_R4E_QUERIES = {
+QUERIES.update({
     "multimodal_resize": QueryDef(
         q_multimodal_resize, _multimodal_resize_oracle()
     ),
-}
-QUERIES = {**_R4E_QUERIES, **QUERIES}
+})
 
 
 def q_text_normalize(spark, sf_dir):
@@ -5746,10 +5615,9 @@ FROM c ORDER BY doc_id
 """
 
 
-_R4F_QUERIES = {
+QUERIES.update({
     "text_normalize": QueryDef(q_text_normalize, _TEXT_NORMALIZE_ORACLE),
-}
-QUERIES = {**_R4F_QUERIES, **QUERIES}
+})
 
 
 def q_random_projection(spark, sf_dir):
@@ -5795,12 +5663,11 @@ def _random_projection_oracle(out_dim: int = 8, d: int = 64) -> str:
     )
 
 
-_R4G_QUERIES = {
+QUERIES.update({
     "random_projection": QueryDef(
         q_random_projection, _random_projection_oracle()
     ),
-}
-QUERIES = {**_R4G_QUERIES, **QUERIES}
+})
 
 
 #: Fixed merge list for the encode query — oracle strings are static
@@ -5861,10 +5728,9 @@ def _bpe_encode_oracle() -> str:
     )
 
 
-_R4H_QUERIES = {
+QUERIES.update({
     "bpe_encode_words": QueryDef(q_bpe_encode_words, _bpe_encode_oracle()),
-}
-QUERIES = {**_R4H_QUERIES, **QUERIES}
+})
 
 
 def q_dedup_containment(spark, sf_dir):
@@ -5899,10 +5765,9 @@ WHERE containment >= 0.5 ORDER BY id_a, id_b
 """
 
 
-_R4I_QUERIES = {
+QUERIES.update({
     "dedup_containment": QueryDef(q_dedup_containment, _CONTAINMENT_ORACLE),
-}
-QUERIES = {**_R4I_QUERIES, **QUERIES}
+})
 
 
 def q_quality_model_score(spark, sf_dir):
@@ -5936,12 +5801,11 @@ FROM s ORDER BY doc_id
 """
 
 
-_R4J_QUERIES = {
+QUERIES.update({
     "quality_model_score": QueryDef(
         q_quality_model_score, _QUALITY_MODEL_ORACLE
     ),
-}
-QUERIES = {**_R4J_QUERIES, **QUERIES}
+})
 
 
 def q_sliding_active_users(spark, sf_dir):
@@ -5974,12 +5838,11 @@ ORDER BY counts.day
 """
 
 
-_R4K_QUERIES = {
+QUERIES.update({
     "sliding_active_users": QueryDef(
         q_sliding_active_users, _SLIDING_USERS_ORACLE
     ),
-}
-QUERIES = {**_R4K_QUERIES, **QUERIES}
+})
 
 
 def q_resample_ffill(spark, sf_dir):
@@ -6069,13 +5932,12 @@ FROM sw GROUP BY day ORDER BY day
 """
 
 
-_R4L_QUERIES = {
+QUERIES.update({
     "resample_ffill": QueryDef(q_resample_ffill, _RESAMPLE_ORACLE),
     "session_concurrency": QueryDef(
         q_session_concurrency, _SESSION_CONCURRENCY_ORACLE
     ),
-}
-QUERIES = {**_R4L_QUERIES, **QUERIES}
+})
 
 
 def q_sq8_codes(spark, sf_dir):
@@ -6195,11 +6057,10 @@ SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_exact,
 """
 
 
-_R4M_QUERIES = {
+QUERIES.update({
     "sq8_codes": QueryDef(q_sq8_codes, _SQ8_CODES_ORACLE),
     "sq8_recall": QueryDef(q_sq8_recall, _SQ8_RECALL_ORACLE),
-}
-QUERIES = {**_R4M_QUERIES, **QUERIES}
+})
 
 
 def q_abandoned_after(spark, sf_dir):
@@ -6269,13 +6130,12 @@ ORDER BY lang, doc_id
 """
 
 
-_R4N_QUERIES = {
+QUERIES.update({
     "abandoned_after": QueryDef(q_abandoned_after, _ABANDONED_ORACLE),
     "weighted_sample_by_lang": QueryDef(
         q_weighted_sample_by_lang, _WEIGHTED_GROUP_ORACLE
     ),
-}
-QUERIES = {**_R4N_QUERIES, **QUERIES}
+})
 
 
 def q_negative_samples(spark, sf_dir):
@@ -6323,12 +6183,11 @@ ORDER BY sample_id
 """
 
 
-_R4O_QUERIES = {
+QUERIES.update({
     "negative_samples": QueryDef(
         q_negative_samples, _NEGATIVE_SAMPLES_ORACLE
     ),
-}
-QUERIES = {**_R4O_QUERIES, **QUERIES}
+})
 
 
 def q_psi_drift(spark, sf_dir):
@@ -6388,10 +6247,9 @@ FROM j ORDER BY bin
 """
 
 
-_R4P_QUERIES = {
+QUERIES.update({
     "psi_drift": QueryDef(q_psi_drift, _PSI_ORACLE),
-}
-QUERIES = {**_R4P_QUERIES, **QUERIES}
+})
 
 
 def q_canonical_urls(spark, sf_dir):
@@ -6477,10 +6335,9 @@ FROM canon GROUP BY canonical_url ORDER BY canonical_url
 """
 
 
-_R4Q_QUERIES = {
+QUERIES.update({
     "canonical_urls": QueryDef(q_canonical_urls, _CANONICAL_URL_ORACLE),
-}
-QUERIES = {**_R4Q_QUERIES, **QUERIES}
+})
 
 
 def q_state_runs(spark, sf_dir):
@@ -6536,11 +6393,10 @@ FROM freq ORDER BY idx
 """
 
 
-_R4R_QUERIES = {
+QUERIES.update({
     "state_runs": QueryDef(q_state_runs, _STATE_RUNS_ORACLE),
     "string_indexer": QueryDef(q_string_indexer, _STRING_INDEXER_ORACLE),
-}
-QUERIES = {**_R4R_QUERIES, **QUERIES}
+})
 
 
 def q_ks_drift(spark, sf_dir):
@@ -6585,10 +6441,9 @@ FROM s GROUP BY n1, n2
 """
 
 
-_R4S_QUERIES = {
+QUERIES.update({
     "ks_drift": QueryDef(q_ks_drift, _KS_ORACLE),
-}
-QUERIES = {**_R4S_QUERIES, **QUERIES}
+})
 
 
 def q_latest_property_state(spark, sf_dir):
@@ -6632,12 +6487,11 @@ FROM r WHERE rn = 1 ORDER BY user_id, prop_key
 """
 
 
-_R4T_QUERIES = {
+QUERIES.update({
     "latest_property_state": QueryDef(
         q_latest_property_state, _LATEST_PROP_ORACLE
     ),
-}
-QUERIES = {**_R4T_QUERIES, **QUERIES}
+})
 
 
 def q_weighted_median(spark, sf_dir):
@@ -6672,10 +6526,9 @@ FROM m WHERE cum * 2 >= tot GROUP BY event_type ORDER BY event_type
 """
 
 
-_R4U_QUERIES = {
+QUERIES.update({
     "weighted_median": QueryDef(q_weighted_median, _WEIGHTED_MEDIAN_ORACLE),
-}
-QUERIES = {**_R4U_QUERIES, **QUERIES}
+})
 
 
 def q_ngram_uniqueness(spark, sf_dir):
@@ -6713,12 +6566,11 @@ FROM per ORDER BY doc_id
 """
 
 
-_R4V_QUERIES = {
+QUERIES.update({
     "ngram_uniqueness": QueryDef(
         q_ngram_uniqueness, _NGRAM_UNIQUENESS_ORACLE
     ),
-}
-QUERIES = {**_R4V_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -6810,11 +6662,10 @@ FROM raw CROSS JOIN z ORDER BY lang
 """
 
 
-_R5A_QUERIES = {
+QUERIES.update({
     "ppl_buckets": QueryDef(q_ppl_buckets, _PPL_BUCKETS_ORACLE),
     "domain_reweight": QueryDef(q_domain_reweight, _DOMAIN_REWEIGHT_ORACLE),
-}
-QUERIES = {**_R5A_QUERIES, **QUERIES}
+})
 
 
 def q_winnow_fingerprints(spark, sf_dir):
@@ -6903,13 +6754,12 @@ ORDER BY id_a, id_b
 """
 
 
-_R5B_QUERIES = {
+QUERIES.update({
     "winnow_fingerprints": QueryDef(
         q_winnow_fingerprints, _WINNOW_FP_ORACLE
     ),
     "winnow_matches": QueryDef(q_winnow_matches, _WINNOW_MATCHES_ORACLE),
-}
-QUERIES = {**_R5B_QUERIES, **QUERIES}
+})
 
 
 def q_semdedup(spark, sf_dir):
@@ -6978,10 +6828,9 @@ FROM m LEFT JOIN p ON m.vec_id = p.vec_id ORDER BY m.vec_id
 """
 
 
-_R5C_QUERIES = {
+QUERIES.update({
     "semdedup": QueryDef(q_semdedup, _semdedup_oracle()),
-}
-QUERIES = {**_R5C_QUERIES, **QUERIES}
+})
 
 
 def q_soft_dedup_weights(spark, sf_dir):
@@ -7085,13 +6934,12 @@ GROUP BY g.doc_id ORDER BY g.doc_id
 """
 
 
-_R5D_QUERIES = {
+QUERIES.update({
     "soft_dedup_weights": QueryDef(q_soft_dedup_weights, _soft_dedup_oracle()),
     "contamination_fraction": QueryDef(
         q_contamination_fraction, _CONTAMINATION_FRACTION_ORACLE
     ),
-}
-QUERIES = {**_R5D_QUERIES, **QUERIES}
+})
 
 
 def q_token_allocation(spark, sf_dir):
@@ -7141,10 +6989,9 @@ FROM corp JOIN wt USING (lang) ORDER BY corp.lang
 """
 
 
-_R5E_QUERIES = {
+QUERIES.update({
     "token_allocation": QueryDef(q_token_allocation, _TOKEN_ALLOCATION_ORACLE),
-}
-QUERIES = {**_R5E_QUERIES, **QUERIES}
+})
 
 
 def q_quality_correlations(spark, sf_dir):
@@ -7193,12 +7040,11 @@ ORDER BY signal_a, signal_b
 """
 
 
-_R5F_QUERIES = {
+QUERIES.update({
     "quality_correlations": QueryDef(
         q_quality_correlations, _QUALITY_CORR_ORACLE
     ),
-}
-QUERIES = {**_R5F_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -7295,11 +7141,10 @@ ORDER BY id_a, id_b
 """
 
 
-_R6A_QUERIES = {
+QUERIES.update({
     "image_phash": QueryDef(q_image_phash, _image_phash_oracle()),
     "phash_near_dup": QueryDef(q_phash_near_dup, _phash_near_dup_oracle()),
-}
-QUERIES = {**_R6A_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -7413,13 +7258,12 @@ ORDER BY id_a, id_b
 """
 
 
-_R6B_QUERIES = {
+QUERIES.update({
     "audio_fingerprint": QueryDef(
         q_audio_fingerprint, _audio_fingerprint_oracle()
     ),
     "audio_near_dup": QueryDef(q_audio_near_dup, _audio_near_dup_oracle()),
-}
-QUERIES = {**_R6B_QUERIES, **QUERIES}
+})
 
 
 def _video_fixture_rows(n_clips: int = 10):
@@ -7490,10 +7334,9 @@ SELECT * FROM cov WHERE coverage >= 0.5 ORDER BY id_a, id_b
 """
 
 
-_R6C_QUERIES = {
+QUERIES.update({
     "video_near_dup": QueryDef(q_video_near_dup, _video_near_dup_oracle()),
-}
-QUERIES = {**_R6C_QUERIES, **QUERIES}
+})
 
 
 def q_hard_negatives(spark, sf_dir):
@@ -7537,10 +7380,9 @@ FROM r WHERE rank <= 5 ORDER BY anchor_id, rank
 """
 
 
-_R6D_QUERIES = {
+QUERIES.update({
     "hard_negatives": QueryDef(q_hard_negatives, _HARD_NEGATIVES_ORACLE),
-}
-QUERIES = {**_R6D_QUERIES, **QUERIES}
+})
 
 
 def q_token_fertility(spark, sf_dir):
@@ -7581,10 +7423,9 @@ FROM a ORDER BY lang
 """
 
 
-_R6E_QUERIES = {
+QUERIES.update({
     "token_fertility": QueryDef(q_token_fertility, _TOKEN_FERTILITY_ORACLE),
-}
-QUERIES = {**_R6E_QUERIES, **QUERIES}
+})
 
 
 def q_matryoshka_overlap(spark, sf_dir):
@@ -7640,10 +7481,9 @@ SELECT * FROM ({unions}) ORDER BY dims
 """
 
 
-_R6F_QUERIES = {
+QUERIES.update({
     "matryoshka_overlap": QueryDef(q_matryoshka_overlap, _matryoshka_oracle()),
-}
-QUERIES = {**_R6F_QUERIES, **QUERIES}
+})
 
 
 _PHASH_INDEX_DIRS: dict[str, str] = {}
@@ -7712,12 +7552,11 @@ ORDER BY query_id, match_id
 """
 
 
-_R6G_QUERIES = {
+QUERIES.update({
     "phash_index_probe": QueryDef(
         q_phash_index_probe, _phash_index_probe_oracle()
     ),
-}
-QUERIES = {**_R6G_QUERIES, **QUERIES}
+})
 
 
 def _phash_chain_fixture_rows(n_imgs: int = 24):
@@ -7797,10 +7636,9 @@ FROM reach GROUP BY u ORDER BY asset_id
 """
 
 
-_R6H_QUERIES = {
+QUERIES.update({
     "phash_clusters": QueryDef(q_phash_clusters, _phash_clusters_oracle()),
-}
-QUERIES = {**_R6H_QUERIES, **QUERIES}
+})
 
 
 def q_k_anonymity(spark, sf_dir):
@@ -7867,11 +7705,10 @@ ORDER BY c_nationkey, c_mktsegment, bal_pos
 """
 
 
-_R6I_QUERIES = {
+QUERIES.update({
     "k_anonymity": QueryDef(q_k_anonymity, _K_ANONYMITY_ORACLE),
     "suppress_to_k": QueryDef(q_suppress_to_k, _SUPPRESS_TO_K_ORACLE),
-}
-QUERIES = {**_R6I_QUERIES, **QUERIES}
+})
 
 
 def q_psi_timeline(spark, sf_dir):
@@ -7920,10 +7757,9 @@ FROM j GROUP BY period ORDER BY period
 """
 
 
-_R6J_QUERIES = {
+QUERIES.update({
     "psi_timeline": QueryDef(q_psi_timeline, _PSI_TIMELINE_ORACLE),
-}
-QUERIES = {**_R6J_QUERIES, **QUERIES}
+})
 
 
 def q_hll_distinct(spark, sf_dir):
@@ -8025,13 +7861,12 @@ ORDER BY ex.exact_n DESC, est.user_id
 """
 
 
-_R6K_QUERIES = {
+QUERIES.update({
     "hll_distinct": QueryDef(q_hll_distinct, _hll_distinct_oracle()),
     "heavy_hitters_cms": QueryDef(
         q_heavy_hitters_cms, _heavy_hitters_cms_oracle()
     ),
-}
-QUERIES = {**_R6K_QUERIES, **QUERIES}
+})
 
 
 def q_graph_bfs_hops(spark, sf_dir):
@@ -8089,10 +7924,9 @@ FROM walk GROUP BY node ORDER BY node
 """
 
 
-_R6L_QUERIES = {
+QUERIES.update({
     "graph_bfs_hops": QueryDef(q_graph_bfs_hops, _GRAPH_BFS_ORACLE),
-}
-QUERIES = {**_R6L_QUERIES, **QUERIES}
+})
 
 
 def q_l_diversity(spark, sf_dir):
@@ -8126,10 +7960,9 @@ FROM g
 """
 
 
-_R6M_QUERIES = {
+QUERIES.update({
     "l_diversity": QueryDef(q_l_diversity, _L_DIVERSITY_ORACLE),
-}
-QUERIES = {**_R6M_QUERIES, **QUERIES}
+})
 
 
 def q_embedding_outliers(spark, sf_dir):
@@ -8167,12 +8000,11 @@ FROM s ORDER BY maha2_u DESC, vec_id LIMIT 20
 """
 
 
-_R6N_QUERIES = {
+QUERIES.update({
     "embedding_outliers": QueryDef(
         q_embedding_outliers, _EMBEDDING_OUTLIERS_ORACLE
     ),
-}
-QUERIES = {**_R6N_QUERIES, **QUERIES}
+})
 
 
 def q_rrf_fusion(spark, sf_dir):
@@ -8278,10 +8110,9 @@ ORDER BY query_id, fused_rank
 """
 
 
-_R6O_QUERIES = {
+QUERIES.update({
     "rrf_fusion": QueryDef(q_rrf_fusion, _rrf_fusion_oracle()),
-}
-QUERIES = {**_R6O_QUERIES, **QUERIES}
+})
 
 
 def q_seasonal_naive(spark, sf_dir):
@@ -8314,10 +8145,9 @@ FROM j GROUP BY key ORDER BY key
 """
 
 
-_R6P_QUERIES = {
+QUERIES.update({
     "seasonal_naive": QueryDef(q_seasonal_naive, _SEASONAL_NAIVE_ORACLE),
-}
-QUERIES = {**_R6P_QUERIES, **QUERIES}
+})
 
 
 def prebuild_phash_index(spark, sf_dir) -> float:
@@ -8398,12 +8228,11 @@ FROM js, hx, hy
 """
 
 
-_R6Q_QUERIES = {
+QUERIES.update({
     "mutual_information": QueryDef(
         q_mutual_information, _MUTUAL_INFORMATION_ORACLE
     ),
-}
-QUERIES = {**_R6Q_QUERIES, **QUERIES}
+})
 
 
 def q_vocab_growth(spark, sf_dir):
@@ -8447,10 +8276,9 @@ FROM c ORDER BY bucket
 """
 
 
-_R6R_QUERIES = {
+QUERIES.update({
     "vocab_growth": QueryDef(q_vocab_growth, _VOCAB_GROWTH_ORACLE),
-}
-QUERIES = {**_R6R_QUERIES, **QUERIES}
+})
 
 
 def q_approx_quantiles_binned(spark, sf_dir):
@@ -8517,12 +8345,11 @@ FROM fin ORDER BY event_type, q
 """
 
 
-_R6S_QUERIES = {
+QUERIES.update({
     "approx_quantiles_binned": QueryDef(
         q_approx_quantiles_binned, _APPROX_QUANTILES_ORACLE
     ),
-}
-QUERIES = {**_R6S_QUERIES, **QUERIES}
+})
 
 
 def q_langid_confusion(spark, sf_dir):
@@ -8570,12 +8397,11 @@ ORDER BY cm.truth, cm.pred
 """
 
 
-_R6T_QUERIES = {
+QUERIES.update({
     "langid_confusion": QueryDef(
         q_langid_confusion, _langid_confusion_oracle()
     ),
-}
-QUERIES = {**_R6T_QUERIES, **QUERIES}
+})
 
 
 def q_tfidf_cosine_topk(spark, sf_dir):
@@ -8633,12 +8459,11 @@ ORDER BY query_id, rank
 """
 
 
-_R6U_QUERIES = {
+QUERIES.update({
     "tfidf_cosine_topk": QueryDef(
         q_tfidf_cosine_topk, _tfidf_cosine_oracle()
     ),
-}
-QUERIES = {**_R6U_QUERIES, **QUERIES}
+})
 
 
 def q_rfm_segments(spark, sf_dir):
@@ -8698,10 +8523,9 @@ FROM sc ORDER BY user_id
 """
 
 
-_R6V_QUERIES = {
+QUERIES.update({
     "rfm_segments": QueryDef(q_rfm_segments, _rfm_oracle()),
-}
-QUERIES = {**_R6V_QUERIES, **QUERIES}
+})
 
 
 def q_t_closeness(spark, sf_dir):
@@ -8749,10 +8573,9 @@ FROM terms
 """
 
 
-_R6W_QUERIES = {
+QUERIES.update({
     "t_closeness": QueryDef(q_t_closeness, _T_CLOSENESS_ORACLE),
-}
-QUERIES = {**_R6W_QUERIES, **QUERIES}
+})
 
 
 def q_langid_kappa(spark, sf_dir):
@@ -8798,10 +8621,9 @@ FROM o
 """
 
 
-_R6X_QUERIES = {
+QUERIES.update({
     "langid_kappa": QueryDef(q_langid_kappa, _langid_kappa_oracle()),
-}
-QUERIES = {**_R6X_QUERIES, **QUERIES}
+})
 
 
 def q_quality_auc(spark, sf_dir):
@@ -8854,10 +8676,9 @@ FROM a
 """
 
 
-_R6Y_QUERIES = {
+QUERIES.update({
     "quality_auc": QueryDef(q_quality_auc, _quality_auc_oracle()),
-}
-QUERIES = {**_R6Y_QUERIES, **QUERIES}
+})
 
 
 def q_hll_overlap(spark, sf_dir):
@@ -8892,10 +8713,9 @@ def _hll_overlap_oracle() -> str:
     )
 
 
-_R6Z_QUERIES = {
+QUERIES.update({
     "hll_user_overlap": QueryDef(q_hll_overlap, _hll_overlap_oracle()),
-}
-QUERIES = {**_R6Z_QUERIES, **QUERIES}
+})
 
 
 _BQ_QUERY_IDS = [3, 7, 11, 19, 23, 31, 42, 57]
@@ -8969,10 +8789,9 @@ WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-_R6ZA_QUERIES = {
+QUERIES.update({
     "bq_hamming_topk": QueryDef(q_bq_hamming_topk, _bq_oracle()),
-}
-QUERIES = {**_R6ZA_QUERIES, **QUERIES}
+})
 
 
 def q_property_scd2(spark, sf_dir):
@@ -9016,10 +8835,9 @@ FROM iv ORDER BY user_id, prop_key, version
 """
 
 
-_R6ZB_QUERIES = {
+QUERIES.update({
     "property_scd2": QueryDef(q_property_scd2, _PROPERTY_SCD2_ORACLE),
-}
-QUERIES = {**_R6ZB_QUERIES, **QUERIES}
+})
 
 
 def q_span_corruption(spark, sf_dir):
@@ -9071,12 +8889,11 @@ ORDER BY pd.doc_id
 """
 
 
-_R6ZC_QUERIES = {
+QUERIES.update({
     "span_corruption": QueryDef(
         q_span_corruption, _span_corruption_oracle()
     ),
-}
-QUERIES = {**_R6ZC_QUERIES, **QUERIES}
+})
 
 
 def q_skew_profile(spark, sf_dir):
@@ -9110,10 +8927,9 @@ FROM head CROSS JOIN tot ORDER BY rank
 """
 
 
-_R6ZD_QUERIES = {
+QUERIES.update({
     "skew_profile": QueryDef(q_skew_profile, _SKEW_PROFILE_ORACLE),
-}
-QUERIES = {**_R6ZD_QUERIES, **QUERIES}
+})
 
 
 def q_zipf_slope(spark, sf_dir):
@@ -9153,10 +8969,9 @@ FROM s
 """
 
 
-_R6ZE_QUERIES = {
+QUERIES.update({
     "zipf_slope": QueryDef(q_zipf_slope, _ZIPF_ORACLE),
-}
-QUERIES = {**_R6ZE_QUERIES, **QUERIES}
+})
 
 
 def q_kfold_leakage(spark, sf_dir):
@@ -9192,10 +9007,9 @@ FROM pg GROUP BY fold ORDER BY fold
 """
 
 
-_R6ZF_QUERIES = {
+QUERIES.update({
     "kfold_leakage": QueryDef(q_kfold_leakage, _KFOLD_ORACLE),
-}
-QUERIES = {**_R6ZF_QUERIES, **QUERIES}
+})
 
 
 def q_score_percentiles(spark, sf_dir):
@@ -9242,12 +9056,11 @@ ORDER BY s.doc_id
 """
 
 
-_R6ZG_QUERIES = {
+QUERIES.update({
     "score_percentiles": QueryDef(
         q_score_percentiles, _score_percentiles_oracle()
     ),
-}
-QUERIES = {**_R6ZG_QUERIES, **QUERIES}
+})
 
 
 def q_oov_rates(spark, sf_dir):
@@ -9281,10 +9094,9 @@ FROM fl GROUP BY lang ORDER BY lang
 """
 
 
-_R6ZH_QUERIES = {
+QUERIES.update({
     "oov_rates": QueryDef(q_oov_rates, _OOV_ORACLE),
-}
-QUERIES = {**_R6ZH_QUERIES, **QUERIES}
+})
 
 
 def q_js_drift(spark, sf_dir):
@@ -9340,10 +9152,9 @@ FROM pq ORDER BY bin
 """
 
 
-_R6ZI_QUERIES = {
+QUERIES.update({
     "js_drift": QueryDef(q_js_drift, _JS_ORACLE),
-}
-QUERIES = {**_R6ZI_QUERIES, **QUERIES}
+})
 
 
 def q_burstiness(spark, sf_dir):
@@ -9382,10 +9193,9 @@ FROM m ORDER BY user_id
 """
 
 
-_R6ZJ_QUERIES = {
+QUERIES.update({
     "burstiness": QueryDef(q_burstiness, _BURSTINESS_ORACLE),
-}
-QUERIES = {**_R6ZJ_QUERIES, **QUERIES}
+})
 
 
 def q_embedding_isotropy(spark, sf_dir):
@@ -9421,12 +9231,11 @@ FROM m
 """
 
 
-_R6ZK_QUERIES = {
+QUERIES.update({
     "embedding_isotropy": QueryDef(
         q_embedding_isotropy, _ISOTROPY_ORACLE
     ),
-}
-QUERIES = {**_R6ZK_QUERIES, **QUERIES}
+})
 
 
 def q_ooo_arrivals(spark, sf_dir):
@@ -9460,10 +9269,9 @@ FROM a ORDER BY user_id
 """
 
 
-_R6ZL_QUERIES = {
+QUERIES.update({
     "ooo_arrivals": QueryDef(q_ooo_arrivals, _OOO_ORACLE),
-}
-QUERIES = {**_R6ZL_QUERIES, **QUERIES}
+})
 
 
 def q_cdc_dedup(spark, sf_dir):
@@ -9533,10 +9341,9 @@ GROUP BY ch.doc_id ORDER BY ch.doc_id
 """
 
 
-_R6ZM_QUERIES = {
+QUERIES.update({
     "cdc_dedup": QueryDef(q_cdc_dedup, _CDC_ORACLE),
-}
-QUERIES = {**_R6ZM_QUERIES, **QUERIES}
+})
 
 
 def q_heldout_ppl(spark, sf_dir):
@@ -9595,10 +9402,9 @@ FROM f
 """
 
 
-_R6ZN_QUERIES = {
+QUERIES.update({
     "heldout_ppl": QueryDef(q_heldout_ppl, _heldout_ppl_oracle()),
-}
-QUERIES = {**_R6ZN_QUERIES, **QUERIES}
+})
 
 
 def q_trimmed_stats(spark, sf_dir):
@@ -9641,10 +9447,9 @@ FROM m ORDER BY event_type
 """
 
 
-_R6ZO_QUERIES = {
+QUERIES.update({
     "trimmed_stats": QueryDef(q_trimmed_stats, _TRIMMED_ORACLE),
-}
-QUERIES = {**_R6ZO_QUERIES, **QUERIES}
+})
 
 
 def q_incremental_projection(spark, sf_dir):
@@ -9674,13 +9479,12 @@ def q_incremental_projection(spark, sf_dir):
     ).orderBy("user_id", "prop_key")
 
 
-_R6ZP_QUERIES = {
+QUERIES.update({
     # the oracle IS the full-replay fold — the whole point
     "incremental_projection": QueryDef(
         q_incremental_projection, _LATEST_PROP_ORACLE
     ),
-}
-QUERIES = {**_R6ZP_QUERIES, **QUERIES}
+})
 
 
 def q_funnel_latency(spark, sf_dir):
@@ -9729,10 +9533,9 @@ FROM rk GROUP BY step_idx, step ORDER BY step_idx
 """
 
 
-_R6ZQ_QUERIES = {
+QUERIES.update({
     "funnel_latency": QueryDef(q_funnel_latency, _FUNNEL_LATENCY_ORACLE),
-}
-QUERIES = {**_R6ZQ_QUERIES, **QUERIES}
+})
 
 
 def q_calibration_curve(spark, sf_dir):
@@ -9786,12 +9589,11 @@ FROM g ORDER BY bin
 """
 
 
-_R6ZR_QUERIES = {
+QUERIES.update({
     "calibration_curve": QueryDef(
         q_calibration_curve, _CALIBRATION_ORACLE
     ),
-}
-QUERIES = {**_R6ZR_QUERIES, **QUERIES}
+})
 
 
 def q_simhash_calibration(spark, sf_dir):
@@ -9843,12 +9645,11 @@ FROM j GROUP BY hamming ORDER BY hamming
 """
 
 
-_R6ZS_QUERIES = {
+QUERIES.update({
     "simhash_calibration": QueryDef(
         q_simhash_calibration, _simhash_calibration_oracle()
     ),
-}
-QUERIES = {**_R6ZS_QUERIES, **QUERIES}
+})
 
 
 def q_join_cardinality(spark, sf_dir):
@@ -9885,10 +9686,9 @@ FROM lt CROSS JOIN rt CROSS JOIN j
 """
 
 
-_R6ZT_QUERIES = {
+QUERIES.update({
     "join_cardinality": QueryDef(q_join_cardinality, _JOIN_CARD_ORACLE),
-}
-QUERIES = {**_R6ZT_QUERIES, **QUERIES}
+})
 
 
 def q_pareto_frontier(spark, sf_dir):
@@ -9927,10 +9727,9 @@ WHERE NOT EXISTS (SELECT 1 FROM pts p
 """
 
 
-_R6ZU_QUERIES = {
+QUERIES.update({
     "pareto_frontier": QueryDef(q_pareto_frontier, _PARETO_ORACLE),
-}
-QUERIES = {**_R6ZU_QUERIES, **QUERIES}
+})
 
 
 def q_decayed_topk(spark, sf_dir):
@@ -9968,10 +9767,9 @@ ORDER BY decayed_units DESC, event_type LIMIT 5
 """
 
 
-_R6ZV_QUERIES = {
+QUERIES.update({
     "decayed_topk": QueryDef(q_decayed_topk, _DECAYED_TOPK_ORACLE),
-}
-QUERIES = {**_R6ZV_QUERIES, **QUERIES}
+})
 
 
 def q_attribution(spark, sf_dir):
@@ -10023,10 +9821,9 @@ FROM credited GROUP BY channel
 """
 
 
-_R6ZW_QUERIES = {
+QUERIES.update({
     "attribution_credit": QueryDef(q_attribution, _ATTRIBUTION_ORACLE),
-}
-QUERIES = {**_R6ZW_QUERIES, **QUERIES}
+})
 
 
 def q_km_survival(spark, sf_dir):
@@ -10092,10 +9889,9 @@ FROM km
 """
 
 
-_R6ZX_QUERIES = {
+QUERIES.update({
     "km_survival": QueryDef(q_km_survival, "WITH RECURSIVE " + _KM_ORACLE.lstrip().removeprefix("WITH ")),
-}
-QUERIES = {**_R6ZX_QUERIES, **QUERIES}
+})
 
 
 def q_mmr_diverse(spark, sf_dir):
@@ -10193,10 +9989,9 @@ pk{j} AS (SELECT p.qid, {carried}, x.m.b AS v{j}, -x.m.a AS sc{j}
     return "WITH " + ",\n".join(ctes) + "\n" + branches
 
 
-_R6ZY_QUERIES = {
+QUERIES.update({
     "mmr_diverse_topk": QueryDef(q_mmr_diverse, _mmr_oracle()),
-}
-QUERIES = {**_R6ZY_QUERIES, **QUERIES}
+})
 
 
 def q_graph_kcore(spark, sf_dir):
@@ -10234,10 +10029,9 @@ ORDER BY f.node
 """
 
 
-_R6ZZ_QUERIES = {
+QUERIES.update({
     "graph_kcore": QueryDef(q_graph_kcore, _KCORE_ORACLE),
-}
-QUERIES = {**_R6ZZ_QUERIES, **QUERIES}
+})
 
 
 def q_benford(spark, sf_dir):
@@ -10282,10 +10076,9 @@ FROM ref LEFT JOIN obs ON ref.digit = obs.digit CROSS JOIN tot
 """
 
 
-_R6AA_QUERIES = {
+QUERIES.update({
     "benford_audit": QueryDef(q_benford, _benford_oracle()),
-}
-QUERIES = {**_R6AA_QUERIES, **QUERIES}
+})
 
 
 def q_cusum(spark, sf_dir):
@@ -10355,10 +10148,9 @@ FROM walk w JOIN p ON p.event_type = w.event_type AND p.rn = w.rn
 """
 
 
-_R6AB_QUERIES = {
+QUERIES.update({
     "cusum_changepoints": QueryDef(q_cusum, _CUSUM_ORACLE),
-}
-QUERIES = {**_R6AB_QUERIES, **QUERIES}
+})
 
 
 def q_retrieval_ndcg(spark, sf_dir):
@@ -10457,10 +10249,9 @@ WHERE idcg.idcg > 0
 """
 
 
-_R6AC_QUERIES = {
+QUERIES.update({
     "retrieval_ndcg": QueryDef(q_retrieval_ndcg, _ndcg_oracle()),
-}
-QUERIES = {**_R6AC_QUERIES, **QUERIES}
+})
 
 
 def q_snapshot_diff(spark, sf_dir):
@@ -10555,10 +10346,9 @@ UNION ALL SELECT 'col_changed:o_orderpriority', c_prio FROM w
 """
 
 
-_R6AD_QUERIES = {
+QUERIES.update({
     "snapshot_diff": QueryDef(q_snapshot_diff, _SNAPSHOT_DIFF_ORACLE),
-}
-QUERIES = {**_R6AD_QUERIES, **QUERIES}
+})
 
 
 def q_conversion_ci(spark, sf_dir):
@@ -10609,10 +10399,9 @@ FROM w
 """
 
 
-_R6AE_QUERIES = {
+QUERIES.update({
     "conversion_ci": QueryDef(q_conversion_ci, _CONV_CI_ORACLE),
-}
-QUERIES = {**_R6AE_QUERIES, **QUERIES}
+})
 
 
 def q_frequent_paths(spark, sf_dir):
@@ -10640,10 +10429,9 @@ GROUP BY 1 ORDER BY n DESC, path LIMIT 20
 """
 
 
-_R6AF_QUERIES = {
+QUERIES.update({
     "frequent_paths": QueryDef(q_frequent_paths, _FREQ_PATHS_ORACLE),
-}
-QUERIES = {**_R6AF_QUERIES, **QUERIES}
+})
 
 
 def q_acf_daily(spark, sf_dir):
@@ -10704,10 +10492,9 @@ agg AS (
 """
 
 
-_R6AG_QUERIES = {
+QUERIES.update({
     "acf_daily": QueryDef(q_acf_daily, _acf_oracle()),
-}
-QUERIES = {**_R6AG_QUERIES, **QUERIES}
+})
 
 
 def q_gini(spark, sf_dir):
@@ -10770,10 +10557,9 @@ FROM a WHERE total > 0
 """
 
 
-_R6AH_QUERIES = {
+QUERIES.update({
     "gini_concentration": QueryDef(q_gini, _GINI_ORACLE),
-}
-QUERIES = {**_R6AH_QUERIES, **QUERIES}
+})
 
 
 def q_sim_topk_filtered(spark, sf_dir):
@@ -10819,10 +10605,9 @@ FROM r WHERE rank <= 10
 """
 
 
-_R6AI_QUERIES = {
+QUERIES.update({
     "sim_topk_filtered": QueryDef(q_sim_topk_filtered, _SIM_FILTERED_ORACLE),
-}
-QUERIES = {**_R6AI_QUERIES, **QUERIES}
+})
 
 
 def q_markov_stationary(spark, sf_dir):
@@ -10875,10 +10660,9 @@ JOIN h ON h.s = st.s
     )
 
 
-_R6AJ_QUERIES = {
+QUERIES.update({
     "markov_stationary": QueryDef(q_markov_stationary, _markov_oracle()),
-}
-QUERIES = {**_R6AJ_QUERIES, **QUERIES}
+})
 
 
 def q_session_flow(spark, sf_dir):
@@ -10921,10 +10705,9 @@ FROM ps GROUP BY 1, 2
 """
 
 
-_R6AK_QUERIES = {
+QUERIES.update({
     "session_flow": QueryDef(q_session_flow, _SESSION_FLOW_ORACLE),
-}
-QUERIES = {**_R6AK_QUERIES, **QUERIES}
+})
 
 
 def q_woe_iv(spark, sf_dir):
@@ -10984,10 +10767,9 @@ WHERE pt > 0 AND nt > 0
 """
 
 
-_R6AL_QUERIES = {
+QUERIES.update({
     "woe_iv": QueryDef(q_woe_iv, _WOE_IV_ORACLE),
-}
-QUERIES = {**_R6AL_QUERIES, **QUERIES}
+})
 
 
 def q_did(spark, sf_dir):
@@ -11046,10 +10828,9 @@ FROM m
 """
 
 
-_R6AM_QUERIES = {
+QUERIES.update({
     "did_estimate": QueryDef(q_did, _DID_ORACLE),
-}
-QUERIES = {**_R6AM_QUERIES, **QUERIES}
+})
 
 
 def q_label_noise(spark, sf_dir):
@@ -11110,10 +10891,9 @@ FROM cells CROSS JOIN tot
 """
 
 
-_R6AN_QUERIES = {
+QUERIES.update({
     "label_noise": QueryDef(q_label_noise, _LABEL_NOISE_ORACLE),
-}
-QUERIES = {**_R6AN_QUERIES, **QUERIES}
+})
 
 
 def q_kmv_distinct(spark, sf_dir):
@@ -11154,10 +10934,9 @@ def _kmv_distinct_oracle() -> str:
     return f"SELECT * FROM ({inner}) ORDER BY grp"
 
 
-_R6AO_QUERIES = {
+QUERIES.update({
     "kmv_distinct": QueryDef(q_kmv_distinct, _kmv_distinct_oracle()),
-}
-QUERIES = {**_R6AO_QUERIES, **QUERIES}
+})
 
 
 def q_bootstrap_ci(spark, sf_dir):
@@ -11193,10 +10972,9 @@ def _bootstrap_ci_oracle() -> str:
     )
 
 
-_R6AP_QUERIES = {
+QUERIES.update({
     "bootstrap_ci": QueryDef(q_bootstrap_ci, _bootstrap_ci_oracle()),
-}
-QUERIES = {**_R6AP_QUERIES, **QUERIES}
+})
 
 
 def q_cuped(spark, sf_dir):
@@ -11302,11 +11080,10 @@ FROM m
 """
 
 
-_R6AQ_QUERIES = {
+QUERIES.update({
     "cuped_estimate": QueryDef(q_cuped, _CUPED_ORACLE),
     "srm_check": QueryDef(q_srm, _SRM_ORACLE),
-}
-QUERIES = {**_R6AQ_QUERIES, **QUERIES}
+})
 
 
 def q_ccf_leadlag(spark, sf_dir):
@@ -11359,10 +11136,9 @@ FROM m ORDER BY lag
 """
 
 
-_R6AR_QUERIES = {
+QUERIES.update({
     "ccf_leadlag": QueryDef(q_ccf_leadlag, _CCF_ORACLE),
-}
-QUERIES = {**_R6AR_QUERIES, **QUERIES}
+})
 
 
 def q_dbscan(spark, sf_dir):
@@ -11446,10 +11222,9 @@ ORDER BY vec_id
 """
 
 
-_R6AS_QUERIES = {
+QUERIES.update({
     "dbscan_clusters": QueryDef(q_dbscan, _dbscan_oracle()),
-}
-QUERIES = {**_R6AS_QUERIES, **QUERIES}
+})
 
 
 def q_theil_sen(spark, sf_dir):
@@ -11499,10 +11274,9 @@ FROM ranked WHERE r = (m + 1) // 2 ORDER BY k
 """
 
 
-_R6AT_QUERIES = {
+QUERIES.update({
     "theil_sen_trend": QueryDef(q_theil_sen, _THEIL_SEN_ORACLE),
-}
-QUERIES = {**_R6AT_QUERIES, **QUERIES}
+})
 
 
 def q_rake_keywords(spark, sf_dir):
@@ -11550,10 +11324,9 @@ FROM ph ORDER BY score_micro DESC, phrase LIMIT 20
 """
 
 
-_R6AU_QUERIES = {
+QUERIES.update({
     "rake_keywords": QueryDef(q_rake_keywords, _rake_oracle()),
-}
-QUERIES = {**_R6AU_QUERIES, **QUERIES}
+})
 
 
 def q_holt_linear(spark, sf_dir):
@@ -11613,10 +11386,9 @@ ORDER BY day_index
 """
 
 
-_R6AV_QUERIES = {
+QUERIES.update({
     "holt_linear": QueryDef(q_holt_linear, _holt_oracle()),
-}
-QUERIES = {**_R6AV_QUERIES, **QUERIES}
+})
 
 
 def q_item_item_cf(spark, sf_dir):
@@ -11668,10 +11440,9 @@ FROM r WHERE rank <= 5 ORDER BY item_a, rank
 """
 
 
-_R6AW_QUERIES = {
+QUERIES.update({
     "item_item_cf": QueryDef(q_item_item_cf, _ITEM_ITEM_ORACLE),
-}
-QUERIES = {**_R6AW_QUERIES, **QUERIES}
+})
 
 
 def q_isotonic_calibration(spark, sf_dir):
@@ -11735,12 +11506,11 @@ ORDER BY bin
 """
 
 
-_R6AX_QUERIES = {
+QUERIES.update({
     "isotonic_calibration": QueryDef(
         q_isotonic_calibration, _ISOTONIC_ORACLE
     ),
-}
-QUERIES = {**_R6AX_QUERIES, **QUERIES}
+})
 
 
 def q_hll_sliding(spark, sf_dir):
@@ -11763,10 +11533,9 @@ def _hll_sliding_oracle() -> str:
     return hll_sliding_oracle_sql(window_days=7)
 
 
-_R6AY_QUERIES = {
+QUERIES.update({
     "hll_sliding_distinct": QueryDef(q_hll_sliding, _hll_sliding_oracle()),
-}
-QUERIES = {**_R6AY_QUERIES, **QUERIES}
+})
 
 
 def q_quantile_normalize(spark, sf_dir):
@@ -11824,10 +11593,9 @@ ORDER BY ig.doc_id
 """
 
 
-_R6AZ_QUERIES = {
+QUERIES.update({
     "quantile_normalize": QueryDef(q_quantile_normalize, _QNORM_ORACLE),
-}
-QUERIES = {**_R6AZ_QUERIES, **QUERIES}
+})
 
 
 def q_mad_outliers(spark, sf_dir):
@@ -11882,10 +11650,9 @@ ORDER BY event_type, day
 """
 
 
-_R6BA_QUERIES = {
+QUERIES.update({
     "mad_outlier_days": QueryDef(q_mad_outliers, _MAD_OUTLIER_ORACLE),
-}
-QUERIES = {**_R6BA_QUERIES, **QUERIES}
+})
 
 
 def q_ess_report(spark, sf_dir):
@@ -11940,10 +11707,9 @@ FROM m ORDER BY lang
 """
 
 
-_R6BB_QUERIES = {
+QUERIES.update({
     "ess_report": QueryDef(q_ess_report, _ESS_ORACLE),
-}
-QUERIES = {**_R6BB_QUERIES, **QUERIES}
+})
 
 
 def q_source_js(spark, sf_dir):
@@ -11984,10 +11750,9 @@ FROM pairs GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-_R6BC_QUERIES = {
+QUERIES.update({
     "source_similarity_js": QueryDef(q_source_js, _SOURCE_JS_ORACLE),
-}
-QUERIES = {**_R6BC_QUERIES, **QUERIES}
+})
 
 
 def q_ratio_ci(spark, sf_dir):
@@ -12039,10 +11804,9 @@ FROM v ORDER BY bucket
 """
 
 
-_R6BD_QUERIES = {
+QUERIES.update({
     "ratio_metric_ci": QueryDef(q_ratio_ci, _RATIO_CI_ORACLE),
-}
-QUERIES = {**_R6BD_QUERIES, **QUERIES}
+})
 
 
 def q_threshold_sweep(spark, sf_dir):
@@ -12102,10 +11866,9 @@ FROM cells ORDER BY threshold_ppm
 """
 
 
-_R6BE_QUERIES = {
+QUERIES.update({
     "threshold_sweep": QueryDef(q_threshold_sweep, _THRESHOLD_SWEEP_ORACLE),
-}
-QUERIES = {**_R6BE_QUERIES, **QUERIES}
+})
 
 
 def q_dispersion(spark, sf_dir):
@@ -12152,10 +11915,9 @@ FROM m ORDER BY event_type
 """
 
 
-_R6BF_QUERIES = {
+QUERIES.update({
     "dispersion_report": QueryDef(q_dispersion, _DISPERSION_ORACLE),
-}
-QUERIES = {**_R6BF_QUERIES, **QUERIES}
+})
 
 
 def q_lsh_band_plan(spark, sf_dir):
@@ -12223,10 +11985,9 @@ FROM terms GROUP BY 1, 2 ORDER BY rows_per_band
 """
 
 
-_R6BG_QUERIES = {
+QUERIES.update({
     "lsh_band_plan": QueryDef(q_lsh_band_plan, _LSH_PLAN_ORACLE),
-}
-QUERIES = {**_R6BG_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -12282,12 +12043,11 @@ def _mp4_meta_oracle(n: int = 256) -> str:
     )
 
 
-_R7A_QUERIES = {
+QUERIES.update({
     "multimodal_mp4_meta": QueryDef(
         q_multimodal_mp4_meta, _mp4_meta_oracle()
     ),
-}
-QUERIES = {**_R7A_QUERIES, **QUERIES}
+})
 
 
 def q_mann_kendall(spark, sf_dir):
@@ -12350,10 +12110,9 @@ FROM j ORDER BY k
 """
 
 
-_R7B_QUERIES = {
+QUERIES.update({
     "mann_kendall": QueryDef(q_mann_kendall, _MANN_KENDALL_ORACLE),
-}
-QUERIES = {**_R7B_QUERIES, **QUERIES}
+})
 
 
 def q_mann_whitney(spark, sf_dir):
@@ -12405,10 +12164,9 @@ FROM agg
 """
 
 
-_R7C_QUERIES = {
+QUERIES.update({
     "mann_whitney_u": QueryDef(q_mann_whitney, _MANN_WHITNEY_ORACLE),
-}
-QUERIES = {**_R7C_QUERIES, **QUERIES}
+})
 
 
 def q_phrase_search(spark, sf_dir):
@@ -12440,10 +12198,9 @@ FROM m GROUP BY doc_id ORDER BY doc_id
 """
 
 
-_R7D_QUERIES = {
+QUERIES.update({
     "phrase_search": QueryDef(q_phrase_search, _PHRASE_SEARCH_ORACLE),
-}
-QUERIES = {**_R7D_QUERIES, **QUERIES}
+})
 
 
 def q_dp_noisy_counts(spark, sf_dir):
@@ -12482,10 +12239,9 @@ FROM z ORDER BY grp
 """
 
 
-_R7E_QUERIES = {
+QUERIES.update({
     "dp_noisy_counts": QueryDef(q_dp_noisy_counts, _dp_noisy_oracle()),
-}
-QUERIES = {**_R7E_QUERIES, **QUERIES}
+})
 
 
 def q_propensity_strata(spark, sf_dir):
@@ -12535,12 +12291,11 @@ FROM g ORDER BY stratum
 """
 
 
-_R7F_QUERIES = {
+QUERIES.update({
     "propensity_strata": QueryDef(
         q_propensity_strata, _PROPENSITY_ORACLE
     ),
-}
-QUERIES = {**_R7F_QUERIES, **QUERIES}
+})
 
 
 def q_eb_shrunk_rates(spark, sf_dir):
@@ -12600,10 +12355,9 @@ FROM pq, ab ORDER BY pq.k
 """
 
 
-_R7G_QUERIES = {
+QUERIES.update({
     "eb_shrunk_rates": QueryDef(q_eb_shrunk_rates, _EB_SHRUNK_ORACLE),
-}
-QUERIES = {**_R7G_QUERIES, **QUERIES}
+})
 
 
 def q_logrank_test(spark, sf_dir):
@@ -12677,10 +12431,9 @@ FROM tot, acc
 """
 
 
-_R7H_QUERIES = {
+QUERIES.update({
     "logrank_test": QueryDef(q_logrank_test, _LOGRANK_ORACLE),
-}
-QUERIES = {**_R7H_QUERIES, **QUERIES}
+})
 
 
 def q_brier_decomposition(spark, sf_dir):
@@ -12766,12 +12519,11 @@ FROM tot, res
 """
 
 
-_R7I_QUERIES = {
+QUERIES.update({
     "brier_decomposition": QueryDef(
         q_brier_decomposition, _BRIER_ORACLE.format(toks=_DUCK_TOKENS)
     ),
-}
-QUERIES = {**_R7I_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -12830,12 +12582,11 @@ def _mp4_frames_oracle(n: int = 48, every_ms: int = 250) -> str:
     )
 
 
-_R8A_QUERIES = {
+QUERIES.update({
     "multimodal_mp4_frames": QueryDef(
         q_multimodal_mp4_frames, _mp4_frames_oracle()
     ),
-}
-QUERIES = {**_R8A_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13196,7 +12947,7 @@ FROM obs, fin
 """
 
 
-_R8B_QUERIES = {
+QUERIES.update({
     "chi_square_independence": QueryDef(q_chi_square, _CHI_SQUARE_ORACLE),
     "kruskal_wallis": QueryDef(q_kruskal_wallis, _KRUSKAL_ORACLE),
     "spearman_corr": QueryDef(q_spearman_corr, _SPEARMAN_ORACLE),
@@ -13207,8 +12958,7 @@ _R8B_QUERIES = {
     "permutation_pvalue": QueryDef(
         q_permutation_pvalue, _PERMUTATION_ORACLE
     ),
-}
-QUERIES = {**_R8B_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13353,13 +13103,12 @@ FROM agg
 """
 
 
-_R8C_QUERIES = {
+QUERIES.update({
     "v_optimal_histogram": QueryDef(
         q_v_optimal_histogram, _VOPT_ORACLE
     ),
     "cochran_armitage": QueryDef(q_cochran_armitage, _COCHRAN_ORACLE),
-}
-QUERIES = {**_R8C_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13473,13 +13222,12 @@ ORDER BY level
 """
 
 
-_R8D_QUERIES = {
+QUERIES.update({
     "retrieval_ql_dirichlet": QueryDef(
         q_ql_dirichlet, _QL_DIRICHLET_ORACLE
     ),
     "haar_energy_daily": QueryDef(q_haar_energy, _HAAR_ORACLE),
-}
-QUERIES = {**_R8D_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13606,15 +13354,14 @@ ORDER BY node
 """
 
 
-_R8E_QUERIES = {
+QUERIES.update({
     "changepoints_lsq": QueryDef(
         q_changepoints_lsq, _CHANGEPOINT_ORACLE
     ),
     "entity_clusters": QueryDef(
         q_entity_clusters, _ENTITY_CLUSTERS_ORACLE
     ),
-}
-QUERIES = {**_R8E_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13701,13 +13448,12 @@ FROM per ORDER BY doc_id
 """
 
 
-_R8F_QUERIES = {
+QUERIES.update({
     "boilerplate_fraction": QueryDef(
         q_boilerplate_fraction, _BOILERPLATE_ORACLE
     ),
     "blocklist_hits": QueryDef(q_blocklist_hits, _BLOCKLIST_ORACLE),
-}
-QUERIES = {**_R8F_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -13849,11 +13595,10 @@ FROM j ORDER BY stratum
 """
 
 
-_R8G_QUERIES = {
+QUERIES.update({
     "holt_winters": QueryDef(q_holt_winters, _holt_winters_oracle()),
     "simpsons_check": QueryDef(q_simpsons_check, _SIMPSONS_ORACLE),
-}
-QUERIES = {**_R8G_QUERIES, **QUERIES}
+})
 
 
 # ---------------------------------------------------------------------------
@@ -14032,13 +13777,12 @@ FROM agg, tx, ty
 """
 
 
-_R9A_QUERIES = {
+QUERIES.update({
     "anova_oneway": QueryDef(q_anova_oneway, _ANOVA_ORACLE),
     "welch_ttest": QueryDef(q_welch_ttest, _WELCH_ORACLE),
     "mcnemar_test": QueryDef(q_mcnemar_test, _MCNEMAR_ORACLE),
     "kendall_tau_daily": QueryDef(q_kendall_tau_daily, _KENDALL_ORACLE),
-}
-QUERIES = {**_R9A_QUERIES, **QUERIES}
+})
 
 
 def q_nelson_aalen(spark, sf_dir):
@@ -14271,7 +14015,7 @@ h{it} AS MATERIALIZED (
     )
 
 
-_R9B_QUERIES = {
+QUERIES.update({
     "nelson_aalen": QueryDef(q_nelson_aalen, _NELSON_AALEN_ORACLE),
     "forecast_accuracy": QueryDef(
         q_forecast_accuracy, _FORECAST_ACC_ORACLE
@@ -14279,8 +14023,7 @@ _R9B_QUERIES = {
     "retrieval_ql_jm": QueryDef(q_ql_jelinek_mercer, _QL_JM_ORACLE),
     "target_encoding": QueryDef(q_target_encoding, _TARGET_ENC_ORACLE),
     "hits_custsupp": QueryDef(q_hits_custsupp, _hits_oracle()),
-}
-QUERIES = {**_R9B_QUERIES, **QUERIES}
+})
 
 
 def q_brown_forsythe(spark, sf_dir):
@@ -14490,13 +14233,12 @@ def _bmp_oracle() -> str:
     )
 
 
-_R9C_QUERIES = {
+QUERIES.update({
     "brown_forsythe": QueryDef(q_brown_forsythe, _BROWN_FORSYTHE_ORACLE),
     "ece_calibration": QueryDef(q_ece_calibration, _ECE_ORACLE),
     "borda_fusion": QueryDef(q_borda_fusion, _borda_fusion_oracle()),
     "multimodal_bmp": QueryDef(q_multimodal_bmp, _bmp_oracle()),
-}
-QUERIES = {**_R9C_QUERIES, **QUERIES}
+})
 
 
 def q_cohens_d(spark, sf_dir):
@@ -14632,11 +14374,10 @@ FROM ov
 """
 
 
-_R9D_QUERIES = {
+QUERIES.update({
     "cohens_d": QueryDef(q_cohens_d, _COHENS_D_ORACLE),
     "rank_overlap_rbo": QueryDef(q_rank_overlap_rbo, _rbo_oracle()),
-}
-QUERIES = {**_R9D_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -14773,12 +14514,11 @@ FROM hits CROSS JOIN ne
 """
 
 
-_R10_QUERIES = {
+QUERIES.update({
     "ann_recall_audit": QueryDef(
         q_ann_recall_audit, _ann_recall_audit_oracle()
     ),
-}
-QUERIES = {**_R10_QUERIES, **QUERIES}
+})
 
 
 def q_bpe_learn_merges(spark, sf_dir):
@@ -14846,10 +14586,9 @@ s{r1} AS MATERIALIZED (
     return body + "\n" + tail
 
 
-_R10B_QUERIES = {
+QUERIES.update({
     "bpe_learn_merges": QueryDef(q_bpe_learn_merges, _bpe_learn_oracle()),
-}
-QUERIES = {**_R10B_QUERIES, **QUERIES}
+})
 
 
 def q_wilcoxon_signed_rank(spark, sf_dir):
@@ -14902,12 +14641,11 @@ FROM agg
 """
 
 
-_R10C_QUERIES = {
+QUERIES.update({
     "wilcoxon_signed_rank": QueryDef(
         q_wilcoxon_signed_rank, _WILCOXON_ORACLE
     ),
-}
-QUERIES = {**_R10C_QUERIES, **QUERIES}
+})
 
 
 def q_ngram_novelty(spark, sf_dir):
@@ -14957,10 +14695,9 @@ FROM c
 """
 
 
-_R10D_QUERIES = {
+QUERIES.update({
     "ngram_novelty": QueryDef(q_ngram_novelty, _NGRAM_NOVELTY_ORACLE),
-}
-QUERIES = {**_R10D_QUERIES, **QUERIES}
+})
 
 
 def q_readability(spark, sf_dir):
@@ -14999,10 +14736,9 @@ FROM m
 """
 
 
-_R10E_QUERIES = {
+QUERIES.update({
     "readability": QueryDef(q_readability, _READABILITY_ORACLE),
-}
-QUERIES = {**_R10E_QUERIES, **QUERIES}
+})
 
 
 def q_hill_tail_index(spark, sf_dir):
@@ -15042,10 +14778,9 @@ FROM h
 """
 
 
-_R10F_QUERIES = {
+QUERIES.update({
     "hill_tail_index": QueryDef(q_hill_tail_index, _HILL_ORACLE),
-}
-QUERIES = {**_R10F_QUERIES, **QUERIES}
+})
 
 
 def q_ppr_custsupp(spark, sf_dir):
@@ -15107,10 +14842,9 @@ r{it} AS (
     return body + "\nSELECT node, round(rank, 9) AS rank FROM r3"
 
 
-_R10G_QUERIES = {
+QUERIES.update({
     "ppr_custsupp": QueryDef(q_ppr_custsupp, _ppr_oracle()),
-}
-QUERIES = {**_R10G_QUERIES, **QUERIES}
+})
 
 
 def q_hhi_supplier_nation(spark, sf_dir):
@@ -15156,12 +14890,11 @@ FROM per
 """
 
 
-_R10H_QUERIES = {
+QUERIES.update({
     "hhi_supplier_nation": QueryDef(
         q_hhi_supplier_nation, _HHI_ORACLE
     ),
-}
-QUERIES = {**_R10H_QUERIES, **QUERIES}
+})
 
 
 def q_aalen_johansen(spark, sf_dir):
@@ -15232,10 +14965,9 @@ FROM aj
 """
 
 
-_R10I_QUERIES = {
+QUERIES.update({
     "aalen_johansen": QueryDef(q_aalen_johansen, _AJ_ORACLE),
-}
-QUERIES = {**_R10I_QUERIES, **QUERIES}
+})
 
 
 def q_quantile_pinball(spark, sf_dir):
@@ -15279,10 +15011,9 @@ FROM loss
 """
 
 
-_R10J_QUERIES = {
+QUERIES.update({
     "quantile_pinball": QueryDef(q_quantile_pinball, _PINBALL_ORACLE),
-}
-QUERIES = {**_R10J_QUERIES, **QUERIES}
+})
 
 
 def q_sprt_purchase(spark, sf_dir):
@@ -15328,10 +15059,9 @@ FROM l
 """
 
 
-_R10K_QUERIES = {
+QUERIES.update({
     "sprt_purchase": QueryDef(q_sprt_purchase, _sprt_oracle()),
-}
-QUERIES = {**_R10K_QUERIES, **QUERIES}
+})
 
 
 def q_capture_recapture(spark, sf_dir):
@@ -15454,14 +15184,13 @@ FROM spans JOIN wins ON lo <= whi AND wlo <= hi
 """
 
 
-_R10L_QUERIES = {
+QUERIES.update({
     "capture_recapture": QueryDef(q_capture_recapture, _CAPTURE_ORACLE),
     "good_turing": QueryDef(q_good_turing, _GOOD_TURING_ORACLE),
     "interval_join_windows": QueryDef(
         q_interval_join_windows, _INTERVAL_JOIN_ORACLE
     ),
-}
-QUERIES = {**_R10L_QUERIES, **QUERIES}
+})
 
 
 # ----------------------------------------------------------------------
@@ -15763,14 +15492,13 @@ FROM rk CROSS JOIN ks ORDER BY rank
 """
 
 
-_R11A_QUERIES = {
+QUERIES.update({
     "kn_continuation": QueryDef(q_kn_continuation, _KN_CONTINUATION_ORACLE),
     "retrieval_map": QueryDef(q_retrieval_map, _RETRIEVAL_MAP_ORACLE),
     "graph_modularity": QueryDef(q_graph_modularity, _modularity_oracle()),
     "conformal_interval": QueryDef(q_conformal_interval, _CONFORMAL_ORACLE),
     "bh_fdr_signtest": QueryDef(q_bh_fdr_signtest, _BH_SIGNTEST_ORACLE),
-}
-QUERIES = {**_R11A_QUERIES, **QUERIES}
+})
 
 
 def q_hilbert_cells(spark, sf_dir):
@@ -15822,10 +15550,9 @@ def _hilbert_oracle() -> str:
     )
 
 
-_R11B_QUERIES = {
+QUERIES.update({
     "hilbert_cells": QueryDef(q_hilbert_cells, _hilbert_oracle()),
-}
-QUERIES = {**_R11B_QUERIES, **QUERIES}
+})
 
 
 def q_graph_assortativity(spark, sf_dir):
@@ -15970,14 +15697,13 @@ ORDER BY day_index
 """
 
 
-_R11C_QUERIES = {
+QUERIES.update({
     "graph_assortativity": QueryDef(
         q_graph_assortativity, _ASSORTATIVITY_ORACLE
     ),
     "kmv_users_setops": QueryDef(q_kmv_users_setops, _KMV_SETOPS_ORACLE),
     "croston_purchases": QueryDef(q_croston_purchases, _croston_oracle()),
-}
-QUERIES = {**_R11C_QUERIES, **QUERIES}
+})
 
 
 def q_gains_acctbal(spark, sf_dir):
@@ -16087,10 +15813,21 @@ FROM c CROSS JOIN t GROUP BY t.ta, t.tb
 """
 
 
-_R11D_QUERIES = {
+QUERIES.update({
     "gains_acctbal": QueryDef(q_gains_acctbal, _GAINS_ORACLE),
     "wasserstein_value_drift": QueryDef(
         q_wasserstein_value_drift, _WASSERSTEIN_ORACLE
     ),
-}
-QUERIES = {**_R11D_QUERIES, **QUERIES}
+})
+
+
+def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: qd.spark for name, qd in sorted(QUERIES.items())}
+
+
+def oracle_queries() -> dict[str, str]:
+    return {
+        name: qd.oracle
+        for name, qd in sorted(QUERIES.items())
+        if qd.oracle is not None
+    }

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -862,3 +863,33 @@ class TestStreamingRedelivery:
         idx = IndexByEventTypeStore(spark, lay)
         assert idx.count("type-s") == 1 and idx.count("type-t") == 1
         assert MessageCounter(spark, lay).get_count("type-t") == 1
+
+    def test_retry_writes_counters_from_the_checkpoint_alone(
+        self, spark, tmp_path
+    ):
+        """The retry path stages the index survivors once, as an eager
+        local checkpoint: while the counter deltas are written, no
+        cached columnar copy of that checkpoint (a ``Scan ExistingRDD``
+        relation) sits beside it."""
+        lay, store = self._store(spark, tmp_path / "wh4")
+        b = self._batch(spark, [
+            (AID1, 1, 0, T0, _payload("a")),
+            (AID2, 1, 0, T0 + HOUR, _payload("c", "type-t")),
+        ])
+        write_counter_deltas = lay.write_counter_deltas
+        cached = []
+
+        def spy(*args, **kwargs):
+            sc = spark.sparkContext._jsc.sc()
+            cached.append([i.name() for i in sc.getRDDStorageInfo()])
+            return write_counter_deltas(*args, **kwargs)
+
+        lay.write_counter_deltas = spy
+        spark.catalog.clearCache()
+        store._append_rows(b, maintain_index=True, anti_join_existing=True)
+        assert len(cached) == 1
+        scans = [n for n in cached[0]
+                 if re.match(r"(\*\(\d+\) )?Scan ExistingRDD", n)]
+        assert not scans, scans
+        assert store.events_df().count() == 2
+        assert IndexByEventTypeStore(spark, lay).count("type-t") == 1
